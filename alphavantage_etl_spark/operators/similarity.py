@@ -19,7 +19,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity, dot, l2_norm, sql_array_lit
+from ..functions.rounding import away_round
+from ..functions.vectors import (
+    cosine_similarity,
+    dot,
+    inline_rows_df,
+    l2_norm,
+    sql_array_lit,
+)
 
 
 def cosine_topk(
@@ -826,41 +833,78 @@ def _annotate_cells(
     )
 
 
+# The widest dimensionality the WIDE exact k-means plan serves: its
+# update aggregate is ``dim`` sum columns and its centroid matrix an
+# ``n_cells x dim`` plan literal, so the PLAN grows with dim. Fits past
+# it take the narrow form (:func:`_lloyd_iterate_narrow`); quantizers
+# (cents6) and PQ subspaces that serving scores as literals must stay
+# within it.
+_WIDE_MAX_DIM = 256
+
+
+def _kmeans_init(
+    frame: DataFrame, k: int, who: str, what: str
+) -> list[list[int]]:
+    """The exact k-means init: the ``__q6`` of the ``k`` rows with the
+    smallest ``(__id, __q6)`` (trivially replayed in SQL; the vector
+    breaks duplicate-id ties so init stays deterministic even with
+    duplicate ids). Fewer than ``k`` rows raise."""
+    rows = frame.orderBy("__id", "__q6").limit(k).collect()
+    if len(rows) < k:
+        raise ValueError(f"{who}: {len(rows)} usable vectors < {what}={k}")
+    return [list(r["__q6"]) for r in rows]
+
+
+def _cell_sums(assigned: DataFrame, dim: int) -> DataFrame:
+    """The WIDE cell-sum aggregate of ``(__q6, __cell)`` rows: one
+    ``(cell, n, sums)`` row per non-empty cell with ``sums[d]`` the
+    exact integer component sum — ``dim`` explicit sum columns, one
+    map-side-combinable groupBy. The per-iteration update of
+    :func:`_lloyd_iterate` and the mergeable :func:`kmeans_state`."""
+    return (
+        assigned.groupBy("__cell")
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[
+                F.sum(F.element_at(F.col("__q6"), i + 1)).alias(f"__s{i}")
+                for i in range(dim)
+            ],
+        )
+        .select(
+            F.col("__cell").cast("int").alias("cell"),
+            F.col("__n").cast("long").alias("n"),
+            F.array(*[F.col(f"__s{i}") for i in range(dim)]).alias("sums"),
+        )
+    )
+
+
+def _refit(cents: list[list[int]], stats) -> list[list[int]]:
+    """The exact Lloyd refit: each ``(cell, n, sums)`` with ``n > 0``
+    moves to its mean re-quantized with away-from-zero rounding (the
+    Spark/DuckDB ``round(double)`` rule); every other cell keeps its
+    centroid."""
+    new = [list(c) for c in cents]
+    for c, n, sums in stats:
+        if n > 0:
+            new[c] = [away_round(int(s) / n) for s in sums]
+    return new
+
+
 def _lloyd_iterate(
     base: DataFrame, cents: list[list[int]], iters: int, dim: int
 ) -> list[list[int]]:
-    """``iters`` rounds of the exact quantized Lloyd update over a
-    pre-quantized ``__q6`` frame — the shared training loop of
-    :func:`kmeans_fit_quantized` and :func:`split_hot_cells`' per-cell
-    sub-fits. Each round: ONE narrow scan with the centroid matrix as
-    a single nested literal, one map-side-combinable groupBy on the
-    argmin cell, an O(|cents|) collect; empty cells carry their
-    previous centroid; means re-quantize with away-from-zero rounding
-    (the Spark/DuckDB ``round(double)`` rule)."""
-    from ..functions.rounding import away_round
-
+    """``iters`` rounds of the WIDE exact quantized Lloyd update over a
+    pre-quantized ``__q6`` frame — the update form of
+    :func:`_exact_kmeans` up to ``_WIDE_MAX_DIM``. Each round: ONE
+    narrow scan with the centroid matrix as a single nested literal, the
+    :func:`_cell_sums` aggregate on the argmin cell, an O(|cents|)
+    collect and the :func:`_refit`."""
     for _ in range(iters):
         best = F.array_min(_l2q_scored(F.col("__q6"), cents))
-        sums = (
-            base.select("__q6", best["cell"].alias("__cell"))
-            .groupBy("__cell")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[
-                    F.sum(F.element_at(F.col("__q6"), i + 1)).alias(f"__s{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        new = {
-            int(r["__cell"]): [
-                away_round(int(r[f"__s{i}"]) / int(r["__n"]))
-                for i in range(dim)
-            ]
-            for r in sums
-        }
-        cents = [new.get(c, cents[c]) for c in range(len(cents))]
+        rows = _cell_sums(
+            base.select("__q6", best["cell"].alias("__cell")), dim
+        ).collect()
+        cents = _refit(cents, rows)
     return cents
 
 
@@ -871,7 +915,7 @@ def _cents6_frame(spark, cents6: list[list[int]]) -> DataFrame:
     BroadcastNestedLoopJoin straight from stats (no hint — the engine's
     no-forced-broadcast rule), so the matrix reaches every task without
     entering the PLAN as a literal: plan width stays constant at any
-    dimensionality, which is the entire point past ``max_dim``."""
+    dimensionality, which is the entire point past ``_WIDE_MAX_DIM``."""
     # range(1)+literal, not createDataFrame (r14): the pickled-RDD local
     # relation launches a Python worker inside every stage that scans it
     # — once per Lloyd iteration in the narrow fit
@@ -957,29 +1001,63 @@ def _lloyd_iterate_narrow(
     the stage but partial aggregation combines them before the
     exchange, so shuffle traffic is O(partitions × cells × dim) and the
     collect O(cells × dim) model state. The wide form beats this at
-    coarse dims (no explode, one row per cell); past ``max_dim`` the
-    wide PLAN (dim aggregate columns, cells×dim literals) stops
+    coarse dims (no explode, one row per cell); past ``_WIDE_MAX_DIM``
+    the wide PLAN (dim aggregate columns, cells×dim literals) stops
     compiling sanely and this form is the scale path."""
-    from ..functions.rounding import away_round
-
     for _ in range(iters):
-        rows = _narrow_update_agg(base, cents).collect()
-        by_cell: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in rows:
-            by_cell.setdefault(int(r["__cell"]), {})[int(r["__d"])] = (
-                int(r["__s"]),
-                int(r["__n"]),
-            )
-        cents = [
-            [
-                away_round(by_cell[c][d][0] / by_cell[c][d][1])
-                for d in range(dim)
-            ]
-            if c in by_cell
-            else cents[c]
-            for c in range(len(cents))
-        ]
+        n: dict[int, int] = {}
+        sums: dict[int, list[int]] = {}
+        for r in _narrow_update_agg(base, cents).collect():
+            c = int(r["__cell"])
+            n[c] = int(r["__n"])
+            sums.setdefault(c, [0] * dim)[int(r["__d"])] = int(r["__s"])
+        cents = _refit(cents, ((c, n[c], sums[c]) for c in n))
     return cents
+
+
+def _exact_kmeans(
+    base: DataFrame,
+    cents: list[list[int]],
+    iters: int,
+    dim: int,
+) -> list[tuple[int, int, int, int, int]]:
+    """The exact quantized k-means trainer of the oracle-checkable fits
+    (:func:`kmeans_fit_quantized`, each :func:`pq_fit_exact` subspace):
+    ``iters`` Lloyd rounds over ``base``'s ``__q6`` from the
+    :func:`_kmeans_init` centroids ``cents`` — :func:`_lloyd_iterate`
+    up to ``_WIDE_MAX_DIM``, :func:`_lloyd_iterate_narrow` past it —
+    then ONE final-assignment aggregate for each cell's ``n_members``
+    and ``inertia`` (the exact integer sum of members' squared L2
+    distances; 0 for an empty cell). Returns one ``(cell, dim, c6,
+    n_members, inertia)`` row per centroid component.
+    :func:`split_hot_cells`' sub-fits run the same init and wide loop
+    without the stats (its cells are within ``_WIDE_MAX_DIM``)."""
+    narrow = dim > _WIDE_MAX_DIM
+    cents = (_lloyd_iterate_narrow if narrow else _lloyd_iterate)(
+        base, cents, iters, dim
+    )
+    if narrow:
+        best = F.array_min(
+            _l2q_scored_attr(F.col("__q6"), F.col("__cents"))
+        )
+        scored = base.crossJoin(_cents6_frame(base.sparkSession, cents))
+    else:
+        best = F.array_min(_l2q_scored(F.col("__q6"), cents))
+        scored = base
+    final = {
+        int(r["__cell"]): (int(r["__n"]), int(r["__inertia"]))
+        for r in scored.select(
+            best["cell"].alias("__cell"), best["d2"].alias("__d2")
+        )
+        .groupBy("__cell")
+        .agg(F.count(F.lit(1)).alias("__n"), F.sum("__d2").alias("__inertia"))
+        .collect()
+    }
+    return [
+        (c, d, v, *final.get(c, (0, 0)))
+        for c, cent in enumerate(cents)
+        for d, v in enumerate(cent)
+    ]
 
 
 def _fit_sample(
@@ -1022,7 +1100,6 @@ def kmeans_fit_quantized(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int | None = None,
-    max_dim: int = 256,
     sample_cap: int | None = None,
     sample_salt: str = "fit",
 ) -> DataFrame:
@@ -1074,24 +1151,24 @@ def kmeans_fit_quantized(
     O(n_cells) collect — the approved O(model)-state class. Corpus is
     never shuffled except by the dim+2-column cell aggregation.
 
-    DIMENSIONALITY ROUTING (``max_dim``, a real keyword since r13):
-    the WIDE form's per-iteration aggregate is ``dim`` explicit sum
-    columns and its centroid state an ``n_cells x dim`` nested
+    DIMENSIONALITY ROUTING (the module constant ``_WIDE_MAX_DIM``,
+    256): the WIDE form's per-iteration aggregate is ``dim`` explicit
+    sum columns and its centroid state an ``n_cells x dim`` nested
     literal, so that PLAN — not the data — grows with dim x iters;
     PERF.md measures the fixture fit as plan/codegen-dominated
     already at dim=64. Fine for coarse-quantizer dims, wrong at
     production 1024-4096-dim embeddings (4k-column aggregates,
-    32k-literal matrices). Past ``max_dim`` (default 256) the fit
+    32k-literal matrices). Past ``_WIDE_MAX_DIM`` the fit
     TRANSPARENTLY switches to the NARROW form
     (:func:`_lloyd_iterate_narrow`): centroid matrix joined from a
     one-row frame instead of a literal, update via a posexplode
     ``(cell, dim_idx)`` groupBy instead of dim sum columns —
     constant plan width, bit-identical results (exact integer
     arithmetic either way; property-pinned). The wide form stays
-    the default below the ceiling because it avoids the ×dim
-    in-stage explode. The PQ alternative (:func:`train_pq_codebooks`
-    — m independent <=64-dim subspace fits) remains the right call
-    when the DOWNSTREAM index is PQ; this path is for a single
+    the choice below the ceiling because it avoids the ×dim
+    in-stage explode. The PQ alternative (:func:`pq_fit_exact` — m
+    independent subspace fits within the ceiling) remains the right
+    call when the DOWNSTREAM index is PQ; this path is for a single
     full-dim coarse quantizer.
 
     BOUNDED-SAMPLE TRAINING (``sample_cap``, r14; r13 verdict missing
@@ -1115,8 +1192,6 @@ def kmeans_fit_quantized(
         raise ValueError(f"n_cells must be >= 1, got {n_cells}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    if max_dim < 1:
-        raise ValueError(f"max_dim must be >= 1, got {max_dim}")
     q6 = _u6_quantized(vec_col)
     usable = (
         df.where(F.col(vec_col).isNotNull())
@@ -1141,21 +1216,10 @@ def kmeans_fit_quantized(
         # checkpoint the sample so the corpus-wide top-k pass runs ONCE
         # (init selection and the iteration base both read it)
         usable = _fit_sample(usable, sample_cap, sample_salt).localCheckpoint()
-    # the quantized vector breaks id ties so init stays deterministic
-    # even with duplicate ids (the ORACLE assumes unique ids — the
-    # contract fixture's vec_id — but the operator should not)
-    init_rows = usable.orderBy("__id", "__q6").limit(n_cells).collect()
-    if len(init_rows) < n_cells:
-        raise ValueError(
-            f"kmeans_fit_quantized: {len(init_rows)} usable vectors < "
-            f"n_cells={n_cells}"
-        )
+    cents = _kmeans_init(usable, n_cells, "kmeans_fit_quantized", "n_cells")
     if dim is None:
-        dim = len(init_rows[0]["__q6"])
-    cents: list[list[int]] = [
-        list(r["__q6"]) for r in init_rows if len(r["__q6"]) == dim
-    ]
-    if len(cents) < n_cells:
+        dim = len(cents[0])
+    if any(len(c) != dim for c in cents):
         raise ValueError(
             "kmeans_fit_quantized: init vectors disagree on dimensionality"
         )
@@ -1174,53 +1238,10 @@ def kmeans_fit_quantized(
         .localCheckpoint()
     )
 
-    if dim > max_dim:
-        cents = _lloyd_iterate_narrow(base, cents, iters, dim)
-        best = F.array_min(
-            _l2q_scored_attr(F.col("__q6"), F.col("__cents"))
-        )
-        assigned = base.crossJoin(
-            _cents6_frame(df.sparkSession, cents)
-        ).select(
-            best["cell"].alias("__cell"), best["d2"].alias("__d2")
-        )
-    else:
-        cents = _lloyd_iterate(base, cents, iters, dim)
-        best = F.array_min(_l2q_scored(F.col("__q6"), cents))
-        assigned = base.select(
-            best["cell"].alias("__cell"), best["d2"].alias("__d2")
-        )
-
-    final = {
-        int(r["__cell"]): (int(r["__n"]), int(r["__inertia"]))
-        for r in assigned.groupBy("__cell")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__d2").alias("__inertia"),
-        )
-        .collect()
-    }
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("c6", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("inertia", T.LongType()),
-        ]
-    )
-    rows = [
-        (c, d, cents[c][d], final.get(c, (0, 0))[0], final.get(c, (0, 0))[1])
-        for c in range(n_cells)
-        for d in range(dim)
-    ]
+    rows = _exact_kmeans(base, cents, iters, dim)
     # JVM inline table, not createDataFrame: a pickled-RDD-backed result
     # frame pays a Python worker launch on EVERY downstream action
     # (inline_rows_df rationale, r14)
-    from ..functions.vectors import inline_rows_df
-
     return inline_rows_df(
         df.sparkSession,
         rows,
@@ -1263,11 +1284,11 @@ def pq_fit_exact(
 
     ``dim`` is REQUIRED (PQ is a production path with a declared
     schema; the ragged-row prefilter rule needs it) and must divide by
-    ``m``. ``dim/m`` must stay within the wide plan ceiling (256) —
-    that is PQ's whole point: a 4096-dim embedding fits as m=16
-    subspaces of 256, each a constant-size plan. A d_sub above the
-    ceiling means ``m`` is misconfigured, so it raises rather than
-    silently degrading.
+    ``m``. ``dim/m`` must stay within the wide plan ceiling
+    (``_WIDE_MAX_DIM``, 256) — that is PQ's whole point: a 4096-dim
+    embedding fits as m=16 subspaces of 256, each a constant-size
+    plan. A d_sub above the ceiling means ``m`` is misconfigured, so it
+    raises rather than silently degrading.
 
     Scale: the corpus quantizes ONCE (localCheckpointed, shared by all
     m fits); each subspace iteration is one narrow scan of the sliced
@@ -1312,10 +1333,11 @@ def pq_fit_exact(
     if dim % m:
         raise ValueError(f"pq_fit_exact: dim={dim} not divisible by m={m}")
     d_sub = dim // m
-    if d_sub > 256:
+    if d_sub > _WIDE_MAX_DIM:
         raise ValueError(
             f"pq_fit_exact: d_sub={d_sub} exceeds the wide-plan ceiling "
-            "256 — raise m (PQ exists precisely to keep subspaces small)"
+            f"{_WIDE_MAX_DIM} — raise m (PQ exists precisely to keep "
+            "subspaces small)"
         )
     base = _q6_base(df, dim, vec_col, id_col)
     if sample_cap is not None:
@@ -1332,72 +1354,31 @@ def pq_fit_exact(
             )
         base = _residual_q6(base, residual_cents6).select("__id", "__q6")
     base = base.localCheckpoint()
-    from pyspark.sql import types as T
 
-    out_schema = T.StructType(
-        [
-            T.StructField("subspace", T.IntegerType()),
-            T.StructField("code", T.IntegerType()),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("c6", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("inertia", T.LongType()),
-        ]
-    )
     def fit_subspace(s: int):
         sub = base.select(
             "__id", F.slice("__q6", s * d_sub + 1, d_sub).alias("__q6")
         )
-        init_rows = sub.orderBy("__id", "__q6").limit(codes).collect()
-        if len(init_rows) < codes:
-            raise ValueError(
-                f"pq_fit_exact: {len(init_rows)} usable vectors < "
-                f"codes={codes}"
-            )
-        cents = _lloyd_iterate(
-            sub, [list(r["__q6"]) for r in init_rows], iters, d_sub
-        )
-        best = F.array_min(_l2q_scored(F.col("__q6"), cents))
-        final = {
-            int(r["__code"]): (int(r["__n"]), int(r["__inertia"]))
-            for r in sub.select(
-                best["cell"].alias("__code"), best["d2"].alias("__d2")
-            )
-            .groupBy("__code")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.sum("__d2").alias("__inertia"),
-            )
-            .collect()
-        }
-        return cents, final
+        cents = _kmeans_init(sub, codes, "pq_fit_exact", "codes")
+        return _exact_kmeans(sub, cents, iters, d_sub)
 
     # the m fits are INDEPENDENT (disjoint slices of one checkpointed
     # frame), so they submit from concurrent driver threads and the
     # scheduler interleaves their tiny jobs — each fit is collect-
     # latency-bound (iters+2 sequential O(model) round trips), so this
     # cuts wall ~m-fold without changing a single computed value
-    # (results keyed by subspace index, assembled in order)
+    # (results keyed by subspace index, assembled in order). The
+    # inheritable target carries the caller's job group, other local
+    # properties and job tags onto the pool threads (pinned-thread mode
+    # gives a plain thread none of them).
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
-        fitted = list(pool.map(fit_subspace, range(m)))
-    rows = []
-    for s, (cents, final) in enumerate(fitted):
-        rows.extend(
-            (
-                s,
-                c,
-                d,
-                cents[c][d],
-                final.get(c, (0, 0))[0],
-                final.get(c, (0, 0))[1],
-            )
-            for c in range(codes)
-            for d in range(d_sub)
-        )
-    from ..functions.vectors import inline_rows_df
+    from pyspark.util import inheritable_thread_target
 
+    fit = inheritable_thread_target(df.sparkSession)(fit_subspace)
+    with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
+        fitted = pool.map(fit, range(m))
+        rows = [(s, *r) for s, sub_rows in enumerate(fitted) for r in sub_rows]
     return inline_rows_df(
         df.sparkSession,
         rows,
@@ -2526,8 +2507,6 @@ def save_bq_index(
     spark = index_df.sparkSession
     index_df.write.mode("overwrite").parquet(f"{path}/assignments")
     # JVM inline tables (r14) — see save_ivf_index
-    from ..functions.vectors import inline_rows_df
-
     spark.range(1).select(
         F.posexplode(
             sql_array_lit([[int(x) for x in c] for c in cents6])
@@ -2681,10 +2660,11 @@ def _validate_cents6(cents6: list[list[int]], who: str) -> int:
     dim = len(cents6[0])
     if any(len(c) != dim for c in cents6):
         raise ValueError(f"{who}: cents6 rows disagree on dimensionality")
-    if dim > 256:
+    if dim > _WIDE_MAX_DIM:
         raise ValueError(
-            f"{who}: dim={dim} exceeds the plan-size ceiling 256 "
-            "(the kmeans_fit_quantized wide-agg/literal-matrix bound)"
+            f"{who}: dim={dim} exceeds the plan-size ceiling "
+            f"{_WIDE_MAX_DIM} (the kmeans_fit_quantized "
+            "wide-agg/literal-matrix bound)"
         )
     return dim
 
@@ -2708,12 +2688,12 @@ def split_hot_cells(
     mean (``n * n_cells > hot_factor * total`` — one IEEE multiply per
     side, SQL-replayable); the ``max_splits`` hottest (ties to the
     lowest cell id) each get a ``sub_cells``-way exact quantized
-    k-means sub-fit (:func:`_lloyd_iterate`; min-id init among members
-    — the :func:`kmeans_fit_quantized` rule). Sub-centroid 0 REUSES the
-    hot cell's id (its members' cell stays valid where they re-assign
-    to it — the majority), sub-centroid ``j>0`` takes the next fresh id
-    ``len(cents6) + ...``; a hot cell with fewer than ``sub_cells``
-    members is skipped (nothing to split).
+    k-means sub-fit (:func:`_kmeans_init` and :func:`_lloyd_iterate`,
+    the :func:`kmeans_fit_quantized` init and update). Sub-centroid 0
+    REUSES the hot cell's id (its members' cell stays valid where they
+    re-assign to it — the majority), sub-centroid ``j>0`` takes the
+    next fresh id ``len(cents6) + ...``; a hot cell with fewer than
+    ``sub_cells`` members is skipped (nothing to split).
 
     Returns ``(new_cents6, delta)`` where ``delta`` holds ONLY the rows
     that MOVED: ``(id_col, old_cell, new_cell, d2_new)`` with
@@ -2763,13 +2743,11 @@ def split_hot_cells(
     next_id = n_cells
     deltas: list[DataFrame] = []
     for h in hot:
-        members = base.where(F.col("__cell") == h)
-        init_rows = members.orderBy("__id", "__q6").limit(sub_cells).collect()
-        if len(init_rows) < sub_cells:
+        if counts[h] < sub_cells:
             continue
-        sub = _lloyd_iterate(
-            members, [list(r["__q6"]) for r in init_rows], iters, dim
-        )
+        members = base.where(F.col("__cell") == h)
+        init = _kmeans_init(members, sub_cells, "split_hot_cells", "sub_cells")
+        sub = _lloyd_iterate(members, init, iters, dim)
         best_sub = F.array_min(_l2q_scored(F.col("__q6"), sub))
         first_new = next_id
         deltas.append(
@@ -2854,22 +2832,11 @@ def kmeans_state(
     state."""
     dim = _validate_cents6(cents6, "kmeans_state")
     best = F.array_min(_l2q_scored(F.col("__q6"), cents6))
-    return (
-        _q6_base(df, dim, vec_col, id_col)
-        .select("__q6", best["cell"].alias("__cell"))
-        .groupBy("__cell")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(F.element_at(F.col("__q6"), i + 1)).alias(f"__s{i}")
-                for i in range(dim)
-            ],
-        )
-        .select(
-            F.col("__cell").cast("int").alias("cell"),
-            F.col("__n").cast("long").alias("n"),
-            F.array(*[F.col(f"__s{i}") for i in range(dim)]).alias("sums"),
-        )
+    return _cell_sums(
+        _q6_base(df, dim, vec_col, id_col).select(
+            "__q6", best["cell"].alias("__cell")
+        ),
+        dim,
     )
 
 
@@ -2913,24 +2880,19 @@ def kmeans_refit(
     (pinned by oracle), at the cost of one batch scan instead of a
     corpus rescan."""
     dim = _validate_cents6(cents6, "kmeans_refit")
-    from ..functions.rounding import away_round
-
-    new = [list(c) for c in cents6]
-    n_by_cell: dict[int, int] = {}
-    for r in state_df.collect():
-        c, n = int(r["cell"]), int(r["n"])
+    stats = [
+        (int(r["cell"]), int(r["n"]), r["sums"]) for r in state_df.collect()
+    ]
+    for c, _, sums in stats:
         if not 0 <= c < len(cents6):
             raise ValueError(
                 f"kmeans_refit: state cell {c} outside cents6 range"
             )
-        if len(r["sums"]) != dim:
+        if len(sums) != dim:
             raise ValueError(
-                f"kmeans_refit: state sums dim {len(r['sums'])} != {dim}"
+                f"kmeans_refit: state sums dim {len(sums)} != {dim}"
             )
-        n_by_cell[c] = n
-        if n > 0:
-            new[c] = [away_round(int(s) / n) for s in r["sums"]]
-    return new, n_by_cell
+    return _refit(cents6, stats), {c: n for c, n, _ in stats}
 
 
 def psi_gated_refit(
@@ -3898,8 +3860,6 @@ def kcenter_coreset(
         ).localCheckpoint(eager=True)
         prev.unpersist()
     state.unpersist()
-    from ..functions.vectors import inline_rows_df
-
     return inline_rows_df(
         df.sparkSession,
         chosen,

@@ -7,6 +7,11 @@ strict local oracle gate (tests/oracle.py — the driver-replica multiset
 compare, exact to float bits) for a named query list at ALL THREE
 testdata scale factors and writes one JSON artifact per invocation.
 
+The session is a vanilla ``SparkSession`` (not ``session.get_spark``), so
+no conf from ``session.py`` can mask a query bug. It uses
+``SPARK_GRAFT_CPUS`` cores and as many shuffle partitions, falling back
+to the core count ``nproc`` reports.
+
 Usage:
     python scripts/oracle_3sf_check.py OUT.json q_a q_b ...
 """
@@ -14,6 +19,7 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -32,9 +38,12 @@ def main() -> None:
     from alphavantage_etl_spark.queries import ALL_ORACLES, ALL_QUERIES
     from tests.oracle import assert_matches_oracle
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", "16g")
         .appName("oracle-3sf-artifact")
         .getOrCreate()

@@ -344,7 +344,6 @@ def test_discretize_bins_are_equi_depth(spark, vals, nbins):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_kaplan_meier_monotone_and_bounded(spark, subj):
     """Survival is a non-increasing step function in [0, 1]."""
     from alphavantage_etl_spark.operators.survival import kaplan_meier
@@ -373,7 +372,6 @@ def test_kaplan_meier_monotone_and_bounded(spark, subj):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_pagerank_mass_conserved(spark, edges):
     """Total rank stays 1 (up to quantization) on any digraph, dangling
     nodes included."""
@@ -468,7 +466,6 @@ def test_rolling_median_bounded_by_window_extremes(spark, vals, k):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_attribution_conservation_laws(spark, events):
     """Linear credit sums to the number of attributable journeys; first
     and last touch counts each sum to the same journey count."""
@@ -1245,21 +1242,25 @@ def test_kmeans_state_merge_associative_and_exact(spark, vecs, splits):
 @pytest.mark.slow
 def test_kmeans_fit_narrow_equals_wide_generated(spark, vecs, iters):
     """X154 contract across generated corpora: the narrow posexplode
-    fit path (forced via max_dim below the true dim) is BIT-IDENTICAL
-    to the wide literal-matrix form — a divergence would be a silent
-    wrong quantizer, not an error, so this is contract-critical."""
+    Lloyd update is BIT-IDENTICAL to the wide literal-matrix update
+    when both run from the same init on one checkpointed base — a
+    divergence would be a silent wrong quantizer, not an error, so this
+    is contract-critical."""
     from alphavantage_etl_spark.operators.similarity import (
-        kmeans_fit_quantized,
+        _kmeans_init,
+        _lloyd_iterate,
+        _lloyd_iterate_narrow,
+        _q6_base,
     )
 
     df = spark.createDataFrame(
         list(enumerate(vecs)), "vec_id long, embedding array<float>"
     )
-    wide = kmeans_fit_quantized(df, n_cells=2, iters=iters, dim=4).collect()
-    narrow = kmeans_fit_quantized(
-        df, n_cells=2, iters=iters, dim=4, max_dim=2
-    ).collect()
-    assert sorted(map(tuple, wide)) == sorted(map(tuple, narrow))
+    base = _q6_base(df, 4, "embedding", "vec_id").localCheckpoint()
+    init = _kmeans_init(base, 2, "test", "n_cells")
+    assert _lloyd_iterate(base, init, iters, 4) == _lloyd_iterate_narrow(
+        base, init, iters, 4
+    )
 
 
 @CONTRACT_SETTINGS
