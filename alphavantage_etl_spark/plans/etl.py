@@ -11,8 +11,10 @@ as one idempotent, rerunnable pipeline over parquet sink tables:
    form of ``tail(gap)``, av_etl.py:79), append. The PK constraint
    (av_etl.py:37-38) is designed out: duplicates are impossible by
    construction, so a rerun appends nothing instead of crashing.
-3. **derived refresh**: recompute the converted-price table for the new
-   dates only (av_etl.py:142-195) and append.
+3. **derived refresh**: join the FULL ``src_px_usd``/``src_usd_fx`` sinks
+   into the converted-price table on every run (av_etl.py:142-195); the
+   same key anti-join then appends only the dates the ``prd_px_fx`` sink
+   lacks.
 
 Unlike the reference (tasks exchange state only through Postgres,
 av_etl_dag.py:21-46), the intermediate frames here are lazy DataFrames in
@@ -34,10 +36,9 @@ from typing import TypeVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.rounding import money_round
 from ..operators.incremental import new_rows
 from ..sources.catalog import read_path_if_exists
-from .views import fx_bars, px_bars
+from .views import convert_bars, fx_bars, px_bars
 
 T = TypeVar("T")
 
@@ -114,15 +115,8 @@ def run_etl(
 
     # Derived refresh reads the SINK (not the source frames) — same contract
     # as the reference, where prd_ is computed from the loaded src_ tables.
-    px = _read_sink(spark, sink_dir, SRC_PX).select(
-        "date", F.col("close").alias("close_price_usd")
-    )
-    fx = _read_sink(spark, sink_dir, SRC_FX).select(
-        "date", F.col("close").alias("close_rate")
-    )
-    prd = px.join(fx, "date", "inner").withColumn(
-        "close_price_fx",
-        money_round(F.col("close_price_usd") * F.col("close_rate"), 2),
+    prd = convert_bars(
+        _read_sink(spark, sink_dir, SRC_PX), _read_sink(spark, sink_dir, SRC_FX)
     )
     appended[PRD] = _append_new(spark, sink_dir, PRD, prd, "date")
     return appended

@@ -17,8 +17,11 @@ per-series tick tinting), followed by single-axis small multiples — twin
 y-scales invite false slope comparison, so the multiples and the table stay
 alongside as the honest reading. The engine boundary is explicit:
 
-- everything upstream of ``render_report`` is a lazy Spark plan
-  (``plans.report.report_frames``);
+- ``plans.report.report_frames`` aggregates the price and FX bars once and
+  materializes each with ``localCheckpoint(eager=True)``: one row per date
+  (dates × symbols once a symbol column exists), reclaimed by the
+  ContextCleaner once the frames are dropped. The seven frames it returns
+  are lazy plans over those two bar tables;
 - ``render_report`` is the DRIVER EDGE: it limits each frame to
   ``max_rows`` (the frames are date-DESC, so this is "most recent N" — a
   TakeOrderedAndProject, never a full collect) and calls ``toPandas()``;

@@ -10,7 +10,9 @@ the synthetic star schema:
   because the events table's date domain (2024-01) does not overlap the
   orders domain (1995-2001); a same-key join would be vacuously empty.
 - ``prd_converted`` (prd_spy_price_pln analog): inner join on date +
-  half-even-rounded product (av_etl.py:187-193).
+  half-even-rounded product (av_etl.py:187-193), written once in
+  ``convert_bars`` for every pair of bar frames (fixture bars, the report's
+  materialized bars, the ETL sink tables).
 
 ``src_px_usd``/``src_usd_fx`` expose the same frames under the verbatim
 Alpha Vantage column names ("1. open" ... "5. volume", av_etl.py:76,121) to
@@ -56,24 +58,30 @@ def fx_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("volume")
 
 
-def prd_converted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's derived table (av_etl.py:187-193): rename close
+def convert_bars(px: DataFrame, fx: DataFrame) -> DataFrame:
+    """The reference's derived table (av_etl.py:187-193) over any two bar
+    frames keyed by ``date`` with a ``close`` column: rename the close
     columns, inner join on date (left+dropna ≡ inner, SURVEY.md J1/P7),
     converted price = bround(price * rate, 2).
+
+    Columns: date, close_price_usd, close_rate, close_price_fx.
+    """
+    px = px.select("date", F.col("close").alias("close_price_usd"))
+    fx = fx.select("date", F.col("close").alias("close_rate"))
+    return px.join(fx, "date", "inner").withColumn(
+        "close_price_fx", money_round(F.col("close_price_usd") * F.col("close_rate"), 2)
+    )
+
+
+def prd_converted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``convert_bars`` over the fixtures' price and FX bars.
 
     Scale: both sides are one-row-per-date aggregates of big fact tables —
     the join keys are low-cardinality and sorted; AQE picks broadcast for
     the smaller side. The shuffle happens in the bars aggregation (where it
     is map-side combined), never on the raw fact rows for the join.
     """
-    px = px_bars(spark, sf_dir).select("date", F.col("close").alias("close_price_usd"))
-    fx = fx_bars(spark, sf_dir).select("date", F.col("close").alias("close_rate"))
-    return (
-        px.join(fx, "date", "inner")
-        .withColumn(
-            "close_price_fx", money_round(F.col("close_price_usd") * F.col("close_rate"), 2)
-        )
-    )
+    return convert_bars(px_bars(spark, sf_dir), fx_bars(spark, sf_dir))
 
 
 def src_px_usd(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9666,7 +9666,8 @@ ORDER BY cell, dim
 
 
 # X154 — HIGH-DIM quantizer fit (r13; r12 verdict missing #2): the
-# narrow posexplode fit path past the wide plan's max_dim=256 ceiling,
+# narrow posexplode fit path past the wide plan's ceiling
+# (similarity._WIDE_MAX_DIM = 256),
 # exercised at a production-class dimensionality the fixture can
 # REPRESENT IN-PLAN: the 64-dim embedding tiled ×8 to 512 dims (the
 # oracle replays the identical construction, so the fit arithmetic —
@@ -10023,7 +10024,8 @@ ORDER BY query_id, "rank"
 
 
 # X156 — exact per-subspace PQ codebook fit (r13): the SECOND high-dim
-# strategy the X144 max_dim guard names (the PQ discipline), composed
+# strategy the X144 similarity._WIDE_MAX_DIM guard names (the PQ
+# discipline), composed
 # as one callable — m independent exact quantized Lloyd fits over
 # contiguous vector slices, each the X144 arithmetic verbatim, so the
 # whole codebook is bit-identical cross-engine. Contract shape: m=4

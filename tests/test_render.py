@@ -8,8 +8,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
 from alphavantage_etl_spark.plans.render import publish_report, render_report
-from alphavantage_etl_spark.plans.report import report_frames
+from alphavantage_etl_spark.plans.report import _with_smas, report_frames
+from alphavantage_etl_spark.plans.views import fx_bars, prd_converted, px_bars
 
 from .conftest import SF_SMALL
 
@@ -138,3 +141,58 @@ def test_dual_axis_degenerate_inputs():
     )
     svg = _svg_dual_axis(const, "close_usd", "close_fx")
     assert "<svg " in svg and "NaN" not in svg and "nan" not in svg
+
+
+def _lazy_frames(spark, sf_dir):
+    """The seven report frames as lazy plans straight over the fixtures:
+    every frame re-aggregates its bars, nothing is materialized."""
+    px = _with_smas(px_bars(spark, sf_dir), "close")
+    fx = _with_smas(fx_bars(spark, sf_dir), "close")
+    prd = _with_smas(prd_converted(spark, sf_dir), "close_price_fx")
+    return {
+        "px": px.orderBy(F.desc("date")),
+        "fx": fx.orderBy(F.desc("date")),
+        "converted": prd.orderBy(F.desc("date")),
+        "px_table": px.select(px.columns[:5]).orderBy(F.desc("date")),
+        "fx_table": fx.select(fx.columns[:4]).orderBy(F.desc("date")),
+        "converted_table": prd.select(prd.columns[:4]).orderBy(F.desc("date")),
+        "comparison": prd.select(
+            "date",
+            F.col("close_price_usd").alias("close_usd"),
+            F.col("close_price_fx").alias("close_fx"),
+        ).orderBy(F.desc("date")),
+    }
+
+
+def test_materialized_report_equals_lazy_definition(spark):
+    """report_frames aggregates each bar series once and derives every
+    frame from the two materializations; the document must be exactly the
+    one the per-frame lazy definition renders."""
+    lazy = render_report(_lazy_frames(spark, SF_SMALL))
+    assert render_report(report_frames(spark, SF_SMALL)) == lazy
+
+
+def test_report_job_counts(spark):
+    """One report runs a fixed number of Spark jobs: report_frames runs
+    the two bar materializations (plus the source probes), render_report
+    only its seven driver edges over them. Edges that re-aggregated the
+    fact tables would run 23 render jobs."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    render_report(report_frames(spark, SF_SMALL))  # warm-up, no group
+    frames, n_frames = jobs(
+        "test_report_job_counts:frames", lambda: report_frames(spark, SF_SMALL)
+    )
+    _, n_render = jobs(
+        "test_report_job_counts:render", lambda: render_report(frames)
+    )
+    assert (n_frames, n_render) == (6, 13)
