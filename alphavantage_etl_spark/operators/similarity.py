@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import away_round
 from ..functions.vectors import (
+    _render_lit,
+    _sql_ref,
     cosine_similarity,
     dot,
     inline_rows_df,
@@ -435,33 +437,29 @@ def _u6_quantized(vec_col: str) -> Column:
     (:func:`assign_cells_l2q`): X146's correctness rests on both sides
     using the IDENTICAL exact metric, so the quantization must not be
     able to drift between copies."""
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * 1e6).cast("long"),
+    return F.expr(
+        f"transform({_sql_ref(vec_col)}, "
+        "x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))"
     )
 
 
-def _l2q_scored(q6_attr: Column, cents6: list[list[int]]) -> Column:
+def _l2q_scored(q6_col: str, cents6: list[list[int]]) -> Column:
     """``array<struct<d2, cell>>`` of EXACT integer squared-L2 scores
     of a projected u6 column against every quantized centroid — the
     shared train/serve scoring for the same reason as
-    :func:`_u6_quantized`. ``q6_attr`` must be a projected COLUMN, not
+    :func:`_u6_quantized`. ``q6_col`` must name a projected COLUMN, not
     an expression (a captured expression re-evaluates per element —
     the CDC bounds-hoist rule)."""
-    # ONE-round-trip literal (sql_array_lit): this matrix is rebuilt at
-    # every plan construction — fit loops once per iteration — and the
-    # F.lit nested form cost a measured 310 ms of driver py4j time EACH
-    cmat = sql_array_lit([[int(v) for v in c] for c in cents6])
-    return F.transform(
-        cmat,
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(q6_attr, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            i.alias("cell"),
-        ),
+    # ONE SQL string, literal matrix included (the sql_array_lit form):
+    # this expression is rebuilt at every plan construction — fit loops
+    # once per iteration, serving once per request — and building the
+    # lambdas through the Python HOF API costs one py4j round trip per
+    # node
+    cmat = _render_lit([[int(v) for v in c] for c in cents6])
+    return F.expr(
+        f"transform({cmat}, (c, i) -> struct(aggregate(zip_with("
+        f"{_sql_ref(q6_col)}, c, (a, b) -> (a - b) * (a - b)), 0L, "
+        "(acc, x) -> acc + x) AS d2, i AS cell))"
     )
 
 
@@ -497,7 +495,7 @@ def assign_cells_l2q(
             "assign_cells_l2q: cents6 rows disagree on dimensionality"
         )
     base = _q6_base(df, dim, vec_col, id_col)
-    scored = _l2q_scored(F.col("__q6"), cents6)
+    scored = _l2q_scored("__q6", cents6)
     probes = F.slice(F.sort_array(scored), 1, n_probe)
     return base.select(
         F.col("__id").alias(id_col), F.explode(probes).alias("__p")
@@ -900,7 +898,7 @@ def _lloyd_iterate(
     :func:`_cell_sums` aggregate on the argmin cell, an O(|cents|)
     collect and the :func:`_refit`."""
     for _ in range(iters):
-        best = F.array_min(_l2q_scored(F.col("__q6"), cents))
+        best = F.array_min(_l2q_scored("__q6", cents))
         rows = _cell_sums(
             base.select("__q6", best["cell"].alias("__cell")), dim
         ).collect()
@@ -1042,7 +1040,7 @@ def _exact_kmeans(
         )
         scored = base.crossJoin(_cents6_frame(base.sparkSession, cents))
     else:
-        best = F.array_min(_l2q_scored(F.col("__q6"), cents))
+        best = F.array_min(_l2q_scored("__q6", cents))
         scored = base
     final = {
         int(r["__cell"]): (int(r["__n"]), int(r["__inertia"]))
@@ -1451,7 +1449,7 @@ def pq_encode_exact(
         *carry,
         F.array(
             *[
-                F.array_min(_l2q_scored(F.col(f"__q{s}"), books6[s]))[
+                F.array_min(_l2q_scored(f"__q{s}", books6[s]))[
                     "cell"
                 ].cast("int")
                 for s in range(m)
@@ -1530,31 +1528,26 @@ def ann_join_pq(
         F.col("__cell").cast("int").alias("__cell"),
         "__codes",
     )
-    booklit = sql_array_lit([[list(map(int, c_)) for c_ in b] for b in books6])
     if residual_cents6 is not None:
         if _validate_cents6(residual_cents6, "ann_join_pq") != dim:
             raise ValueError(
                 "ann_join_pq: residual_cents6 dimensionality "
                 f"{len(residual_cents6[0])} != m*d_sub={dim}"
             )
-        centlit = sql_array_lit([[int(v) for v in c] for c in residual_cents6])
+        centlit = _render_lit([[int(v) for v in c] for c in residual_cents6])
 
-        def qterm(s, d):
+        def qterm(j: str) -> str:
             # query residual w.r.t. the PROBED cell: one extra
             # element_at into the KB-scale centroid literal — the
             # per-probed-cell LUT, no plan-shape change
-            return F.element_at(
-                F.col("__q6"), (s * d_sub + d).cast("int")
-            ) - F.element_at(
-                F.element_at(centlit, F.col("__cell") + 1),
-                (s * d_sub + d).cast("int"),
+            return (
+                f"element_at(__q6, {j}) - "
+                f"element_at(element_at({centlit}, __cell + 1), {j})"
             )
     else:
 
-        def qterm(s, d):
-            return F.element_at(
-                F.col("__q6"), (s * d_sub + d).cast("int")
-            )
+        def qterm(j: str) -> str:
+            return f"element_at(__q6, {j})"
 
     # r14 optimization (guide §4.2/§1.2): the ADC fold used to run
     # m x d_sub interpreted HOF evaluations PER CANDIDATE PAIR — the
@@ -1570,26 +1563,22 @@ def ann_join_pq(
     # query-sized), the coded corpus still crosses exactly ONE cell
     # equi-join, broadcasts stay static-from-stats, and the only hash
     # exchange still carries the WindowGroupLimit-pre-limited
-    # candidates.
-    def _lut_subspace(s: int) -> Column:
-        # factory closure: PySpark introspects lambda arity, so the
-        # loop variables must be captured by closure, NOT by default
-        # args (a `lambda x, s=s:` is a 2-arg HOF lambda to Spark)
-        def entry(code_vec: Column) -> Column:
-            def diff(d: Column) -> Column:
-                return qterm(s, d) - F.element_at(
-                    code_vec, d.cast("int")
-                )
-
-            return F.aggregate(
-                F.transform(F.sequence(F.lit(1), F.lit(d_sub)), diff),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x * x,
-            )
-
-        return F.transform(F.element_at(booklit, s + 1), entry)
-
-    lut = F.array(*[_lut_subspace(s) for s in range(m)])
+    # candidates. The table is ONE SQL string (the sql_array_lit form):
+    # through the Python HOF API each lambda node would be its own py4j
+    # round trip, paid at every serve request's plan construction.
+    books = [_render_lit([list(map(int, c_)) for c_ in b]) for b in books6]
+    lut = F.expr(
+        "array("
+        + ", ".join(
+            f"transform({books[s]}, cv -> aggregate("
+            f"transform(sequence(1, {d_sub}), d -> "
+            f"{qterm(f'CAST({s * d_sub} + d AS INT)')} - "
+            "element_at(cv, CAST(d AS INT))), 0L, "
+            "(acc, x) -> acc + x * x))"
+            for s in range(m)
+        )
+        + ")"
+    )
     ql = qcells.join(q0, on="query_id", how="inner").select(
         "query_id", "__cell", lut.alias("__lut")
     )
@@ -2174,7 +2163,7 @@ def bq_index(
             f"({len(cents6[0]) if cents6 else 0} vs {dim})"
         )
     base = _q6_base(df, dim, vec_col, id_col)
-    best = F.array_min(_l2q_scored(F.col("__q6"), cents6))
+    best = F.array_min(_l2q_scored("__q6", cents6))
     return base.select(
         F.col("__id").alias(id_col),
         best["cell"].cast("int").alias("__cell"),
@@ -2535,7 +2524,10 @@ def pq_index_delete(
     delete batch at 100 TB). Serving (``load_pq_index`` with its
     default ``apply_tombstones=True``) subtracts tombstones with one
     anti-join that broadcasts from stats while the tombstone set is
-    small; :func:`pq_index_compact` folds them into the assignments
+    small; the append changes the index's file fingerprint, so the
+    next ``load_pq_index`` of the path reloads, even one in the same
+    session as a cached load, and serves without the deleted ids.
+    :func:`pq_index_compact` folds them into the assignments
     and resets the set — run it when tombstones grow past a few
     percent of the index. Ids never present in the index are a no-op
     (the anti-join simply matches nothing). Deleting and re-ingesting
@@ -2619,8 +2611,9 @@ def _q6_base(
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("__id"), _u6_quantized(vec_col).alias("__q6"))
         .where(
-            (F.size("__q6") == dim)
-            & ~F.exists(F.col("__q6"), lambda x: x.isNull())
+            F.expr(
+                f"size(__q6) = {dim} AND NOT exists(__q6, x -> x IS NULL)"
+            )
         )
     )
 
@@ -2640,7 +2633,7 @@ def _residual_q6(base: DataFrame, cents6: list[list[int]]) -> DataFrame:
     ``zip_with`` against one ``element_at`` lookup — no join, no
     shuffle."""
     centlit = sql_array_lit([[int(v) for v in c] for c in cents6])
-    best = F.array_min(_l2q_scored(F.col("__q6"), cents6))
+    best = F.array_min(_l2q_scored("__q6", cents6))
     return base.select(
         "__id", "__q6", best["cell"].cast("int").alias("__cell")
     ).select(
@@ -2720,7 +2713,7 @@ def split_hot_cells(
         raise ValueError(f"hot_factor must be > 0, got {hot_factor}")
     from pyspark.sql import types as T
 
-    best = F.array_min(_l2q_scored(F.col("__q6"), cents6))
+    best = F.array_min(_l2q_scored("__q6", cents6))
     base = (
         _q6_base(corpus_df, dim, vec_col, id_col)
         .select("__id", "__q6", best["cell"].alias("__cell"))
@@ -2748,7 +2741,7 @@ def split_hot_cells(
         members = base.where(F.col("__cell") == h)
         init = _kmeans_init(members, sub_cells, "split_hot_cells", "sub_cells")
         sub = _lloyd_iterate(members, init, iters, dim)
-        best_sub = F.array_min(_l2q_scored(F.col("__q6"), sub))
+        best_sub = F.array_min(_l2q_scored("__q6", sub))
         first_new = next_id
         deltas.append(
             members.select(
@@ -2831,7 +2824,7 @@ def kmeans_state(
     map-side-combinable cell aggregation; output is O(n_cells) model
     state."""
     dim = _validate_cents6(cents6, "kmeans_state")
-    best = F.array_min(_l2q_scored(F.col("__q6"), cents6))
+    best = F.array_min(_l2q_scored("__q6", cents6))
     return _cell_sums(
         _q6_base(df, dim, vec_col, id_col).select(
             "__q6", best["cell"].alias("__cell")
@@ -3013,8 +3006,8 @@ def assignment_moves(
         raise ValueError(
             "assignment_moves: old/new centroid dimensionality differs"
         )
-    old_best = F.array_min(_l2q_scored(F.col("__q6"), old_cents6))
-    new_best = F.array_min(_l2q_scored(F.col("__q6"), new_cents6))
+    old_best = F.array_min(_l2q_scored("__q6", old_cents6))
+    new_best = F.array_min(_l2q_scored("__q6", new_cents6))
     return (
         _q6_base(df, dim, vec_col, id_col)
         .select(

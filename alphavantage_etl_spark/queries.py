@@ -3708,7 +3708,12 @@ def _session_shared(spark: SparkSession, cache_key: tuple, build, *,
     the cached model state is served STALE by design; a fresh session
     rebuilds, and ``refit=True`` is the in-session escape hatch (drops
     the entry and rebuilds now). Deterministic fixtures make the
-    default benign for the contract queries.
+    default benign for the contract queries. Loads of a persisted
+    index (``streaming.pipeline.load_pq_index`` / ``load_bq_index``)
+    are content-keyed instead: they are reused only while a
+    fingerprint of the files under the index path is unchanged. The
+    shared builds cached here, index builds included, still key on
+    ``(applicationId, key)`` alone and stay stale by design.
 
     Thread-safe with per-key build locks: concurrent callers of the SAME
     key serialize (one build, everyone else reads the cache) while

@@ -19,6 +19,9 @@ a real source (Kafka/files-on-object-storage) — nothing here is local-only.
 
 from __future__ import annotations
 
+import copy
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2297,6 +2300,83 @@ def pq_index_stream(
     return q
 
 
+# Loaded persisted indexes, one entry per (applicationId, reader,
+# index_path, apply_tombstones): (fingerprint, frame, model parts). A hit
+# needs the fingerprint of the files under index_path to be unchanged;
+# entries of other application ids are evicted on insert (their frames
+# died with the old context), the _session_shared rule.
+_INDEX_CACHE: dict[tuple, tuple] = {}
+_INDEX_CACHE_LOCK = threading.Lock()
+
+
+def _index_fingerprint(spark: SparkSession, index_path: str) -> tuple | None:
+    """Sorted ``(path, length, modificationTime)`` of every file under
+    ``index_path`` — a driver-side Hadoop directory walk, no Spark job —
+    or None when the path does not exist. ``listStatus`` per directory,
+    not ``listFiles(recursive=True)``: the latter builds a
+    ``LocatedFileStatus`` per file, which copies owner and permissions;
+    on the local filesystem without the native Hadoop library those
+    load by running ``ls -ld`` once per file (measured 45-160 ms against
+    6-8 ms for an 8-file index)."""
+    fs, root = _hadoop_fs(spark, index_path)
+    if not fs.exists(root):
+        return None
+    files, dirs = [], [root]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                files.append(
+                    (st.getPath().toString(), st.getLen(),
+                     st.getModificationTime())
+                )
+    return tuple(sorted(files))
+
+
+def _fresh_index_load(
+    spark: SparkSession, index_path: str, apply_tombstones: bool, read
+) -> tuple:
+    """``read(spark, index_path, apply_tombstones)`` — a ``(frame,
+    *models)`` tuple — reused while the files under ``index_path`` keep
+    their fingerprint. The fingerprint is taken BEFORE the read, so
+    files that change during it only make the next call read again. The
+    cached frame is returned as is (DataFrames are immutable); the model
+    lists are deep-copied on every return, so a caller mutating them
+    cannot reach the entry."""
+    app = spark.sparkContext.applicationId
+    key = (app, read, index_path, apply_tombstones)
+    fp = _index_fingerprint(spark, index_path)
+    with _INDEX_CACHE_LOCK:
+        hit = _INDEX_CACHE.get(key)
+    if fp is None or hit is None or hit[0] != fp:
+        with _INDEX_CACHE_LOCK:
+            for k in [k for k in _INDEX_CACHE if k[0] != app or k == key]:
+                del _INDEX_CACHE[k]
+        # a removed index_path raises here, as an uncached load does
+        frame, *models = read(spark, index_path, apply_tombstones)
+        hit = (fp, frame, models)
+        with _INDEX_CACHE_LOCK:
+            _INDEX_CACHE[key] = hit
+    return (hit[1], *copy.deepcopy(hit[2]))
+
+
+def _live_assignments(
+    spark: SparkSession, index_path: str, apply_tombstones: bool
+) -> DataFrame:
+    """The stored ``assignments`` of an index, minus its tombstoned ids
+    when ``apply_tombstones`` is set (one anti-join)."""
+    raw = spark.read.parquet(f"{index_path}/assignments")
+    idx = raw.select([c for c in raw.columns if c != "ingest_batch_id"])
+    if apply_tombstones:
+        fs, tpath = _hadoop_fs(spark, f"{index_path}/tombstones")
+        if fs.exists(tpath):
+            tomb = spark.read.parquet(f"{index_path}/tombstones").distinct()
+            (tomb_id,) = tomb.columns
+            idx = idx.join(tomb, on=tomb_id, how="left_anti")
+    return idx
+
+
 def load_pq_index(
     spark: SparkSession, index_path: str, apply_tombstones: bool = True
 ) -> tuple[DataFrame, list[list[int]], list[list[list[int]]]]:
@@ -2312,7 +2392,31 @@ def load_pq_index(
     the join broadcasts from stats and the assignments scan is still
     the only corpus-sized input. ``apply_tombstones=False`` reads the
     raw table (what :func:`pq_index_compact` itself needs, and the
-    audit view of what storage physically holds)."""
+    audit view of what storage physically holds).
+
+    FRESHNESS CONTRACT: the load is reused within a Spark application
+    while the index's files are unchanged. Every call takes a
+    fingerprint of ``index_path`` — the sorted ``(path, length,
+    modificationTime)`` of every file under it, from a driver-side
+    Hadoop directory walk (no Spark job) — which covers
+    ``assignments/``, ``tombstones/``, ``cents6/`` and ``books6/``. An
+    unchanged fingerprint returns the cached frame with fresh copies of
+    ``cents6``/``books6`` and runs no Spark job; any append, delete,
+    compaction or overwrite changes the fingerprint and reloads (the
+    frame must be rebuilt: a reused DataFrame keeps its file listing).
+    A removed ``index_path`` raises as an uncached load does. What the
+    fingerprint cannot see is an in-place rewrite of a file that keeps
+    its name, length and modification time; every writer in this
+    package writes new part files. The listing costs about 1 ms per
+    file on a local filesystem (6-8 ms for the 8 files of a saved index
+    with tombstones, 4-core host), where an uncached load runs 9 Spark
+    jobs, 10 with tombstones."""
+    return _fresh_index_load(spark, index_path, apply_tombstones, _read_pq_index)
+
+
+def _read_pq_index(
+    spark: SparkSession, index_path: str, apply_tombstones: bool
+) -> tuple[DataFrame, list[list[int]], list[list[list[int]]]]:
     cents6 = [
         [int(x) for x in r["c6"]]
         for r in spark.read.parquet(f"{index_path}/cents6")
@@ -2328,16 +2432,7 @@ def load_pq_index(
     books6: list[list[list[int]]] = [[] for _ in range(n_sub)]
     for r in braw:
         books6[r["subspace"]].append([int(x) for x in r["c6"]])
-    raw = spark.read.parquet(f"{index_path}/assignments")
-    idx = raw.select(
-        [c for c in raw.columns if c != "ingest_batch_id"]
-    )
-    if apply_tombstones:
-        fs, tpath = _hadoop_fs(spark, f"{index_path}/tombstones")
-        if fs.exists(tpath):
-            tomb = spark.read.parquet(f"{index_path}/tombstones").distinct()
-            (tomb_id,) = tomb.columns
-            idx = idx.join(tomb, on=tomb_id, how="left_anti")
+    idx = _live_assignments(spark, index_path, apply_tombstones)
     return idx, cents6, books6
 
 
@@ -2468,7 +2563,21 @@ def load_bq_index(
     the model reads are O(model). ``apply_tombstones``: the X166
     semantics verbatim (ids appended by ``pq_index_delete`` subtract
     with one stats-broadcast anti-join; the utilities never look at
-    the code payload, so the bit tier reuses them unchanged)."""
+    the code payload, so the bit tier reuses them unchanged).
+
+    FRESHNESS CONTRACT: :func:`load_pq_index`'s, through the same
+    cache. The fingerprint covers ``assignments/``, ``tombstones/``,
+    ``cents6/`` and ``bqmodel/``; an unchanged one returns the cached
+    frame with fresh copies of ``cents6``/``sums6`` and runs no Spark
+    job. It cannot see an in-place rewrite that keeps a file's name,
+    length and modification time; the listing costs about 1 ms per
+    file on a local filesystem."""
+    return _fresh_index_load(spark, index_path, apply_tombstones, _read_bq_index)
+
+
+def _read_bq_index(
+    spark: SparkSession, index_path: str, apply_tombstones: bool
+) -> tuple[DataFrame, list[list[int]], list[int], int]:
     cents6 = [
         [int(x) for x in r["c6"]]
         for r in spark.read.parquet(f"{index_path}/cents6")
@@ -2478,14 +2587,7 @@ def load_bq_index(
     mrows = spark.read.parquet(f"{index_path}/bqmodel").orderBy("d").collect()
     sums6 = [int(r["s6"]) for r in mrows]
     n_fit = int(mrows[0]["n"])
-    raw = spark.read.parquet(f"{index_path}/assignments")
-    idx = raw.select([c for c in raw.columns if c != "ingest_batch_id"])
-    if apply_tombstones:
-        fs, tpath = _hadoop_fs(spark, f"{index_path}/tombstones")
-        if fs.exists(tpath):
-            tomb = spark.read.parquet(f"{index_path}/tombstones").distinct()
-            (tomb_id,) = tomb.columns
-            idx = idx.join(tomb, on=tomb_id, how="left_anti")
+    idx = _live_assignments(spark, index_path, apply_tombstones)
     return idx, cents6, sums6, n_fit
 
 

@@ -2313,6 +2313,236 @@ def test_exact_fit_job_counts(spark):
     ) == 30
 
 
+def _tiny_pq_index(spark, path, shift=0, where="true"):
+    """Save a small IVF-PQ index of sf0.001's corpus split under ``path``
+    and return ``(cents6, books6, ids)``. No fit runs: the 4 cells and
+    the 4 x 4 x 16 codebook are u6 vectors of corpus rows ``shift`` ..
+    ``shift + 7``, so a different ``shift`` saves a different model;
+    ``where`` picks the indexed rows."""
+    from alphavantage_etl_spark.operators.similarity import (
+        _q6_base,
+        assign_cells_l2q,
+        pq_encode_exact,
+        save_pq_index,
+    )
+    from alphavantage_etl_spark.sources import load
+
+    from .conftest import SF_SMALL
+
+    corpus = (
+        load(spark, SF_SMALL, "embeddings")
+        .where(F.col("vec_id") % 25 != 7)
+        .where(where)
+    )
+    q6 = [
+        list(r["__q6"])
+        for r in _q6_base(corpus, 64, "embedding", "vec_id")
+        .orderBy("__id")
+        .limit(shift + 8)
+        .collect()
+    ][shift:]
+    cents6 = q6[:4]
+    books6 = [[v[s * 16:(s + 1) * 16] for v in q6[4:]] for s in range(4)]
+    save_pq_index(
+        assign_cells_l2q(corpus, cents6, n_probe=1).join(
+            pq_encode_exact(corpus, books6), on="vec_id"
+        ),
+        cents6,
+        books6,
+        path,
+    )
+    return cents6, books6, {r["vec_id"] for r in corpus.collect()}
+
+
+def _serve_tiny(spark, idx, cents6, books6):
+    """Sorted ADC top-3 rows of sf0.001's held-out queries over ``idx``."""
+    from alphavantage_etl_spark.operators.similarity import (
+        ann_join_pq,
+        assign_cells_l2q,
+    )
+    from alphavantage_etl_spark.sources import load
+
+    from .conftest import SF_SMALL
+
+    q = load(spark, SF_SMALL, "embeddings").where(F.col("vec_id") % 25 == 7)
+    qc = assign_cells_l2q(q, cents6, n_probe=2)
+    return sorted(
+        map(
+            tuple,
+            ann_join_pq(
+                q, k=3, query_cells=qc, corpus_index=idx, books6=books6
+            ).collect(),
+        )
+    )
+
+
+def test_pq_index_load_job_counts(spark, tmp_path):
+    """A load of an unchanged index runs no Spark job: the second
+    ``load_pq_index`` of a path returns the cached frame after a
+    driver-side listing. The first load, and the first load after a
+    tombstone append, run the uncached load's jobs: the two model
+    collects, the assignments read and, once tombstones exist, their
+    read."""
+    from alphavantage_etl_spark.operators.similarity import pq_index_delete
+    from alphavantage_etl_spark.streaming.pipeline import load_pq_index
+
+    path = str(tmp_path / "pq")
+    _tiny_pq_index(spark, path)
+    sc = spark.sparkContext
+
+    def jobs(tag):
+        group = f"test_pq_index_load_job_counts:{tag}"
+        sc.setJobGroup(group, tag)
+        try:
+            load_pq_index(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("first") == 9
+    assert jobs("warm") == 0
+    pq_index_delete(path, spark.range(3).toDF("vec_id"))
+    assert jobs("after_delete") == 10
+    assert jobs("warm_again") == 0
+
+
+def test_pq_index_load_sees_tombstone_append(spark, tmp_path):
+    """Ids tombstoned after a warm load vanish from the next load and
+    from serving."""
+    from alphavantage_etl_spark.operators.similarity import pq_index_delete
+    from alphavantage_etl_spark.streaming.pipeline import load_pq_index
+
+    path = str(tmp_path / "pq")
+    _, _, ids = _tiny_pq_index(spark, path)
+    load_pq_index(spark, path)
+    idx, c6, b6 = load_pq_index(spark, path)
+    before = _serve_tiny(spark, idx, c6, b6)
+    doomed = {t[1] for t in before[:5]}
+    pq_index_delete(
+        path, spark.createDataFrame([(i,) for i in doomed], "vec_id long")
+    )
+    idx, c6, b6 = load_pq_index(spark, path)
+    assert {r["vec_id"] for r in idx.collect()} == ids - doomed
+    after = _serve_tiny(spark, idx, c6, b6)
+    assert after and not {t[1] for t in after} & doomed
+
+
+def test_pq_index_load_sees_overwrite(spark, tmp_path):
+    """``save_pq_index`` over a warm-loaded path with other models and
+    other rows: the next load returns the new models and rows."""
+    from alphavantage_etl_spark.streaming.pipeline import load_pq_index
+
+    path = str(tmp_path / "pq")
+    c_old, b_old, ids_old = _tiny_pq_index(spark, path)
+    load_pq_index(spark, path)
+    assert load_pq_index(spark, path)[1:] == (c_old, b_old)
+    c_new, b_new, ids_new = _tiny_pq_index(
+        spark, path, shift=8, where="vec_id % 2 = 0"
+    )
+    assert (c_new, b_new) != (c_old, b_old) and ids_new != ids_old
+    idx, c6, b6 = load_pq_index(spark, path)
+    assert (c6, b6) == (c_new, b_new)
+    assert {r["vec_id"] for r in idx.collect()} == ids_new
+
+
+def test_pq_index_load_after_compact_serves_unchanged(spark, tmp_path):
+    """A compaction after a warm load changes the files, not the live
+    rows: the next load reloads and serves the same top-k."""
+    from alphavantage_etl_spark.operators.similarity import (
+        pq_index_compact,
+        pq_index_delete,
+    )
+    from alphavantage_etl_spark.streaming.pipeline import load_pq_index
+
+    path = str(tmp_path / "pq")
+    _tiny_pq_index(spark, path)
+    pq_index_delete(path, spark.range(0, 100, 3).toDF("vec_id"))
+    load_pq_index(spark, path)
+    idx, c6, b6 = load_pq_index(spark, path)
+    before = _serve_tiny(spark, idx, c6, b6)
+    kept, dropped = pq_index_compact(spark, path)
+    assert dropped > 0
+    idx2, c62, b62 = load_pq_index(spark, path)
+    assert idx2.count() == kept
+    assert _serve_tiny(spark, idx2, c62, b62) == before
+
+
+def test_pq_index_load_of_removed_path_raises(spark, tmp_path):
+    """Removing a warm-loaded index makes the next load raise the error
+    a load of a path that never existed raises."""
+    import shutil
+
+    from alphavantage_etl_spark.streaming.pipeline import load_pq_index
+
+    path = str(tmp_path / "pq")
+    _tiny_pq_index(spark, path)
+    load_pq_index(spark, path)
+    load_pq_index(spark, path)
+    with pytest.raises(Exception) as never:
+        load_pq_index(spark, str(tmp_path / "never"))
+    shutil.rmtree(path)
+    with pytest.raises(type(never.value)):
+        load_pq_index(spark, path)
+
+
+def test_pq_index_load_returns_fresh_model_copies(spark, tmp_path):
+    """A caller mutating the returned model lists cannot change what
+    the next load of the same index returns."""
+    from alphavantage_etl_spark.streaming.pipeline import load_pq_index
+
+    path = str(tmp_path / "pq")
+    cents6, books6, _ = _tiny_pq_index(spark, path)
+    _, c6, b6 = load_pq_index(spark, path)
+    c6[0][0] += 1
+    c6.append([0] * 64)
+    b6[0][0][0] -= 1
+    b6[1].pop()
+    _, c6, b6 = load_pq_index(spark, path)
+    assert (c6, b6) == (cents6, books6)
+
+
+def test_bq_index_load_sees_overwrite(spark, tmp_path):
+    """``load_bq_index`` shares the fingerprint cache: ``save_bq_index``
+    over a warm-loaded path with another model and other rows is seen
+    by the next load."""
+    from alphavantage_etl_spark.operators.similarity import (
+        assign_cells_l2q,
+        bq_encode,
+        save_bq_index,
+    )
+    from alphavantage_etl_spark.sources import load
+    from alphavantage_etl_spark.streaming.pipeline import load_bq_index
+
+    from .conftest import SF_SMALL
+
+    emb = load(spark, SF_SMALL, "embeddings")
+    cents6 = [[0] * 64, [100_000] * 64]
+    path = str(tmp_path / "bq")
+
+    def save(sums6, n_fit, where):
+        corpus = emb.where(where)
+        save_bq_index(
+            assign_cells_l2q(corpus, cents6, n_probe=1).join(
+                bq_encode(corpus, sums6, n_fit), on="vec_id"
+            ),
+            cents6,
+            sums6,
+            n_fit,
+            path,
+        )
+        return {r["vec_id"] for r in corpus.collect()}
+
+    ids_old = save([0] * 64, 10, "vec_id % 2 = 0")
+    load_bq_index(spark, path)
+    idx, c6, s6, n = load_bq_index(spark, path)
+    assert (c6, s6, n) == (cents6, [0] * 64, 10)
+    ids_new = save(list(range(64)), 20, "vec_id % 2 = 1")
+    idx, c6, s6, n = load_bq_index(spark, path)
+    assert (c6, s6, n) == (cents6, list(range(64)), 20)
+    assert {r["vec_id"] for r in idx.collect()} == ids_new != ids_old
+
+
 @pytest.mark.slow
 def test_pq_fit_exact_guards_and_slices(spark):
     """X156: pq_fit_exact requires a declared dim divisible by m with
