@@ -101,13 +101,15 @@ def inline_rows_df(spark, rows, fields):
     rows and schema.
 
     ``fields``: ``[(name, SQL_TYPE)]`` with SQL_TYPE in INT / BIGINT /
-    DOUBLE / STRING (extend as needed). Ints emit via CAST, floats as
-    exact round-trip ``repr`` strings (the ``sql_array_lit`` contract),
-    None as a typed NULL. Strings are rejected unless they are
-    printable and free of quotes/backslashes/newlines — the callers
-    pass fixed model labels; anything richer should keep
-    ``createDataFrame``. Empty ``rows`` yields a correctly-typed empty
-    frame (one dummy row filtered out)."""
+    DOUBLE / STRING / BOOLEAN / ARRAY<BIGINT> / ARRAY<DOUBLE> (extend as
+    needed). Ints emit via CAST, floats as exact round-trip ``repr``
+    strings (the ``sql_array_lit`` contract), non-empty arrays through
+    ``_render_lit`` cast to the declared type (so elements are nullable,
+    as in ``createDataFrame``), None as a typed NULL. Strings are
+    rejected unless they are printable and free of
+    quotes/backslashes/newlines — the callers pass fixed model labels;
+    anything richer should keep ``createDataFrame``. Empty ``rows``
+    yields a correctly-typed empty frame (one dummy row filtered out)."""
 
     def cell(v, t) -> str:
         if v is None:
@@ -119,6 +121,9 @@ def inline_rows_df(spark, rows, fields):
             if f != f or f in (float("inf"), float("-inf")):
                 raise ValueError(f"inline_rows_df: non-finite {v!r}")
             return f"CAST('{f!r}' AS {t})"
+        if t in ("ARRAY<BIGINT>", "ARRAY<DOUBLE>"):
+            elem = int if t == "ARRAY<BIGINT>" else float
+            return f"CAST({_render_lit([elem(x) for x in v])} AS {t})"
         if t == "STRING":
             s = str(v)
             if ("'" in s or "\\" in s or not s.isprintable()):

@@ -2394,8 +2394,10 @@ def save_ivf_index(
 ) -> None:
     """Persist an IVF index: the assignment table as parquet under
     ``{path}/assignments`` and the centroid model state (small — cells
-    × dim doubles) as a one-column parquet under ``{path}/centroids``.
-    Plain parquet, no sidecar format — readable by any engine.
+    × dim doubles) beside it, written by ``streaming.pipeline.
+    _write_models`` — the one model layout that ``ivf_index_stream``
+    also writes and freeze-checks. Plain parquet, no sidecar format —
+    readable by any engine.
 
     ``partition_by_cell=True`` lays the assignment table out as one
     directory per ``__cell`` — the 100 TB serving layout: a probe join
@@ -2407,24 +2409,15 @@ def save_ivf_index(
     input-partition-count fragments) — ingest-time cost for
     query-time pruning, the standard index bargain. Off by default:
     a small index that broadcasts whole gains nothing from pruning."""
-    spark = index_df.sparkSession
+    from ..streaming.pipeline import _write_models
+
     if partition_by_cell:
         index_df.repartition("__cell").write.mode("overwrite").partitionBy(
             "__cell"
         ).parquet(f"{path}/assignments")
     else:
         index_df.write.mode("overwrite").parquet(f"{path}/assignments")
-    # JVM inline table (r14): the createDataFrame(python_list) form is
-    # backed by a pickled RDD whose parquet write measured ~5 s for
-    # EIGHT rows (a Python worker launch inside the write task) — paid
-    # on every index save
-    spark.range(1).select(
-        F.posexplode(
-            sql_array_lit([[float(x) for x in c] for c in centroids])
-        ).alias("cell", "centroid")
-    ).select(
-        F.col("cell").cast("int").alias("cell"), "centroid"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_models(index_df.sparkSession, path, {"centroids": centroids})
 
 
 def save_pq_index(
@@ -2437,37 +2430,24 @@ def save_pq_index(
     ingest (``streaming.pipeline.pq_index_stream``), writing the SAME
     layout so ``load_pq_index`` reads either: the ``(id, __cell,
     __codes)`` assignment+code frame as parquet under
-    ``{path}/assignments`` and the two frozen models beside it
-    (``cents6/``: cell int + c6 array; ``books6/``: subspace int +
-    code int + c6 array — each O(model), coalesced to one file).
+    ``{path}/assignments`` and the two frozen models (quantizer and
+    codebook, each O(model) in one file) beside it, written by
+    ``streaming.pipeline._write_models`` — the one model layout the
+    stream also writes, and against which a later ``pq_index_stream``
+    on this path checks its models (fail closed).
 
     This is the X157 contract's ingest half made storable in batch:
     codes joined once at ingest, so SERVING loads this index and never
     touches the raw vector column (:func:`ann_join_pq` over the loaded
     frame). Plain parquet, no sidecar format."""
     _validate_cents6(cents6, "save_pq_index")
-    m, codes, _ = _validate_books6(books6, "save_pq_index")
-    spark = index_df.sparkSession
+    _validate_books6(books6, "save_pq_index")
+    from ..streaming.pipeline import _write_models
+
     index_df.write.mode("overwrite").parquet(f"{path}/assignments")
-    # JVM inline tables (r14) — see save_ivf_index
-    spark.range(1).select(
-        F.posexplode(
-            sql_array_lit([[int(x) for x in c] for c in cents6])
-        ).alias("cell", "c6")
-    ).select(F.col("cell").cast("int").alias("cell"), "c6").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/cents6")
-    spark.range(1).select(
-        F.posexplode(
-            sql_array_lit(
-                [[int(x) for x in books6[s][c]] for s in range(m) for c in range(codes)]
-            )
-        ).alias("i", "c6")
-    ).select(
-        (F.col("i") / codes).cast("int").alias("subspace"),
-        F.pmod(F.col("i"), F.lit(codes)).cast("int").alias("code"),
-        "c6",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books6")
+    _write_models(
+        index_df.sparkSession, path, {"cents6": cents6, "books6": books6}
+    )
 
 
 def save_bq_index(
@@ -2481,33 +2461,25 @@ def save_bq_index(
     streaming ingest (``streaming.pipeline.bq_index_stream``), writing
     the SAME layout so ``load_bq_index`` reads either: the ``(id,
     __cell, __bits)`` frame as parquet under ``{path}/assignments``
-    and the two frozen models beside it (``cents6/``: cell + c6;
-    ``bqmodel/``: per-dim threshold sums AND the training count n —
-    each O(model), coalesced to one file). Serving loads this index
+    and the two frozen models beside it (quantizer; per-dim threshold
+    sums AND the training count n — each O(model) in one file), written
+    by ``streaming.pipeline._write_models``, the one model layout the
+    stream also writes and freeze-checks. Serving loads this index
     and never touches the raw vector column (:func:`ann_join_bq` over
     the loaded frame); the X166 tombstone utilities apply unchanged.
     Plain parquet, no sidecar format."""
     _validate_cents6(cents6, "save_bq_index")
-    dim = len(sums6)
-    if dim < 1:
+    if len(sums6) < 1:
         raise ValueError("save_bq_index: sums6 must be non-empty")
     if n_fit < 1:
         raise ValueError(f"save_bq_index: n_fit={n_fit} < 1")
-    spark = index_df.sparkSession
+    from ..streaming.pipeline import _write_models
+
     index_df.write.mode("overwrite").parquet(f"{path}/assignments")
-    # JVM inline tables (r14) — see save_ivf_index
-    spark.range(1).select(
-        F.posexplode(
-            sql_array_lit([[int(x) for x in c] for c in cents6])
-        ).alias("cell", "c6")
-    ).select(F.col("cell").cast("int").alias("cell"), "c6").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/cents6")
-    inline_rows_df(
-        spark,
-        [(d, int(sums6[d]), int(n_fit)) for d in range(dim)],
-        [("d", "INT"), ("s6", "BIGINT"), ("n", "BIGINT")],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/bqmodel")
+    _write_models(
+        index_df.sparkSession, path,
+        {"cents6": cents6, "bqmodel": (sums6, n_fit)},
+    )
 
 
 def pq_index_delete(
@@ -2579,15 +2551,12 @@ def pq_index_compact(spark, index_path: str) -> tuple[int, int]:
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     """Load a :func:`save_ivf_index` index: ``(assignments_df,
     centroids)``. The centroids collect is |cells| rows — model state,
-    the approved O(model) class."""
+    the approved O(model) class — and raises unless the stored cell ids
+    are exactly 0..n-1 (``streaming.pipeline._read_model``)."""
+    from ..streaming.pipeline import _read_model
+
     assignments = spark.read.parquet(f"{path}/assignments")
-    cents = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    if [r["cell"] for r in cents] != list(range(len(cents))):
-        raise ValueError(
-            f"load_ivf_index: corrupt centroid table at {path!r} — "
-            "expected contiguous cell ids 0..n-1"
-        )
-    return assignments, [list(r["centroid"]) for r in cents]
+    return assignments, _read_model(spark, path, "centroids")
 
 
 def _q6_base(

@@ -177,18 +177,15 @@ def compact_parquet(
     """
     if src.rstrip("/") == dst.rstrip("/"):
         raise ValueError("compact_parquet writes to a NEW directory")
+    from ..streaming.pipeline import _files_under
+
     # driver-side metadata listing (no data read) via Hadoop FS — works for
     # any supported scheme (file://, hdfs://, s3a://)
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(src)
-    fs = p.getFileSystem(hconf)
-    it = fs.listFiles(p, True)
-    total = 0
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            total += f.getLen()
+    total = sum(
+        st.getLen()
+        for st in _files_under(spark, src)
+        if st.getPath().getName().endswith(".parquet")
+    )
     n = max(1, -(-total // target_file_bytes))  # ceil
     df = spark.read.parquet(src)
     if sort_col is not None:

@@ -20,11 +20,13 @@ a real source (Kafka/files-on-object-storage) — nothing here is local-only.
 from __future__ import annotations
 
 import copy
+import math
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import inline_rows_df
 from ..sources.parquet import SCHEMAS
 
 
@@ -2131,39 +2133,18 @@ def ivf_index_stream(
 
     Centroids are FROZEN at stream start (the standard IVF serving
     trade — re-clustering is an offline rebuild, not a streaming
-    operation); a restart with DIFFERENT centroids against the same
-    ``index_path`` raises rather than silently mixing two quantizers.
+    operation) by :func:`_freeze_models`, the guard of all four index
+    streams: a restart with DIFFERENT centroids against the same
+    ``index_path`` raises rather than silently mixing two quantizers,
+    and an existing-but-UNREADABLE centroid file raises too (fail
+    closed — a torn model write must not disable the mismatch guard).
     """
     from ..operators.similarity import _annotate_cells
 
-    spark = stream_df.sparkSession
-    cent_path = f"{index_path}/centroids"
-    fs, cpath = _hadoop_fs(spark, cent_path)
-    if fs.exists(cpath):
-        from ..operators.similarity import load_ivf_index
-
-        try:
-            _, existing = load_ivf_index(spark, index_path)
-        except Exception:
-            # first run crashed before any assignment dir: centroids
-            # parquet may be partial — rewrite below
-            existing = None
-        if existing is not None and existing != [
-            [float(x) for x in c] for c in centroids
-        ]:
-            raise ValueError(
-                "ivf_index_stream: index_path already holds a DIFFERENT "
-                "centroid model — mixing quantizers silently corrupts "
-                "the index; rebuild offline (build_ivf_index) or point "
-                "at a fresh path"
-            )
-    if not fs.exists(cpath):
-        cent_rows = [
-            (i, [float(x) for x in c]) for i, c in enumerate(centroids)
-        ]
-        spark.createDataFrame(
-            cent_rows, "cell int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(cent_path)
+    _freeze_models(
+        stream_df.sparkSession, index_path, {"centroids": centroids},
+        "ivf_index_stream", "centroid model",
+    )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         asn = _annotate_cells(batch_df, centroids, vec_col, round_to).select(
@@ -2171,14 +2152,7 @@ def ivf_index_stream(
         )
         _append_batch(asn, f"{index_path}/assignments", batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, apply, checkpoint)
 
 
 def pq_index_stream(
@@ -2202,13 +2176,15 @@ def pq_index_stream(
     ``ann_join_pq`` straight from the stored BYTES — at 100 TB the
     streamed index is the only thing the serving scan ever reads.
 
-    BOTH models are FROZEN at stream start and persisted beside the
-    index (``cents6/`` and ``books6/`` parquet): a restart against the
-    same ``index_path`` with a different quantizer OR codebook raises;
-    an existing-but-UNREADABLE model file also raises (fail closed —
-    the kmeans_state_stream r12-ADVICE rule applied from birth: a torn
-    model write must not disable the mismatch guard). Re-clustering /
-    re-fitting is an offline rebuild. Load with :func:`load_pq_index`.
+    BOTH models are FROZEN at stream start by :func:`_freeze_models`
+    and persisted beside the index in the :func:`_write_models` layout
+    that ``save_pq_index`` also writes: a restart against the same
+    ``index_path`` (streamed or saved) with a different quantizer OR
+    codebook raises, including a stored codebook that is a strict
+    superset of the wanted one; an existing-but-UNREADABLE model file
+    also raises (fail closed — a torn model write must not disable the
+    mismatch guard). Re-clustering / re-fitting is an offline rebuild.
+    Load with :func:`load_pq_index`.
     """
     from ..operators.similarity import (
         _validate_books6,
@@ -2217,67 +2193,11 @@ def pq_index_stream(
     )
 
     _validate_books6(books6, "pq_index_stream")
-    spark = stream_df.sparkSession
-    want_c = [[int(x) for x in c] for c in cents6]
-    want_b = [[[int(x) for x in c] for c in b] for b in books6]
-    for sub_path, want, schema, rows in (
-        (
-            f"{index_path}/cents6",
-            want_c,
-            "cell int, c6 array<long>",
-            list(enumerate(want_c)),
-        ),
-        (
-            f"{index_path}/books6",
-            want_b,
-            "subspace int, code int, c6 array<long>",
-            [
-                (s, c, want_b[s][c])
-                for s in range(len(want_b))
-                for c in range(len(want_b[0]))
-            ],
-        ),
-    ):
-        fs, p = _hadoop_fs(spark, sub_path)
-        if fs.exists(p):
-            try:
-                df = spark.read.parquet(sub_path)
-                if "subspace" in df.columns:
-                    # reconstruct from ALL stored rows, not the wanted
-                    # shape's ranges (r13 ADVICE: a stored codebook with
-                    # EXTRA subspaces/codes whose prefix matches must
-                    # fail the guard, not slip past it)
-                    got_map: dict[int, dict[int, list[int]]] = {}
-                    for r in df.collect():
-                        got_map.setdefault(int(r["subspace"]), {})[
-                            int(r["code"])
-                        ] = [int(x) for x in r["c6"]]
-                    got = [
-                        [got_map[s][c] for c in sorted(got_map[s])]
-                        for s in sorted(got_map)
-                    ]
-                else:
-                    got = [
-                        [int(x) for x in r["c6"]]
-                        for r in df.orderBy("cell").collect()
-                    ]
-            except Exception as exc:
-                raise ValueError(
-                    f"pq_index_stream: UNREADABLE model file at "
-                    f"{sub_path!r} — cannot verify the frozen-model "
-                    "contract; repair or clear the index path"
-                ) from exc
-            if got != want:
-                raise ValueError(
-                    "pq_index_stream: index_path already holds a "
-                    "DIFFERENT quantizer/codebook — mixing models "
-                    "silently corrupts the index; rebuild offline or "
-                    "point at a fresh path"
-                )
-        else:
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(sub_path)
+    _freeze_models(
+        stream_df.sparkSession, index_path,
+        {"cents6": cents6, "books6": books6},
+        "pq_index_stream", "quantizer/codebook",
+    )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         coded = assign_cells_l2q(
@@ -2290,6 +2210,12 @@ def pq_index_stream(
         )
         _append_batch(coded, f"{index_path}/assignments", batch_id)
 
+    return _drain(stream_df, apply, checkpoint)
+
+
+def _drain(stream_df: DataFrame, apply, checkpoint: str):
+    """Run ``apply`` as the ``foreachBatch`` sink over every micro-batch
+    available now, then stop: the runner of the index streams."""
     q = (
         stream_df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)
@@ -2309,29 +2235,35 @@ _INDEX_CACHE: dict[tuple, tuple] = {}
 _INDEX_CACHE_LOCK = threading.Lock()
 
 
-def _index_fingerprint(spark: SparkSession, index_path: str) -> tuple | None:
-    """Sorted ``(path, length, modificationTime)`` of every file under
-    ``index_path`` — a driver-side Hadoop directory walk, no Spark job —
-    or None when the path does not exist. ``listStatus`` per directory,
-    not ``listFiles(recursive=True)``: the latter builds a
+def _files_under(spark: SparkSession, path: str):
+    """Yield the Hadoop ``FileStatus`` of every file under ``path`` — a
+    driver-side walk, no Spark job. ``listStatus`` per directory, not
+    ``listFiles(recursive=True)``: the latter builds a
     ``LocatedFileStatus`` per file, which copies owner and permissions;
     on the local filesystem without the native Hadoop library those
     load by running ``ls -ld`` once per file (measured 45-160 ms against
     6-8 ms for an 8-file index)."""
-    fs, root = _hadoop_fs(spark, index_path)
-    if not fs.exists(root):
-        return None
-    files, dirs = [], [root]
+    fs, root = _hadoop_fs(spark, path)
+    dirs = [root]
     while dirs:
         for st in fs.listStatus(dirs.pop()):
             if st.isDirectory():
                 dirs.append(st.getPath())
             else:
-                files.append(
-                    (st.getPath().toString(), st.getLen(),
-                     st.getModificationTime())
-                )
-    return tuple(sorted(files))
+                yield st
+
+
+def _index_fingerprint(spark: SparkSession, index_path: str) -> tuple | None:
+    """Sorted ``(path, length, modificationTime)`` of every file under
+    ``index_path`` (:func:`_files_under`), or None when the path does
+    not exist."""
+    fs, root = _hadoop_fs(spark, index_path)
+    if not fs.exists(root):
+        return None
+    return tuple(sorted(
+        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        for st in _files_under(spark, index_path)
+    ))
 
 
 def _fresh_index_load(
@@ -2377,6 +2309,112 @@ def _live_assignments(
     return idx
 
 
+# The persisted model layout of every index (IVF, IVF-PQ, IVF-BQ) and of
+# the k-means stream state: part directory -> its columns. Each part is
+# one parquet file beside assignments/ (or states/) with rows keyed by
+# 0-based ints; bqmodel repeats the training count n on every row.
+_MODEL_PARTS = {
+    "centroids": [("cell", "INT"), ("centroid", "ARRAY<DOUBLE>")],
+    "cents6": [("cell", "INT"), ("c6", "ARRAY<BIGINT>")],
+    "books6": [("subspace", "INT"), ("code", "INT"), ("c6", "ARRAY<BIGINT>")],
+    "bqmodel": [("d", "INT"), ("s6", "BIGINT"), ("n", "BIGINT")],
+}
+
+
+def _model_rows(part: str, model) -> list[tuple]:
+    """The stored rows of one model part, in ``_MODEL_PARTS`` order."""
+    if part == "books6":
+        return [(s, c, v) for s, b in enumerate(model) for c, v in enumerate(b)]
+    if part == "bqmodel":
+        sums6, n = model
+        return [(d, s, n) for d, s in enumerate(sums6)]
+    return list(enumerate(model))
+
+
+def _model_from_rows(part: str, rows: list[tuple]):
+    """Rebuild one model part from ALL its rows, never from a wanted
+    shape's ranges: a stored model with extra cells, subspaces, codes or
+    dimensions reads back larger and fails an equality guard. Raises
+    unless the keys are exactly 0..n-1 (cells, subspace x code, d) and a
+    bqmodel holds one n."""
+    nk = 2 if part == "books6" else 1
+    conv = {
+        "ARRAY<DOUBLE>": lambda v: [float(x) for x in v],
+        "ARRAY<BIGINT>": lambda v: [int(x) for x in v],
+        "BIGINT": int,
+    }[_MODEL_PARTS[part][nk][1]]
+    vals = {tuple(int(k) for k in r[:nk]): r[nk] for r in rows}
+    shape = [1 + max((k[i] for k in vals), default=-1) for i in range(nk)]
+    # distinct keys, none negative, as many as the box holds: the full box
+    if (not rows or len(vals) != len(rows) or math.prod(shape) != len(rows)
+            or min(min(k) for k in vals) < 0):
+        raise ValueError(f"corrupt {part} model: keys are not 0..n-1")
+    if nk == 1:
+        model = [conv(vals[(i,)]) for i in range(shape[0])]
+    else:
+        model = [
+            [conv(vals[(s, c)]) for c in range(shape[1])]
+            for s in range(shape[0])
+        ]
+    if part != "bqmodel":
+        return model
+    ns = {int(r[2]) for r in rows}
+    if len(ns) != 1:
+        raise ValueError(f"corrupt bqmodel: {len(ns)} training counts")
+    return model, ns.pop()
+
+
+def _write_models(spark: SparkSession, path: str, models: dict) -> None:
+    """Write each ``{part: model}`` to ``{path}/{part}`` as one coalesced
+    JVM inline table (``inline_rows_df``: a ``createDataFrame(list)``
+    frame is a pickled Python RDD, whose parquet write measured ~5 s for
+    an 8-row table)."""
+    for part, model in models.items():
+        inline_rows_df(
+            spark, _model_rows(part, model), _MODEL_PARTS[part]
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{part}")
+
+
+def _read_model(spark: SparkSession, path: str, part: str):
+    """The ``part`` model stored under ``path`` — one O(model) collect,
+    rebuilt and checked by :func:`_model_from_rows`."""
+    cols = [c for c, _ in _MODEL_PARTS[part]]
+    rows = spark.read.parquet(f"{path}/{part}").select(*cols).collect()
+    return _model_from_rows(part, [tuple(r) for r in rows])
+
+
+def _freeze_models(
+    spark: SparkSession, path: str, models: dict, who: str, what: str
+) -> None:
+    """The frozen-model guard of the index streams, run once at stream
+    start for each ``{part: model}``: an absent part is written; a
+    present one must read back equal to the wanted model, else raise
+    ``DIFFERENT {what}`` (appending rows under another model silently
+    corrupts the index). A present part that cannot be read raises
+    ``UNREADABLE`` — FAIL CLOSED: a torn or corrupt model write must not
+    disable the mismatch guard, since the stream cannot tell its own
+    partial write from someone else's model. Repair is offline."""
+    for part, model in models.items():
+        fs, p = _hadoop_fs(spark, f"{path}/{part}")
+        if not fs.exists(p):
+            _write_models(spark, path, {part: model})
+            continue
+        want = _model_from_rows(part, _model_rows(part, model))
+        try:
+            got = _read_model(spark, path, part)
+        except Exception as exc:
+            raise ValueError(
+                f"{who}: UNREADABLE model file at {path}/{part} — cannot "
+                "verify the frozen-model contract; repair or clear the path"
+            ) from exc
+        if got != want:
+            raise ValueError(
+                f"{who}: {path!r} already holds a DIFFERENT {what} — "
+                "mixing models silently corrupts the index; rebuild "
+                "offline or point at a fresh path"
+            )
+
+
 def load_pq_index(
     spark: SparkSession, index_path: str, apply_tombstones: bool = True
 ) -> tuple[DataFrame, list[list[int]], list[list[list[int]]]]:
@@ -2409,31 +2447,18 @@ def load_pq_index(
     its name, length and modification time; every writer in this
     package writes new part files. The listing costs about 1 ms per
     file on a local filesystem (6-8 ms for the 8 files of a saved index
-    with tombstones, 4-core host), where an uncached load runs 9 Spark
-    jobs, 10 with tombstones."""
+    with tombstones, 4-core host), where an uncached load runs 5 Spark
+    jobs, 6 with tombstones (a schema read and a collect per model part,
+    a schema read each for the assignments and tombstones)."""
     return _fresh_index_load(spark, index_path, apply_tombstones, _read_pq_index)
 
 
 def _read_pq_index(
     spark: SparkSession, index_path: str, apply_tombstones: bool
 ) -> tuple[DataFrame, list[list[int]], list[list[list[int]]]]:
-    cents6 = [
-        [int(x) for x in r["c6"]]
-        for r in spark.read.parquet(f"{index_path}/cents6")
-        .orderBy("cell")
-        .collect()
-    ]
-    braw = (
-        spark.read.parquet(f"{index_path}/books6")
-        .orderBy("subspace", "code")
-        .collect()
-    )
-    n_sub = 1 + max(r["subspace"] for r in braw)
-    books6: list[list[list[int]]] = [[] for _ in range(n_sub)]
-    for r in braw:
-        books6[r["subspace"]].append([int(x) for x in r["c6"]])
-    idx = _live_assignments(spark, index_path, apply_tombstones)
-    return idx, cents6, books6
+    cents6 = _read_model(spark, index_path, "cents6")
+    books6 = _read_model(spark, index_path, "books6")
+    return _live_assignments(spark, index_path, apply_tombstones), cents6, books6
 
 
 def bq_index_stream(
@@ -2458,79 +2483,29 @@ def bq_index_stream(
     bytes per row — is the only thing the Hamming serving scan ever
     reads.
 
-    BOTH models are FROZEN at stream start and persisted beside the
-    index (``cents6/`` and ``bqmodel/`` parquet — the per-dim sums AND
-    the training count n, since the bit test scales by n): a restart
-    against the same ``index_path`` with a different quantizer OR
-    threshold model raises (reconstructed from ALL stored rows — a
-    stored model that is a strict superset of the wanted one fails
-    too, the r13-ADVICE rule); an existing-but-UNREADABLE model file
-    also raises (fail closed). Re-thresholding is an offline rebuild.
+    BOTH models are FROZEN at stream start by :func:`_freeze_models`
+    and persisted beside the index in the :func:`_write_models` layout
+    that ``save_bq_index`` also writes (the threshold model is the
+    per-dim sums AND the training count n, since the bit test scales by
+    n): a restart against the same ``index_path`` with a different
+    quantizer OR threshold model raises (reconstructed from ALL stored
+    rows — a stored model that is a strict superset of the wanted one
+    fails too); an existing-but-UNREADABLE model file also raises (fail
+    closed). Re-thresholding is an offline rebuild.
     Load with :func:`load_bq_index`; tombstone deletes + compaction
     reuse the X166 utilities unchanged (they are payload-agnostic —
     assignments + tombstones dirs, any code schema)."""
     from ..operators.similarity import assign_cells_l2q, bq_encode
 
-    dim = len(sums6)
-    if dim < 1:
+    if len(sums6) < 1:
         raise ValueError("bq_index_stream: sums6 must be non-empty")
     if n_fit < 1:
         raise ValueError(f"bq_index_stream: n_fit={n_fit} < 1")
-    spark = stream_df.sparkSession
-    want_c = [[int(x) for x in c] for c in cents6]
-    want_m = ([int(s) for s in sums6], int(n_fit))
-    for sub_path, kind in (
-        (f"{index_path}/cents6", "cents"),
-        (f"{index_path}/bqmodel", "model"),
-    ):
-        fs, p = _hadoop_fs(spark, sub_path)
-        if fs.exists(p):
-            try:
-                df = spark.read.parquet(sub_path)
-                if kind == "cents":
-                    got = [
-                        [int(x) for x in r["c6"]]
-                        for r in df.orderBy("cell").collect()
-                    ]
-                    ok = got == want_c
-                else:
-                    rows = df.collect()
-                    by_d = {int(r["d"]): int(r["s6"]) for r in rows}
-                    ns = {int(r["n"]) for r in rows}
-                    # reconstruct from ALL stored rows: extra or
-                    # missing dimensions, duplicate d, or a second n
-                    # all fail — never a prefix pass
-                    ok = (
-                        len(by_d) == len(rows)
-                        and sorted(by_d) == list(range(len(by_d)))
-                        and (
-                            [by_d[d] for d in range(len(by_d))],
-                            ns.pop() if len(ns) == 1 else -1,
-                        )
-                        == want_m
-                    )
-            except Exception as exc:
-                raise ValueError(
-                    f"bq_index_stream: UNREADABLE model file at "
-                    f"{sub_path!r} — cannot verify the frozen-model "
-                    "contract; repair or clear the index path"
-                ) from exc
-            if not ok:
-                raise ValueError(
-                    "bq_index_stream: index_path already holds a "
-                    "DIFFERENT quantizer/threshold model — mixing "
-                    "models silently corrupts the index; rebuild "
-                    "offline or point at a fresh path"
-                )
-        elif kind == "cents":
-            spark.createDataFrame(
-                list(enumerate(want_c)), "cell int, c6 array<long>"
-            ).coalesce(1).write.mode("overwrite").parquet(sub_path)
-        else:
-            spark.createDataFrame(
-                [(d, want_m[0][d], want_m[1]) for d in range(dim)],
-                "d int, s6 long, n long",
-            ).coalesce(1).write.mode("overwrite").parquet(sub_path)
+    _freeze_models(
+        stream_df.sparkSession, index_path,
+        {"cents6": cents6, "bqmodel": (sums6, n_fit)},
+        "bq_index_stream", "quantizer/threshold model",
+    )
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         coded = assign_cells_l2q(
@@ -2543,14 +2518,7 @@ def bq_index_stream(
         )
         _append_batch(coded, f"{index_path}/assignments", batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, apply, checkpoint)
 
 
 def load_bq_index(
@@ -2578,15 +2546,8 @@ def load_bq_index(
 def _read_bq_index(
     spark: SparkSession, index_path: str, apply_tombstones: bool
 ) -> tuple[DataFrame, list[list[int]], list[int], int]:
-    cents6 = [
-        [int(x) for x in r["c6"]]
-        for r in spark.read.parquet(f"{index_path}/cents6")
-        .orderBy("cell")
-        .collect()
-    ]
-    mrows = spark.read.parquet(f"{index_path}/bqmodel").orderBy("d").collect()
-    sums6 = [int(r["s6"]) for r in mrows]
-    n_fit = int(mrows[0]["n"])
+    cents6 = _read_model(spark, index_path, "cents6")
+    sums6, n_fit = _read_model(spark, index_path, "bqmodel")
     idx = _live_assignments(spark, index_path, apply_tombstones)
     return idx, cents6, sums6, n_fit
 
@@ -2612,49 +2573,18 @@ def kmeans_state_stream(
     full-union recompute bit-for-bit (exact integers make the merge
     associative; parity pinned by test).
 
-    The quantizer is FROZEN at stream start: a restart against the same
+    The quantizer is FROZEN at stream start by :func:`_freeze_models`,
+    in the index layout's centroid part: a restart against the same
     ``state_path`` with DIFFERENT centroids raises rather than silently
-    merging statistics computed under two metrics. Re-clustering is an
+    merging statistics computed under two metrics, and an
+    existing-but-UNREADABLE centroid file raises too (fail closed).
+    Re-clustering is an
     offline decision — X47's PSI drift monitor gates WHEN, the merged
     state makes the refit itself a collect-and-divide."""
-    spark = stream_df.sparkSession
-    cent_path = f"{state_path}/cents6"
-    fs, cpath = _hadoop_fs(spark, cent_path)
-    want = [[int(x) for x in c] for c in cents6]
-    if fs.exists(cpath):
-        try:
-            existing = [
-                list(r["c6"])
-                for r in spark.read.parquet(cent_path)
-                .orderBy("cell")
-                .collect()
-            ]
-        except Exception as exc:
-            # FAIL CLOSED (r12 ADVICE): an existing-but-unreadable
-            # centroid file means a partial/corrupt write — proceeding
-            # without the mismatch guard could append statistics under
-            # a DIFFERENT quantizer, exactly the corruption the guard
-            # exists to stop. The operator cannot tell "torn write of
-            # my own centroids" from "someone else's model", so it
-            # refuses; the operator repairs by clearing cents6/ (or the
-            # whole state_path) offline.
-            raise ValueError(
-                "kmeans_state_stream: state_path holds an UNREADABLE "
-                f"centroid file ({cent_path!r}) — cannot verify the "
-                "frozen-quantizer contract; repair or clear the state "
-                "path before streaming"
-            ) from exc
-        if existing != want:
-            raise ValueError(
-                "kmeans_state_stream: state_path already holds "
-                "statistics under a DIFFERENT quantizer — merging two "
-                "metrics corrupts the state; refit offline and point "
-                "at a fresh path"
-            )
-    if not fs.exists(cpath):
-        spark.createDataFrame(
-            list(enumerate(want)), "cell int, c6 array<long>"
-        ).coalesce(1).write.mode("overwrite").parquet(cent_path)
+    _freeze_models(
+        stream_df.sparkSession, state_path, {"cents6": cents6},
+        "kmeans_state_stream", "quantizer",
+    )
 
     from ..operators.similarity import kmeans_state
 
@@ -2662,14 +2592,7 @@ def kmeans_state_stream(
         st = kmeans_state(batch_df, cents6, vec_col=vec_col, id_col=id_col)
         _append_batch(st, f"{state_path}/states", batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, apply, checkpoint)
 
 
 def load_kmeans_state(
@@ -2680,12 +2603,7 @@ def load_kmeans_state(
     for ``operators.similarity.kmeans_refit``."""
     from ..operators.similarity import merge_kmeans_states
 
-    cents6 = [
-        [int(x) for x in r["c6"]]
-        for r in spark.read.parquet(f"{state_path}/cents6")
-        .orderBy("cell")
-        .collect()
-    ]
+    cents6 = _read_model(spark, state_path, "cents6")
     states = spark.read.parquet(f"{state_path}/states").select(
         "cell", "n", "sums"
     )

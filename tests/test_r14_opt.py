@@ -18,6 +18,7 @@ Covered here:
 from __future__ import annotations
 
 import random
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -384,6 +385,27 @@ def test_inline_rows_df_matches_create_dataframe(spark):
         f.dataType for f in b.schema.fields
     ]
     assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
+    # array columns (the persisted model parts): same dataTypes, and
+    # doubles keep their exact bits
+    arows = [
+        (0, [2**62, -1, 0], [0.1, -1e-300, 2.0 / 3.0]),
+        (1, None, [5e-324, -0.0]),
+        (2, [7], None),
+    ]
+    afields = [("k", "INT"), ("c6", "ARRAY<BIGINT>"), ("v", "ARRAY<DOUBLE>")]
+    a = inline_rows_df(spark, arows, afields)
+    b = spark.createDataFrame(arows, "k int, c6 array<long>, v array<double>")
+    assert [f.dataType for f in a.schema.fields] == [
+        f.dataType for f in b.schema.fields
+    ]
+    assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
+    got = {r["k"]: r["v"] for r in a.collect()}
+    for k, _, v in arows:
+        assert (got[k] is None) == (v is None)
+        if v is not None:
+            assert [struct.pack(">d", x) for x in got[k]] == [
+                struct.pack(">d", x) for x in v
+            ]
     # floats round-trip to the same bits
     x = inline_rows_df(spark, [(3.141592653589793,)], [("x", "DOUBLE")])
     assert x.first()["x"] == 3.141592653589793

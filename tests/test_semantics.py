@@ -2400,10 +2400,10 @@ def test_pq_index_load_job_counts(spark, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    assert jobs("first") == 9
+    assert jobs("first") == 5
     assert jobs("warm") == 0
     pq_index_delete(path, spark.range(3).toDF("vec_id"))
-    assert jobs("after_delete") == 10
+    assert jobs("after_delete") == 6
     assert jobs("warm_again") == 0
 
 

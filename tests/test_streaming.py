@@ -1724,6 +1724,7 @@ def test_ivf_index_stream_parity_replay_and_guard(spark, tmp_path):
         ann_join,
         build_ivf_index,
         load_ivf_index,
+        save_ivf_index,
         train_ivf_cells,
     )
     from alphavantage_etl_spark.sources import load
@@ -1804,8 +1805,52 @@ def test_ivf_index_stream_parity_replay_and_guard(spark, tmp_path):
     with pytest.raises(ValueError, match="DIFFERENT centroid"):
         ivf_index_stream(stream, other, index, str(tmp_path / "ckpt2"))
 
+    # saved-then-streamed: save_ivf_index writes the model layout the
+    # stream freeze-checks, and both paths load the same centroids
+    saved = str(tmp_path / "ivf_saved")
+    save_ivf_index(streamed2.select("vec_id", "__cell"), cents, saved)
+    assert load_ivf_index(spark, saved)[1] == loaded_cents
+    tiny = str(tmp_path / "tiny_in")
+    queries.select("vec_id", "embedding").coalesce(1).write.parquet(tiny)
+    stream = spark.readStream.schema(schema).parquet(tiny)
+    ivf_index_stream(stream, cents, saved, str(tmp_path / "ckpt3"))
+    with pytest.raises(ValueError, match="DIFFERENT centroid"):
+        ivf_index_stream(stream, other, saved, str(tmp_path / "ckpt4"))
 
-@pytest.mark.slow
+
+def test_ivf_index_stream_fails_closed_on_unreadable_centroids(
+    spark, tmp_path
+):
+    """An existing-but-corrupt centroid file under an IVF stream index
+    makes the next ivf_index_stream raise UNREADABLE: it cannot verify
+    the frozen quantizer, so it must not append assignments under
+    whatever centroids the caller passed."""
+    import glob
+    import os
+
+    from alphavantage_etl_spark.streaming.pipeline import ivf_index_stream
+
+    schema = "vec_id long, embedding array<float>"
+    in_dir = str(tmp_path / "emb_in")
+    spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)], schema
+    ).coalesce(1).write.parquet(in_dir)
+    index = str(tmp_path / "ivf")
+
+    def drain(ckpt):
+        stream = spark.readStream.schema(schema).parquet(in_dir)
+        ivf_index_stream(stream, [[0.0, 1.0], [5.0, 1.0]], index,
+                         str(tmp_path / ckpt))
+
+    drain("ckpt0")
+    for part in glob.glob(f"{index}/centroids/*.parquet"):
+        with open(part, "wb") as fh:
+            fh.write(b"not parquet")
+    with pytest.raises(ValueError, match="UNREADABLE"):
+        drain("ckpt1")
+    assert not os.path.exists(str(tmp_path / "ckpt1"))
+
+
 def test_kmeans_state_stream_parity_replay_and_guard(spark, tmp_path):
     """X149 streaming twin: the merged streamed state refits to exactly
     what a full-union recompute gives (exact integers -> associative
@@ -1891,7 +1936,6 @@ def test_kmeans_state_stream_parity_replay_and_guard(spark, tmp_path):
         drain()
 
 
-@pytest.mark.slow
 def test_pq_index_stream_parity_replay_guards(spark, tmp_path):
     """X159 (streaming twin of X157): the streamed CODED index equals
     assign+encode over the union of batches bit-for-bit, ann_join_pq
@@ -1909,6 +1953,7 @@ def test_pq_index_stream_parity_replay_guards(spark, tmp_path):
         ann_join_pq,
         assign_cells_l2q,
         pq_encode_exact,
+        save_pq_index,
     )
     from alphavantage_etl_spark.queries import (
         _learned_cents_shared,
@@ -2003,6 +2048,18 @@ def test_pq_index_stream_parity_replay_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="DIFFERENT quantizer/codebook"):
         drain(books=other)
 
+    # saved-then-streamed: save_pq_index writes the model layout the
+    # stream freeze-checks, and both paths load the same models
+    saved = str(tmp_path / "pq_saved")
+    save_pq_index(idx2, cents6, books6, saved)
+    assert load_pq_index(spark, saved)[1:] == (cents6, books6)
+    tiny = str(tmp_path / "tiny_in")
+    queries.select("vec_id", "embedding").coalesce(1).write.parquet(tiny)
+    stream = spark.readStream.schema(schema).parquet(tiny)
+    pq_index_stream(stream, cents6, books6, saved, str(tmp_path / "ck_s"))
+    with pytest.raises(ValueError, match="DIFFERENT quantizer/codebook"):
+        pq_index_stream(stream, cents6, other, saved, str(tmp_path / "ck_o"))
+
     # r13 ADVICE: a stored codebook that is a strict SUPERSET of the
     # wanted one (prefix matches, extra subspace appended) must fail
     # the guard too — the old range-sliced reconstruction let it pass,
@@ -2032,7 +2089,6 @@ def test_pq_index_stream_parity_replay_guards(spark, tmp_path):
         drain()
 
 
-@pytest.mark.slow
 def test_bq_index_stream_parity_replay_guards(spark, tmp_path):
     """X169 (streaming twin of X167): the streamed BIT index equals
     assign+encode over the union of batches bit-for-bit, ann_join_bq
@@ -2053,6 +2109,7 @@ def test_bq_index_stream_parity_replay_guards(spark, tmp_path):
         bq_encode,
         bq_fit,
         pq_index_delete,
+        save_bq_index,
     )
     from alphavantage_etl_spark.queries import _learned_cents_shared
     from alphavantage_etl_spark.sources import load
@@ -2154,6 +2211,20 @@ def test_bq_index_stream_parity_replay_guards(spark, tmp_path):
         sums6=sums6, n_fit=n_fit,
     ).collect():
         assert r["corpus_id"] not in doomed_ids
+
+    # saved-then-streamed: save_bq_index writes the model layout the
+    # stream freeze-checks, and both paths load the same models
+    saved = str(tmp_path / "bq_saved")
+    save_bq_index(idx2, cents6, sums6, n_fit, saved)
+    assert load_bq_index(spark, saved)[1:] == (lc, ls, ln)
+    tiny = str(tmp_path / "tiny_in")
+    queries.select("vec_id", "embedding").coalesce(1).write.parquet(tiny)
+    stream = spark.readStream.schema(schema).parquet(tiny)
+    bq_index_stream(stream, cents6, sums6, n_fit, saved, str(tmp_path / "ck_s"))
+    with pytest.raises(ValueError, match="DIFFERENT quantizer/threshold"):
+        bq_index_stream(
+            stream, cents6, sums6, n_fit + 1, saved, str(tmp_path / "ck_o")
+        )
 
     # frozen-model guards: different sums, different n, superset model
     with pytest.raises(ValueError, match="DIFFERENT quantizer/threshold"):
