@@ -14,12 +14,8 @@ from .dedup import (
 )
 from .similarity import (
     cosine_topk,
-    cosine_topk_lsh,
     embedding_near_dups,
-    hyperplane_weights,
-    ivf_topk,
     label_centroids,
-    lsh_bucket,
     train_ivf_cells,
 )
 from .sampling import (
@@ -62,12 +58,8 @@ __all__ = [
     "ngram_jaccard_pairs",
     "release",
     "cosine_topk",
-    "cosine_topk_lsh",
     "embedding_near_dups",
-    "hyperplane_weights",
-    "ivf_topk",
     "label_centroids",
-    "lsh_bucket",
     "train_ivf_cells",
     "budget_mix",
     "calibrate_by_group",

@@ -1,17 +1,32 @@
-"""Top-k vector similarity search (X3) — brute-force baseline + LSH scale path.
+"""Vector similarity search (X3): a brute-force baseline and exact,
+oracle-checkable retrieval tiers.
 
-Brute force: cosine against the query vector via native array expressions
-(functions.vectors) and ``ORDER BY sim DESC LIMIT k`` — Catalyst plans that
-as TakeOrderedAndProject: each partition keeps a k-heap, the driver merges
-heaps; no global sort ever materializes. At 100 TB this is a full scan but
-a perfectly parallel one — the right baseline to verify recall against.
+Brute force: :func:`cosine_topk` scores the query against every vector via
+native array expressions (functions.vectors) and ``ORDER BY sim DESC LIMIT
+k`` — Catalyst plans that as TakeOrderedAndProject: each partition keeps a
+k-heap, the driver merges heaps; no global sort ever materializes. At 100 TB
+this is a full scan but a perfectly parallel one — the right baseline to
+verify recall against. :func:`embedding_near_dups` is the pairwise twin:
+cosine near-duplicate pairs within blocks (labels, or IVF cells trained by
+:func:`train_ivf_cells` when no block column is given).
 
-Scale path: random-hyperplane LSH bucketing (SimHash for vectors). Each
-vector hashes to a b-bit signature from fixed pseudo-random hyperplanes
-(deterministic per-dimension xxhash-derived weights — no stored model);
-candidates = query's bucket (plus Hamming-adjacent probes), cosine is
-evaluated only inside the candidate set. Recall/cost is tuned by (bits,
-probes) without changing the plan shape.
+Retrieval tiers, each trained on the u6 integer grid so every model and
+ranking replays exactly in DuckDB:
+
+- exact IVF: :func:`kmeans_fit_quantized` cells, :func:`assign_cells_l2q`
+  and :func:`ann_join` (candidates from shared cells, exact cosine rerank);
+- PQ: :func:`pq_fit_exact` / :func:`pq_encode_exact` and integer-ADC
+  :func:`ann_join_pq`;
+- SQ8: :func:`sq8_fit` / :func:`sq8_encode` and :func:`ann_join_sq8`;
+- BQ: :func:`bq_fit` / :func:`bq_index` and Hamming :func:`ann_join_bq`;
+- :func:`topk_exact_rerank` turns any coded tier's shortlist into exact
+  cosine top-k (``ann_join_sq8_rerank``, ``ann_join_bq_rerank``).
+
+Persisted indexes: ``save_ivf_index`` / ``save_pq_index`` /
+``save_bq_index`` write a model plus flat ``assignments/`` that the
+``streaming.pipeline`` loaders serve (its index streams build the same
+layout batch by batch); ``pq_index_delete`` / ``pq_index_compact``
+tombstone and fold rows.
 """
 
 from __future__ import annotations
@@ -351,39 +366,6 @@ def _assign_cells(
     return out
 
 
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int,
-    centroids: list[list[float]],
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """IVF search: score only vectors assigned to the ``n_probe`` cells
-    nearest the query. With |D|/n_cells vectors per cell the scoring work
-    drops ~n_cells/n_probe-fold; recall is the classic IVF trade-off,
-    tuned by n_probe without changing the plan. Assignment is recomputed
-    here for self-containment — production persists the (id, cell) table
-    at ingest and this becomes a partition-pruned scan.
-    """
-    import math
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot_ = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot_ / (na * nb) if na > 0 and nb > 0 else 0.0
-
-    probe = sorted(
-        range(len(centroids)), key=lambda c: -cos(query_vec, centroids[c])
-    )[:n_probe]
-    assigned = _assign_cells(df, centroids, vec_col)
-    cand = assigned.where(F.col("__cell").isin(probe)).drop("__cell")
-    return cosine_topk(cand, query_vec, k, vec_col, id_col, round_to)
-
-
 def _cell_scores(
     vec: Column,
     norm: Column,
@@ -525,8 +507,8 @@ def ann_join(
     ``(query_id, corpus_id, sim, rank)``, rank 1..k by (sim desc,
     corpus_id) — ties and scores deterministic via ``round_to``.
 
-    Scale shape (the reason this is not ``ivf_topk`` in a loop): the
-    corpus — the 100 TB side — crosses exactly ONE equi-join on the
+    Scale shape (the reason this is not a per-query top-k in a loop):
+    the corpus — the 100 TB side — crosses exactly ONE equi-join on the
     cell id against the exploded query×probe frame (|Q| × n_probe
     rows; the planner broadcasts it from stats, unhinted per the
     engine's no-forced-broadcast rule), so the corpus is never
@@ -534,9 +516,8 @@ def ann_join(
     n_probe × cell_size with cells-∝-N sizing), and the final top-k
     window shuffles candidates alone on the query id. Recall is the
     IVF trade, tuned by ``n_probe`` without changing the plan; a hot
-    cell skews the candidate join the same way it skews ``ivf_topk``
-    — resize with cells-∝-N (:func:`resolve_n_cells`) before reaching
-    for salting.
+    cell skews the candidate join — resize with cells-∝-N
+    (:func:`resolve_n_cells`) before reaching for salting.
 
     ``corpus_cells`` (an ``(id_col, __cell)`` frame from
     :func:`build_ivf_index` / :func:`load_ivf_index`) skips the
@@ -1222,10 +1203,9 @@ def kmeans_fit_quantized(
             "kmeans_fit_quantized: init vectors disagree on dimensionality"
         )
     # NO spread_scan on this checkpoint (r14, measured): although the
-    # frame is reused by every Lloyd iteration (the train_pq_codebooks
-    # amortization class), the per-row integer fold here is too cheap
-    # for 32-task scheduling to beat the single-split read — the A/B
-    # measured q_kmeans_fit 2.9 -> 4.3 s WITH the spread. (A
+    # frame is reused by every Lloyd iteration, the per-row integer fold
+    # here is too cheap for 32-task scheduling to beat the single-split
+    # read — the A/B measured q_kmeans_fit 2.9 -> 4.3 s WITH the spread. (A
     # quantize-once checkpoint of the (id, q6) frame was also tried and
     # measured flat on the hd fixture / ~0.7 s WORSE on the wide form —
     # reverted.) The exact integer update is partition-immune either
@@ -1261,9 +1241,8 @@ def pq_fit_exact(
     residual_cents6: list[list[int]] | None = None,
 ) -> DataFrame:
     """EXACT per-subspace product-quantization codebook fit (X156) —
-    the oracle-checkable twin of :func:`train_pq_codebooks` (float
-    means, xxhash-ordered init — fine for training, impossible to pin
-    cross-engine) and the SECOND high-dim strategy the
+    integer means and a min-(id, slice) init, so every codebook replays
+    cross-engine — and the SECOND high-dim strategy the
     :func:`kmeans_fit_quantized` ceiling names, composed as a single
     callable: the vector splits into ``m`` contiguous subspaces of
     ``dim/m`` components; each subspace gets its own independent
@@ -1495,7 +1474,7 @@ def ann_join_pq(
     trade: distances are approximations of the true L2 (exact only to
     the reconstruction), tuned by m/codes without changing the plan;
     compose with a raw-vector rerank of the top-k' when exactness
-    matters (the pq_topk_rerank pattern).
+    matters (:func:`topk_exact_rerank`, as ``q_pq_rerank`` does).
 
     ``residual_cents6`` (X164): serve a RESIDUAL-coded index (built
     with the same ``cents6`` via :func:`pq_fit_exact` /
@@ -1878,9 +1857,8 @@ def ann_join_sq8_rerank(
     2/3/4, INVARIANT to shortlist width 3..20, because the fixture's
     near-uniform norms make the MIPS candidate order nearly cosine
     order within probed cells; on a norm-skewed corpus (where MIPS
-    and cosine genuinely disagree) ``k_shortlist`` becomes the lever,
-    exactly as ``pq_topk_rerank``'s 0.3 -> 0.8 showed for ADC. Either
-    way the rerank makes the RETURNED scores exact cosine. Returns
+    and cosine genuinely disagree) ``k_shortlist`` becomes the lever.
+    Either way the rerank makes the RETURNED scores exact cosine. Returns
     ``(query_id, corpus_id, sim, rank)``."""
     if k_shortlist < k:
         raise ValueError(
@@ -2396,8 +2374,9 @@ def save_ivf_index(
     ``{path}/assignments`` and the centroid model state (small — cells
     × dim doubles) beside it, written by ``streaming.pipeline.
     _write_models`` — the one model layout that ``ivf_index_stream``
-    also writes and freeze-checks. Plain parquet, no sidecar format —
-    readable by any engine.
+    also writes; the stream refuses to append to the flat assignments
+    written here. Plain parquet, no sidecar format — readable by any
+    engine.
 
     ``partition_by_cell=True`` lays the assignment table out as one
     directory per ``__cell`` — the 100 TB serving layout: a probe join
@@ -2433,8 +2412,8 @@ def save_pq_index(
     ``{path}/assignments`` and the two frozen models (quantizer and
     codebook, each O(model) in one file) beside it, written by
     ``streaming.pipeline._write_models`` — the one model layout the
-    stream also writes, and against which a later ``pq_index_stream``
-    on this path checks its models (fail closed).
+    stream also writes. The assignments are flat part files, so
+    ``pq_index_stream`` refuses to append to this path.
 
     This is the X157 contract's ingest half made storable in batch:
     codes joined once at ingest, so SERVING loads this index and never
@@ -2464,7 +2443,8 @@ def save_bq_index(
     and the two frozen models beside it (quantizer; per-dim threshold
     sums AND the training count n — each O(model) in one file), written
     by ``streaming.pipeline._write_models``, the one model layout the
-    stream also writes and freeze-checks. Serving loads this index
+    stream also writes; ``bq_index_stream`` refuses to append to the
+    flat assignments written here. Serving loads this index
     and never touches the raw vector column (:func:`ann_join_bq` over
     the loaded frame); the X166 tombstone utilities apply unchanged.
     Plain parquet, no sidecar format."""
@@ -2515,7 +2495,8 @@ def pq_index_compact(spark, index_path: str) -> tuple[int, int]:
     """Fold tombstones into a stored coded index (X166): rewrite
     ``{index_path}/assignments`` minus the tombstoned ids, then drop
     the tombstone set — returns ``(kept, dropped)``. No-op ``(n, 0)``
-    when no tombstones exist.
+    when no tombstones exist. The rewritten assignments are flat part
+    files, so an index stream refuses the path afterwards.
 
     The rewrite goes through a temp dir + rename swap (write
     ``assignments__compact``, remove the old dir, rename into place),
@@ -3181,374 +3162,6 @@ def mmr_rerank(
         F.col("__p.c").alias(id_col),
         F.col("__p.rel").alias(rel_col),
         F.col("__p.rank").alias("rank"),
-    )
-
-
-_WEIGHT_CACHE: dict[tuple[int, int], list[int]] = {}
-
-
-def hyperplane_weights(spark, bits: int = 16, dim: int = 64) -> list[int]:
-    """The bits*dim deterministic +/-1 hyperplane weights, fetched once.
-
-    Weight (h, d) is ``getbit(xxhash64(h*dim + d), 0) * 2 - 1`` — the same
-    derivation ``lsh_bucket`` previously evaluated inline per element, so
-    bucket ids are bit-identical to the in-expression form. Materializing
-    them is a one-time bits*dim-row driver job (bounded model state, like
-    the IVF centroids), cached per (bits, dim) for the process lifetime.
-    """
-    key = (bits, dim)
-    if key not in _WEIGHT_CACHE:
-        # id is collected alongside w and the list is sorted driver-side:
-        # collect() returning range order is a convention of local mode,
-        # not a guarantee — a reordered collect would silently change
-        # every LSH bucket and break the pinned inline-form equality.
-        rows = spark.range(bits * dim).select(
-            "id",
-            (F.getbit(F.xxhash64(F.col("id").cast("int")), F.lit(0)) * 2 - 1).alias(
-                "w"
-            ),
-        )
-        _WEIGHT_CACHE[key] = [
-            w for _, w in sorted((r["id"], r["w"]) for r in rows.collect())
-        ]
-    return _WEIGHT_CACHE[key]
-
-
-def lsh_bucket(
-    vec_col: Column | str,
-    bits: int = 16,
-    dim: int = 64,
-    weights: list[int] | None = None,
-) -> Column:
-    """Random-hyperplane LSH bucket id (integer in [0, 2^bits)).
-
-    Hyperplane h's weight for dimension d is a deterministic +/-1 derived
-    from xxhash64(h * dim + d) — reproducible across runs and engines, no
-    model artifact to ship. sign(v . h) per plane -> one bit.
-
-    Pass ``weights`` (from :func:`hyperplane_weights`) to inline them as
-    literal arrays: the per-element ``xxhash64``+``getbit`` work (bits*dim
-    hashes per row) disappears and only the zip_with/aggregate dot product
-    remains — measured 0.59 s -> 0.33 s warm, 1.4 s -> 0.4 s cold at sf0.1.
-    (A fully unrolled codegen sum measured SLOWER, 0.75 s warm — the
-    1024-term expression tree beats neither; a Pandas-UDF matmul wins warm,
-    0.22 s, but pays Python-worker startup and ships the vector column
-    through Arrow — the JVM-side literal form is the default path.)
-    Bucket values are identical with and without ``weights``.
-    """
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if weights is None:
-        plane_bits = F.transform(
-            F.sequence(F.lit(0), F.lit(bits - 1)),
-            lambda h: F.when(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.sequence(h * dim, h * dim + (dim - 1)),
-                        lambda x, seed: x.cast("double")
-                        * (F.getbit(F.xxhash64(seed), F.lit(0)) * 2 - 1).cast(
-                            "double"
-                        ),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                > 0,
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        return F.aggregate(
-            plane_bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
-        )
-    bucket = F.lit(0).cast("long")
-    for h in range(bits):
-        wlit = sql_array_lit([float(w) for w in weights[h * dim : (h + 1) * dim]])
-        s = F.aggregate(
-            F.zip_with(v, wlit, lambda x, w: x.cast("double") * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(s > 0, F.lit(1)).otherwise(F.lit(0)).cast(
-            "long"
-        ) * F.lit(1 << (bits - 1 - h))
-    return bucket
-
-
-def cosine_topk_lsh(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bits: int = 8,
-    n_probe: int = 1,
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's LSH bucket plus
-    the ``n_probe - 1`` most promising neighbor buckets (multi-probe).
-
-    With 2^bits buckets the scan's scoring work drops ~2^bits-fold; recall
-    is recovered not by more hash tables but by probing the buckets that
-    differ in the planes the query is CLOSEST to (smallest |dot| margin —
-    the Lv et al. multi-probe ordering): a near neighbor that fell on the
-    other side of a knife-edge plane is in exactly such a bucket.
-
-    All probe selection happens DRIVER-side: the query's per-plane margins
-    are plain Python arithmetic over the same literal weights the JVM fold
-    uses, in the same left-to-right summation order, so the computed home
-    bucket is bit-identical to ``lsh_bucket``'s (pinned by test) — no
-    Spark job runs for the query, and the probe set reaches the scan as a
-    literal IN-list the reader can use for pushdown on a bucketed layout.
-
-    Callers needing guaranteed k rows should union with the brute-force
-    path on the residual.
-    """
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    dim = len(query_vec)
-    w = hyperplane_weights(df.sparkSession, bits, dim)
-    # per-plane signed margins of the query — same op order as the JVM fold
-    margins = [
-        sum(float(query_vec[d]) * w[h * dim + d] for d in range(dim))
-        for h in range(bits)
-    ]
-    home = sum(1 << (bits - 1 - h) for h in range(bits) if margins[h] > 0)
-    probes = [home]
-    for h in sorted(range(bits), key=lambda h: abs(margins[h])):
-        if len(probes) >= n_probe:
-            break
-        probes.append(home ^ (1 << (bits - 1 - h)))
-    bucketed = df.withColumn("__bucket", lsh_bucket(vec_col, bits, dim, weights=w))
-    cand = bucketed.where(F.col("__bucket").isin(probes)).drop("__bucket")
-    return cosine_topk(cand, query_vec, k, vec_col, id_col, round_to)
-
-
-def _l2_normalize(col: Column) -> Column:
-    """v / |v| as an array expression; zero vectors pass through unscaled
-    (their cosine against anything is 0 anyway).
-
-    The norm rides in via ``zip_with`` against an ``array_repeat``
-    carrier instead of being captured by a ``transform`` lambda: a
-    captured aggregate re-evaluates PER ELEMENT (the CDC bounds-hoist
-    trap — O(dim^2) per evaluation, measured 68 s single-task in
-    q_cosine_topk_pq's encode where the whole expression additionally
-    re-evaluated per (subspace, code)), while a zip_with ARGUMENT
-    evaluates once. Division order and values are unchanged."""
-    norm = F.sqrt(F.aggregate(col, F.lit(0.0), lambda a, x: a + x * x))
-    return F.when(
-        norm > 0,
-        F.zip_with(col, F.array_repeat(norm, F.size(col)), lambda x, n: x / n),
-    ).otherwise(col)
-
-
-def train_pq_codebooks(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[list[float]]]:
-    """Product-quantization codebooks: the vector space splits into ``m``
-    subspaces; each gets its own ``k``-centroid quantizer trained on the
-    L2-NORMALIZED corpus (so inner products of reconstructions approximate
-    cosine). Returns ``codebooks[m][k][dim/m]`` — model state, a few KB.
-
-    One shuffle per Lloyd iteration for ALL subspaces at once: every
-    vector explodes into m (subspace, code, slice) structs, partial sums
-    aggregate per (subspace, code). Init is the same deterministic
-    hash-ordered sample the IVF trainer uses. Train on a sample at scale —
-    the codebooks are tiny and the assignment below is a narrow map.
-    """
-    head = df.select(vec_col).first()
-    if head is None:
-        raise ValueError("train_pq_codebooks: empty input frame")
-    dim = len(head[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    from ..functions.parallelism import spread_scan
-
-    # spread + checkpoint ONCE before the loop: every Lloyd iteration
-    # re-reads this frame for a CPU-heavy m x k argmin fan-out that a
-    # single-file scan would otherwise pin to one task (the
-    # bootstrap/perm-test spread_scan class — one narrow materialization
-    # feeding repeated heavy derivations), and the checkpoint keeps the
-    # exchange from repeating per iteration (r14)
-    normed = (
-        spread_scan(
-            df.select(_l2_normalize(F.col(vec_col)).alias("__v"), F.col(id_col))
-        )
-        .localCheckpoint()
-    )
-    seed_rows = normed.orderBy(F.xxhash64(F.col(id_col))).limit(k).collect()
-    if len(seed_rows) < k:
-        raise ValueError(
-            f"train_pq_codebooks: need >= k={k} vectors to seed each "
-            f"subspace quantizer, got {len(seed_rows)} (lower k or add data)"
-        )
-    books = [
-        [[float(x) for x in r["__v"][s * d_sub : (s + 1) * d_sub]] for r in seed_rows]
-        for s in range(m)
-    ]
-    for _ in range(iters):
-        stacked = normed.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("sub"),
-                            _pq_code("__v", books[s], s, d_sub).alias("code"),
-                            F.slice(F.col("__v"), s * d_sub + 1, d_sub).alias("v"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("e")
-        ).select("e.sub", "e.code", "e.v")
-        sums = (
-            stacked.groupBy("sub", "code")
-            .agg(
-                *[F.sum(F.element_at("v", i + 1)).alias(f"s{i}") for i in range(d_sub)],
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        new = {
-            (r["sub"], r["code"]): [r[f"s{i}"] / r["n"] for i in range(d_sub)]
-            for r in sums
-        }
-        books = [
-            [new.get((s, j), books[s][j]) for j in range(k)] for s in range(m)
-        ]
-    return books
-
-
-def _pq_code(vec_name: str, centroids: list[list[float]], s: int, d_sub: int) -> Column:
-    """Nearest-centroid (L2) code for subspace ``s`` — same literal-array
-    argmax idiom as IVF assignment: narrow projection, no shuffle.
-
-    Emitted as ONE ``F.expr`` SQL string (the phase-1 construction
-    lesson): the Column-built form of this k-struct argmax cost a
-    measured 0.38 s of driver py4j time PER CONSTRUCTION, and it is
-    constructed m times per encode and m x iters times per codebook
-    fit. The SQL replays the identical arithmetic — exact round-trip
-    double literals, the same (a-b)*(a-b) zip_with fold seeded with a
-    DOUBLE zero, BIGINT neg_code tiebreak, final CAST to INT —
-    ``vec_name`` must be a projected column (the bounds-hoist rule)."""
-
-    def _cvec(c: list[float]) -> str:
-        return (
-            "array("
-            + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in c)
-            + ")"
-        )
-
-    sl = f"slice(`{vec_name}`, {s * d_sub + 1}, {d_sub})"
-    structs = ",".join(
-        "named_struct("
-        f"'neg_dist', -aggregate(zip_with({sl}, {_cvec(c)}, "
-        "(a, b) -> (a - b) * (a - b)), CAST(0.0 AS DOUBLE), "
-        f"(acc, d) -> acc + d), 'neg_code', {-j}L)"
-        for j, c in enumerate(centroids)
-    )
-    return F.expr(f"CAST(-array_max(array({structs})).neg_code AS INT)")
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, codes array<int>) — the compressed index. m ints replace dim
-    floats (~32x at dim=64/m=8 once codes are stored as bytes); at 100 TB
-    THIS table is what a query scans, the raw embeddings stay cold. Narrow
-    projection, no shuffle; ties deterministic (lowest code wins)."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    # project the normalized vector ONCE: as a bare expression operand it
-    # would re-evaluate inside every (subspace, code) argmin fold — the
-    # CDC bounds-hoist trap (measured: this encode was a 68 s single-task
-    # stage at sf0.1 before the hoist)
-    # NO spread_scan here: the encode is plan-pinned as an exchange-free
-    # narrow map (test_pq_encode_is_narrow_projection) — at 100 TB the
-    # scan is already wide and an exchange of raw vectors would be pure
-    # cost. The former per-row pathology was constructional, fixed above.
-    base = df.select(F.col(id_col), _l2_normalize(F.col(vec_col)).alias("__v"))
-    codes = F.array(
-        *[_pq_code("__v", codebooks[s], s, d_sub) for s in range(m)]
-    )
-    return base.select(F.col(id_col), codes.alias("codes"))
-
-
-def pq_topk(
-    codes_df: DataFrame,
-    query_vec: list[float],
-    codebooks: list[list[list[float]]],
-    k: int,
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Asymmetric-distance top-k over the COMPRESSED index: the query
-    builds an m x k inner-product lookup table driver-side (m*k floats),
-    and each row's approximate cosine is m ``element_at`` fetches summed —
-    no vector arithmetic per row at all. TakeOrderedAndProject planned;
-    scores half-even-rounded for cross-engine rank stability.
-    """
-    import math
-
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    nq = math.sqrt(sum(x * x for x in query_vec))
-    q = [x / nq for x in query_vec] if nq > 0 else list(query_vec)
-    lut = [
-        [
-            sum(qx * cx for qx, cx in zip(q[s * d_sub : (s + 1) * d_sub], c))
-            for c in codebooks[s]
-        ]
-        for s in range(m)
-    ]
-    sim = sum(
-        F.element_at(
-            sql_array_lit([float(x) for x in lut[s]]),
-            F.element_at("codes", s + 1) + 1,
-        )
-        for s in range(m)
-    )
-    if round_to is not None:
-        sim = F.bround(sim, round_to)
-    return (
-        codes_df.select(F.col(id_col), sim.alias("approx_sim"))
-        .orderBy(F.desc("approx_sim"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_topk_rerank(
-    df: DataFrame,
-    codes_df: DataFrame,
-    query_vec: list[float],
-    codebooks: list[list[list[float]]],
-    k: int,
-    shortlist: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """The production PQ shape: ADC over the compressed index shortlists
-    ``shortlist`` candidates (quantization error caps shortlist recall,
-    not final precision), then ONLY those rows' raw vectors are fetched
-    (semi-join) and scored exactly. Measured on the fixture: recall@10
-    0.3 -> 0.8 at shortlist=50, m=8, k=16 — and every returned score is
-    the exact cosine, so downstream thresholds mean what they say.
-    """
-    cand = pq_topk(
-        codes_df, query_vec, codebooks, shortlist, id_col=id_col, round_to=None
-    ).select(id_col)
-    return cosine_topk(
-        df.join(cand, id_col, "semi"), query_vec, k,
-        vec_col=vec_col, id_col=id_col, round_to=round_to,
     )
 
 

@@ -48,7 +48,7 @@ from .operators.dedup import (
 from .operators.asof import asof_join
 from .operators.incremental import merge_incremental, new_rows
 from .operators.sessionize import sessionize
-from .operators.similarity import cosine_topk, cosine_topk_lsh, embedding_near_dups
+from .operators.similarity import cosine_topk, embedding_near_dups
 from .plans.views import fx_bars, px_bars
 from .sources import load
 
@@ -1264,16 +1264,6 @@ def q_dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# X3 — IVF top-k: trained coarse quantizer, n_probe nearest cells scored
-# (approximate by design -> rows-only; recall pinned in tests)
-def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_topk, train_ivf_cells
-
-    emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
-    cents = train_ivf_cells(emb, n_cells=8, iters=2)
-    return ivf_topk(emb, _query_vec(spark, sf_dir), k=10, centroids=cents, n_probe=3)
-
-
 # X11 extension — deterministic epoch shuffle: the content-addressed
 # training order (md5(seed:id) sort key). The multiset of (id, key)
 # pins the full ordering cross-engine even though the compare itself is
@@ -1322,27 +1312,6 @@ cand AS (
 SELECT id_a, id_b, levenshtein(ta, tb) AS dist
 FROM cand WHERE levenshtein(ta, tb) <= 6
 """
-
-
-# X3 — PQ compressed-index top-k with exact rerank (approximate shortlist
-# -> rows-only; recall + exact-score guarantees pinned in tests). The scan
-# side is the m-int codes table, not the raw vectors — the 100 TB memory
-# shape; rerank fetches only the shortlist's raw rows via semi-join.
-def q_cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import pq_encode, pq_topk_rerank, train_pq_codebooks
-
-    emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
-    books = train_pq_codebooks(emb, m=8, k=16, iters=2)
-    codes = pq_encode(emb, books)
-    return pq_topk_rerank(
-        emb, codes, _query_vec(spark, sf_dir), books, k=10, shortlist=50
-    )
-
-
-# X3 — LSH-bucketed approximate top-k (approximate -> rows-only check)
-def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") != 0)
-    return cosine_topk_lsh(emb, _query_vec(spark, sf_dir), k=10, bits=4, n_probe=3)
 
 
 # X2 — SimHash fingerprints (xxhash64 has no DuckDB analog -> rows-only)
@@ -10292,20 +10261,18 @@ SQL_ANN_JOIN_PQ = _sql_ann_join_pq()
 # k'=12 ADC shortlist (bytes-only corpus scan), then ONLY the
 # shortlist attaches raw vectors (the shortlist is |Q| x k' rows, so
 # it is the BROADCAST side of both vector joins — candidate-bounded
-# vector reads, the pq_topk_rerank pattern across tables) and an exact
-# cosine rerank yields top-4 by (sim desc, corpus_id). Zero-norm
-# shortlist members drop at the rerank (cosine undefined — mirrored).
-# Demonstrates the X157 docstring's "compose with a raw-vector rerank
-# when exactness matters" as a pinned contract, k'=12/k=4
-# (operators/similarity.py:ann_join_pq + functions/vectors.py).
+# vector reads) and an exact cosine rerank yields top-4 by (sim desc,
+# corpus_id). Zero-norm shortlist members drop at the rerank (cosine
+# undefined — mirrored). Demonstrates the X157 docstring's "compose
+# with a raw-vector rerank when exactness matters" as a pinned
+# contract, k'=12/k=4
+# (operators/similarity.py:ann_join_pq,topk_exact_rerank).
 def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .functions.vectors import dot, l2_norm
     from .operators.similarity import (
         ann_join_pq,
         assign_cells_l2q,
         pq_encode_exact,
+        topk_exact_rerank,
     )
 
     emb = load(spark, sf_dir, "embeddings")
@@ -10319,33 +10286,9 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qc = assign_cells_l2q(queries, cents6, n_probe=3)
     shortlist = ann_join_pq(
         queries, k=12, query_cells=qc, corpus_index=idx, books6=books6
-    ).select("query_id", "corpus_id")
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qvec"),
-        l2_norm(F.col("embedding")).alias("__qn"),
-    ).where(F.col("__qn") > 0)
-    cv = corpus.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").alias("__cvec"),
-        l2_norm(F.col("embedding")).alias("__cn"),
-    ).where(F.col("__cn") > 0)
-    sim = F.bround(
-        dot(F.col("__qvec"), F.col("__cvec"))
-        / (F.col("__qn") * F.col("__cn")),
-        6,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("corpus_id")
-    )
-    return (
-        shortlist.join(qv, on="query_id")
-        .join(cv, on="corpus_id")
-        .select("query_id", "corpus_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 4)
-        .select("query_id", "corpus_id", "sim", "rank")
-        .orderBy("query_id", "rank")
+    return topk_exact_rerank(shortlist, queries, corpus, 4).orderBy(
+        "query_id", "rank"
     )
 
 
@@ -11727,9 +11670,6 @@ EXTRA_QUERIES: dict[str, QueryFn] = {
     "q_quantile_sketch": q_quantile_sketch,
     "q_dedup_near": q_dedup_near,
     "q_dedup_near_verified": q_dedup_near_verified,
-    "q_cosine_topk_ivf": q_cosine_topk_ivf,
-    "q_cosine_topk_lsh": q_cosine_topk_lsh,
-    "q_cosine_topk_pq": q_cosine_topk_pq,
     "q_simhash": q_simhash,
     "q_image_near_dup": q_image_near_dup,
     # r14 additions (X161, X162) — registered at the END of the EXTRA

@@ -2138,9 +2138,14 @@ def ivf_index_stream(
     ``index_path`` raises rather than silently mixing two quantizers,
     and an existing-but-UNREADABLE centroid file raises too (fail
     closed — a torn model write must not disable the mismatch guard).
+    A path whose ``assignments/`` a saver wrote flat is refused
+    (:func:`_refuse_flat_assignments`).
     """
     from ..operators.similarity import _annotate_cells
 
+    _refuse_flat_assignments(
+        stream_df.sparkSession, index_path, "ivf_index_stream"
+    )
     _freeze_models(
         stream_df.sparkSession, index_path, {"centroids": centroids},
         "ivf_index_stream", "centroid model",
@@ -2179,11 +2184,13 @@ def pq_index_stream(
     BOTH models are FROZEN at stream start by :func:`_freeze_models`
     and persisted beside the index in the :func:`_write_models` layout
     that ``save_pq_index`` also writes: a restart against the same
-    ``index_path`` (streamed or saved) with a different quantizer OR
-    codebook raises, including a stored codebook that is a strict
-    superset of the wanted one; an existing-but-UNREADABLE model file
-    also raises (fail closed — a torn model write must not disable the
-    mismatch guard). Re-clustering / re-fitting is an offline rebuild.
+    ``index_path`` with a different quantizer OR codebook raises,
+    including a stored codebook that is a strict superset of the
+    wanted one; an existing-but-UNREADABLE model file also raises
+    (fail closed — a torn model write must not disable the mismatch
+    guard). Re-clustering / re-fitting is an offline rebuild.
+    A path that ``save_pq_index`` or ``pq_index_compact`` wrote holds
+    flat assignments and is refused (:func:`_refuse_flat_assignments`).
     Load with :func:`load_pq_index`.
     """
     from ..operators.similarity import (
@@ -2193,6 +2200,9 @@ def pq_index_stream(
     )
 
     _validate_books6(books6, "pq_index_stream")
+    _refuse_flat_assignments(
+        stream_df.sparkSession, index_path, "pq_index_stream"
+    )
     _freeze_models(
         stream_df.sparkSession, index_path,
         {"cents6": cents6, "books6": books6},
@@ -2415,6 +2425,31 @@ def _freeze_models(
             )
 
 
+def _refuse_flat_assignments(spark: SparkSession, path: str, who: str) -> None:
+    """Raise unless ``{path}/assignments`` is absent or in the streamed
+    layout (only ``ingest_batch_id=N/`` directories, plus the entries
+    Spark's file listing skips). ``save_*_index`` and ``pq_index_compact``
+    write flat part files there; once a stream appends
+    ``ingest_batch_id=N/`` beside them, partition discovery drops the
+    flat files and every load silently loses the saved rows. One
+    driver-side ``listStatus``, no Spark job."""
+    fs, p = _hadoop_fs(spark, f"{path}/assignments")
+    if not fs.exists(p):
+        return
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        key, _, n = name.partition("=")
+        if not (st.isDirectory() and key == "ingest_batch_id" and n.isdigit()):
+            raise ValueError(
+                f"{who}: {path}/assignments holds {name!r} outside "
+                "ingest_batch_id=N/ — the flat layout save_*_index and "
+                "pq_index_compact write; appending batches beside it hides "
+                "those rows from every load. Stream into a fresh path"
+            )
+
+
 def load_pq_index(
     spark: SparkSession, index_path: str, apply_tombstones: bool = True
 ) -> tuple[DataFrame, list[list[int]], list[list[list[int]]]]:
@@ -2491,7 +2526,9 @@ def bq_index_stream(
     quantizer OR threshold model raises (reconstructed from ALL stored
     rows — a stored model that is a strict superset of the wanted one
     fails too); an existing-but-UNREADABLE model file also raises (fail
-    closed). Re-thresholding is an offline rebuild.
+    closed). Re-thresholding is an offline rebuild. A path that
+    ``save_bq_index`` or ``pq_index_compact`` wrote holds flat
+    assignments and is refused (:func:`_refuse_flat_assignments`).
     Load with :func:`load_bq_index`; tombstone deletes + compaction
     reuse the X166 utilities unchanged (they are payload-agnostic —
     assignments + tombstones dirs, any code schema)."""
@@ -2501,6 +2538,9 @@ def bq_index_stream(
         raise ValueError("bq_index_stream: sums6 must be non-empty")
     if n_fit < 1:
         raise ValueError(f"bq_index_stream: n_fit={n_fit} < 1")
+    _refuse_flat_assignments(
+        stream_df.sparkSession, index_path, "bq_index_stream"
+    )
     _freeze_models(
         stream_df.sparkSession, index_path,
         {"cents6": cents6, "bqmodel": (sums6, n_fit)},

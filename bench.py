@@ -289,12 +289,9 @@ BENCH_EXCLUSIONS = [
     "q_cm_sketch",
     "q_distinct_sketch",
     "q_quantile_sketch",
-    # Rows-only ANN / near-dup recall diagnostics; the benched baselines
-    # are q_cosine_topk (brute exact) and q_dedup_near_verified (LSH +
-    # exact verify), which dominate the same plans.
-    "q_cosine_topk_ivf",
-    "q_cosine_topk_lsh",
-    "q_cosine_topk_pq",
+    # Rows-only near-dup diagnostics; the benched baseline is
+    # q_dedup_near_verified (MinHash LSH + exact verify), which dominates
+    # the same plans.
     "q_dedup_near",
     "q_simhash",
     # Trivial reference-parity scans/filters (sub-100ms single-stage plans;

@@ -83,36 +83,3 @@ def test_boilerplate_explodes_twice_not_thrice(spark):
     # projection — a third Generate means the cheap branch regressed
     plan = _plan(QUERIES["q_boilerplate"](spark, SF_SMALL))
     assert plan.count("Generate") == 2, plan[:1500]
-
-
-def test_pq_encode_is_narrow_projection(spark):
-    # PQ coding inlines literal codebooks; a shuffle or join in the
-    # encode plan means the assignment stopped being a map
-    from alphavantage_etl_spark.operators.similarity import (
-        pq_encode,
-        train_pq_codebooks,
-    )
-    from alphavantage_etl_spark.sources import load
-
-    emb = load(spark, SF_SMALL, "embeddings")
-    books = train_pq_codebooks(emb, m=8, k=4, iters=1)
-    plan = _plan(pq_encode(emb, books))
-    assert "Exchange" not in plan and "Join" not in plan
-
-
-def test_train_pq_codebooks_rejects_small_and_empty_inputs(spark):
-    """Fewer corpus vectors than k cannot seed k centroids per subspace
-    (the Lloyd update would IndexError mid-job); the trainer must fail
-    fast with a clear message, and likewise on an empty frame."""
-    import pytest as _pytest
-
-    from alphavantage_etl_spark.operators.similarity import train_pq_codebooks
-
-    few = spark.createDataFrame(
-        [(i, [float(i)] * 16) for i in range(3)], "vec_id long, embedding array<double>"
-    )
-    with _pytest.raises(ValueError, match="need >= k"):
-        train_pq_codebooks(few, m=4, k=8)
-    empty = few.where("vec_id < 0")
-    with _pytest.raises(ValueError, match="empty"):
-        train_pq_codebooks(empty, m=4, k=8)

@@ -174,78 +174,6 @@ def test_sql_array_lit_equals_f_lit(spark):
         sql_array_lit([True])
 
 
-def test_l2_normalize_and_pq_encode_hoist_values(spark):
-    """The zip_with/array_repeat normalize and the SQL-emitted _pq_code
-    must reproduce the previous transform-lambda + Column-built values
-    exactly (same IEEE ops in the same order), including the zero-vector
-    passthrough."""
-    from alphavantage_etl_spark.operators.similarity import (
-        _l2_normalize,
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    rnd = random.Random(7)
-    rows = [(i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(64)]
-    rows.append((64, [0.0] * 16))  # zero vector: must pass through unscaled
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    # reference normalize: the pre-change transform-lambda form
-    norm = F.sqrt(
-        F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    ref_norm = F.when(
-        norm > 0, F.transform(F.col("embedding"), lambda x: x / norm)
-    ).otherwise(F.col("embedding"))
-    got = df.select(
-        "vec_id",
-        _l2_normalize(F.col("embedding")).alias("n"),
-        ref_norm.alias("r"),
-    ).collect()
-    for r in got:
-        assert list(r["n"]) == list(r["r"]), r["vec_id"]
-
-    # reference codes: the pre-change Column-built argmax, inline
-    books = train_pq_codebooks(df, m=4, k=4, iters=1)
-    d_sub = 4
-
-    def ref_code(vec, cents, s):
-        sl = F.slice(vec, s * d_sub + 1, d_sub)
-        scored = F.array(
-            *[
-                F.struct(
-                    (
-                        -F.aggregate(
-                            F.zip_with(
-                                sl,
-                                F.array(*[F.lit(float(x)) for x in c]),
-                                lambda a, b: (a - b) * (a - b),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, d: acc + d,
-                        )
-                    ).alias("neg_dist"),
-                    F.lit(-j).alias("neg_code"),
-                )
-                for j, c in enumerate(cents)
-            ]
-        )
-        return (-F.array_max(scored)["neg_code"]).cast("int")
-
-    ref = df.select(
-        "vec_id",
-        _l2_normalize(F.col("embedding")).alias("__v"),
-    ).select(
-        "vec_id",
-        F.array(
-            *[ref_code(F.col("__v"), books[s], s) for s in range(4)]
-        ).alias("codes"),
-    )
-    a = {r["vec_id"]: list(r["codes"]) for r in pq_encode(df, books).collect()}
-    b = {r["vec_id"]: list(r["codes"]) for r in ref.collect()}
-    assert a == b
-
-
 def test_markov_journey_fusion_matches_join_union_reference(spark):
     """The fused one-pass journey build (window-derived closing-conv
     flag + 1-or-2 element explode) must produce the identical transition

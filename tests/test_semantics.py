@@ -429,39 +429,6 @@ def test_report_frames_shapes(spark):
     assert all(r["sma20"] is None for r in oldest), "under-k rows must be NULL"
 
 
-# --- X3: IVF search — deterministic training, recall vs brute force ---
-@pytest.mark.slow
-def test_ivf_topk_recall(spark):
-    from alphavantage_etl_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-        train_ivf_cells,
-    )
-    from alphavantage_etl_spark.sources import load
-
-    from .conftest import SF_ORACLE
-
-    emb = load(spark, SF_ORACLE, "embeddings")
-    q = list(emb.where(F.col("vec_id") == 0).first()["embedding"])
-    rest = emb.where(F.col("vec_id") != 0)
-
-    cents = train_ivf_cells(rest, n_cells=8, iters=2)
-    assert len(cents) == 8 and len(cents[0]) == 64
-    again = train_ivf_cells(rest, n_cells=8, iters=2)
-    assert cents == again, "training must be deterministic"
-
-    exact = [r["vec_id"] for r in cosine_topk(rest, q, k=10).collect()]
-    approx = [r["vec_id"] for r in ivf_topk(rest, q, 10, cents, n_probe=4).collect()]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.5, f"IVF recall@10 too low: {recall} (probe=4/8 cells)"
-    # every IVF hit must carry the same score the exact path assigns
-    exact_scores = {
-        r["vec_id"]: r["sim"] for r in cosine_topk(rest, q, k=500).collect()
-    }
-    for r in ivf_topk(rest, q, 10, cents, n_probe=4).collect():
-        assert exact_scores[r["vec_id"]] == r["sim"]
-
-
 @pytest.mark.slow
 def test_assign_cells_inline_and_broadcast_paths_identical(spark):
     """The centroid-inlining bound (_INLINE_MAX_LITERALS): above it the
@@ -571,67 +538,6 @@ def test_label_centroids_exact_values(spark):
     assert out[(1, 1)] == (1, 5.0, 0.0)
 
 
-def test_lsh_driver_side_bucket_matches_jvm(spark):
-    """Multi-probe computes the query's home bucket in pure Python; it must
-    be bit-identical to the JVM lsh_bucket fold (same weights, same
-    left-to-right double summation)."""
-    from alphavantage_etl_spark.operators.similarity import (
-        hyperplane_weights,
-        lsh_bucket,
-    )
-    from alphavantage_etl_spark.sources import load
-
-    from .conftest import SF_SMALL
-
-    bits, dim = 6, 64
-    emb = load(spark, SF_SMALL, "embeddings").limit(20)
-    w = hyperplane_weights(spark, bits, dim)
-    jvm = {
-        r["vec_id"]: r["b"]
-        for r in emb.select(
-            "vec_id", lsh_bucket("embedding", bits, dim, weights=w).alias("b")
-        ).collect()
-    }
-    for r in emb.collect():
-        v = r["embedding"]
-        margins = [
-            sum(float(v[d]) * w[h * dim + d] for d in range(dim))
-            for h in range(bits)
-        ]
-        home = sum(1 << (bits - 1 - h) for h in range(bits) if margins[h] > 0)
-        assert home == jvm[r["vec_id"]], r["vec_id"]
-
-
-def test_lsh_multiprobe_recall_is_monotone(spark):
-    from alphavantage_etl_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_lsh,
-    )
-    from alphavantage_etl_spark.sources import load
-
-    from .conftest import SF_SMALL
-
-    emb = load(spark, SF_SMALL, "embeddings")
-    q = emb.limit(1).collect()[0]["embedding"]
-    exact = {r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()}
-
-    def recall(n_probe):
-        got = {
-            r["vec_id"]
-            for r in cosine_topk_lsh(
-                emb, q, k=10, bits=4, n_probe=n_probe
-            ).collect()
-        }
-        return len(got & exact)
-
-    r1, r3, r_all = recall(1), recall(3), recall(5)
-    assert r1 <= r3 <= r_all
-    # probing the knife-edge planes must actually recover neighbors on
-    # this fixture (bits=4 -> 16 buckets over 56 vectors)
-    assert r_all >= r1
-    assert r3 >= 5  # multi-probe reaches at least half the exact top-10
-
-
 @pytest.mark.slow
 def test_incremental_minhash_equals_full_rebuild(spark):
     """full(corpus) ∪ incremental(batch vs corpus index) must equal
@@ -672,53 +578,6 @@ def test_incremental_minhash_equals_full_rebuild(spark):
     assert all(a % 2 == 1 or b % 2 == 1 for a, b in inc)
     # the returned signatures ARE the batch's index rows
     assert new_sigs.count() == batch.count()
-
-
-# --- X3: product quantization — compressed-index search ---
-@pytest.mark.slow
-def test_pq_topk_recall_and_determinism(spark):
-    from alphavantage_etl_spark.operators.similarity import (
-        cosine_topk,
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
-    )
-    from alphavantage_etl_spark.sources import load
-
-    from .conftest import SF_ORACLE
-
-    emb = load(spark, SF_ORACLE, "embeddings")
-    q = list(emb.where(F.col("vec_id") == 0).first()["embedding"])
-    rest = emb.where(F.col("vec_id") != 0)
-
-    books = train_pq_codebooks(rest, m=8, k=16, iters=2)
-    assert len(books) == 8 and len(books[0]) == 16 and len(books[0][0]) == 8
-    assert books == train_pq_codebooks(rest, m=8, k=16, iters=2), (
-        "training must be deterministic"
-    )
-
-    codes = pq_encode(rest, books)
-    # compressed index: m small ints per vector, every code in range
-    row = codes.first()
-    assert len(row["codes"]) == 8
-    assert codes.where(
-        F.exists("codes", lambda c: (c < 0) | (c >= 16))
-    ).count() == 0
-
-    exact = [r["vec_id"] for r in cosine_topk(rest, q, k=10).collect()]
-    # raw ADC shortlist recall (known-lossy: 16 centroids/subspace)
-    short = [r["vec_id"] for r in pq_topk(codes, q, books, k=50).collect()]
-    assert len(set(exact) & set(short)) / 10 >= 0.6
-    # the production shape: shortlist + exact rerank — high recall AND
-    # every returned score is the true cosine
-    from alphavantage_etl_spark.operators.similarity import pq_topk_rerank
-
-    rer = pq_topk_rerank(rest, codes, q, books, k=10, shortlist=50)
-    got = {r["vec_id"]: r["sim"] for r in rer.collect()}
-    assert len(set(exact) & set(got)) / 10 >= 0.6
-    sims = {r["vec_id"]: r["sim"] for r in cosine_topk(rest, q, k=5000).collect()}
-    for vid, s_ in got.items():
-        assert sims[vid] == s_, "reranked scores must be exact cosine"
 
 
 # ----------------------------------------------------------- semantic dedup
@@ -1021,6 +880,9 @@ def test_ann_join_scores_exact_and_recall(spark):
     queries = emb.where(F.col("vec_id") % 50 == 3)
     corpus = emb.where(F.col("vec_id") % 50 != 3)
     cents = train_ivf_cells(corpus, n_cells=8, iters=2)
+    assert len(cents) == 8 and len(cents[0]) == 64
+    again = train_ivf_cells(corpus, n_cells=8, iters=2)
+    assert cents == again, "training must be deterministic"
 
     got = ann_join(queries, corpus, k=5, centroids=cents, n_probe=4).collect()
     by_q: dict = {}

@@ -1806,16 +1806,20 @@ def test_ivf_index_stream_parity_replay_and_guard(spark, tmp_path):
         ivf_index_stream(stream, other, index, str(tmp_path / "ckpt2"))
 
     # saved-then-streamed: save_ivf_index writes the model layout the
-    # stream freeze-checks, and both paths load the same centroids
+    # loader reads, but flat assignments — a stream appending beside
+    # them would hide every saved row, so it refuses the path and the
+    # saved rows all still load
     saved = str(tmp_path / "ivf_saved")
     save_ivf_index(streamed2.select("vec_id", "__cell"), cents, saved)
     assert load_ivf_index(spark, saved)[1] == loaded_cents
     tiny = str(tmp_path / "tiny_in")
     queries.select("vec_id", "embedding").coalesce(1).write.parquet(tiny)
     stream = spark.readStream.schema(schema).parquet(tiny)
-    ivf_index_stream(stream, cents, saved, str(tmp_path / "ckpt3"))
-    with pytest.raises(ValueError, match="DIFFERENT centroid"):
-        ivf_index_stream(stream, other, saved, str(tmp_path / "ckpt4"))
+    for c, ck in ((cents, "ckpt3"), (other, "ckpt4")):
+        with pytest.raises(ValueError, match="outside ingest_batch_id"):
+            ivf_index_stream(stream, c, saved, str(tmp_path / ck))
+        assert not os.path.exists(str(tmp_path / ck))
+    assert load_ivf_index(spark, saved)[0].count() == corpus.count()
 
 
 def test_ivf_index_stream_fails_closed_on_unreadable_centroids(
@@ -1953,6 +1957,8 @@ def test_pq_index_stream_parity_replay_guards(spark, tmp_path):
         ann_join_pq,
         assign_cells_l2q,
         pq_encode_exact,
+        pq_index_compact,
+        pq_index_delete,
         save_pq_index,
     )
     from alphavantage_etl_spark.queries import (
@@ -2049,16 +2055,32 @@ def test_pq_index_stream_parity_replay_guards(spark, tmp_path):
         drain(books=other)
 
     # saved-then-streamed: save_pq_index writes the model layout the
-    # stream freeze-checks, and both paths load the same models
+    # loader reads, but flat assignments — a stream appending beside
+    # them would hide every saved row, so it refuses the path and the
+    # saved rows all still load
     saved = str(tmp_path / "pq_saved")
     save_pq_index(idx2, cents6, books6, saved)
     assert load_pq_index(spark, saved)[1:] == (cents6, books6)
     tiny = str(tmp_path / "tiny_in")
     queries.select("vec_id", "embedding").coalesce(1).write.parquet(tiny)
     stream = spark.readStream.schema(schema).parquet(tiny)
-    pq_index_stream(stream, cents6, books6, saved, str(tmp_path / "ck_s"))
-    with pytest.raises(ValueError, match="DIFFERENT quantizer/codebook"):
-        pq_index_stream(stream, cents6, other, saved, str(tmp_path / "ck_o"))
+    for b, ck in ((books6, "ck_s"), (other, "ck_o")):
+        with pytest.raises(ValueError, match="outside ingest_batch_id"):
+            pq_index_stream(stream, cents6, b, saved, str(tmp_path / ck))
+    assert load_pq_index(spark, saved)[0].count() == len(want)
+
+    # compact-then-stream: pq_index_compact rewrites a STREAMED index's
+    # assignments as flat files, so the next stream must refuse too
+    compacted = str(tmp_path / "pq_compacted")
+    shutil.copytree(index, compacted)
+    pq_index_delete(compacted, corpus.where(F.col("vec_id") % 10 == 3))
+    kept, dropped = pq_index_compact(spark, compacted)
+    assert dropped > 0 and kept + dropped == len(want)
+    with pytest.raises(ValueError, match="outside ingest_batch_id"):
+        pq_index_stream(
+            stream, cents6, books6, compacted, str(tmp_path / "ck_c")
+        )
+    assert load_pq_index(spark, compacted)[0].count() == kept
 
     # r13 ADVICE: a stored codebook that is a strict SUPERSET of the
     # wanted one (prefix matches, extra subspace appended) must fail
@@ -2213,18 +2235,21 @@ def test_bq_index_stream_parity_replay_guards(spark, tmp_path):
         assert r["corpus_id"] not in doomed_ids
 
     # saved-then-streamed: save_bq_index writes the model layout the
-    # stream freeze-checks, and both paths load the same models
+    # loader reads, but flat assignments — a stream appending beside
+    # them would hide every saved row, so it refuses the path and the
+    # saved rows all still load
     saved = str(tmp_path / "bq_saved")
     save_bq_index(idx2, cents6, sums6, n_fit, saved)
     assert load_bq_index(spark, saved)[1:] == (lc, ls, ln)
     tiny = str(tmp_path / "tiny_in")
     queries.select("vec_id", "embedding").coalesce(1).write.parquet(tiny)
     stream = spark.readStream.schema(schema).parquet(tiny)
-    bq_index_stream(stream, cents6, sums6, n_fit, saved, str(tmp_path / "ck_s"))
-    with pytest.raises(ValueError, match="DIFFERENT quantizer/threshold"):
-        bq_index_stream(
-            stream, cents6, sums6, n_fit + 1, saved, str(tmp_path / "ck_o")
-        )
+    for n, ck in ((n_fit, "ck_s"), (n_fit + 1, "ck_o")):
+        with pytest.raises(ValueError, match="outside ingest_batch_id"):
+            bq_index_stream(
+                stream, cents6, sums6, n, saved, str(tmp_path / ck)
+            )
+    assert load_bq_index(spark, saved)[0].count() == len(want)
 
     # frozen-model guards: different sums, different n, superset model
     with pytest.raises(ValueError, match="DIFFERENT quantizer/threshold"):
