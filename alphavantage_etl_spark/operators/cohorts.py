@@ -259,6 +259,12 @@ def conversion_attribution(
 # plan-depth block size for the markov power iteration: bounds driver
 # analysis cost without paying a scheduling round-trip per iteration
 _MARKOV_CKPT_EVERY = 4
+# Grid rows up to which the markov power iteration runs in-plan over one
+# packed row (row-count-based, never core-count-tied). The in-plan fold
+# pays ~|grid| x |states| element ops per iteration on one task (map
+# element_at is a linear scan), so 64k grid rows bounds the worst case
+# near 2^28 element ops per run.
+_INPLAN_GRID_ROWS = 65536
 
 
 def _markov_power_inplan(
@@ -550,8 +556,7 @@ def markov_attribution(
     # p(rm, state): conversion probability per non-absorbing state.
     # r15 optimization (guide §2.1/§5 — model state belongs in
     # expressions once it is model-sized): when the grid fits
-    # spark.graft.modelLoopRows (the pagerank gate — row-count-based,
-    # never core-count-tied), the whole power iteration runs as nested
+    # _INPLAN_GRID_ROWS, the whole power iteration runs as nested
     # expressions over ONE packed row — each iteration is a pure
     # Project, which has NO required distribution, so the loop cannot
     # pay a single exchange or join. The r14 join loop was measured at
@@ -564,23 +569,7 @@ def markov_attribution(
     # fold order of the packed arrays cannot matter) and is
     # oracle-re-proved hash-exact at 3 SFs. The grid count is one cheap
     # action over the checkpoint blocks just materialized.
-    loop_cap = min(
-        int(
-            events.sparkSession.conf.get(
-                "spark.graft.modelLoopRows", "262144"
-            )
-        ),
-        # the in-plan fold pays ~|grid| x |states| element ops per
-        # iteration on one task (map element_at is a linear scan), so
-        # its gate is TIGHTER than the generic model-loop cap: 64k grid
-        # rows bounds the worst case near 2^28 element ops per run
-        int(
-            events.sparkSession.conf.get(
-                "spark.graft.inplanGridRows", "65536"
-            )
-        ),
-    )
-    if grid.count() <= loop_cap:
+    if grid.count() <= _INPLAN_GRID_ROWS:
         out = _markov_power_inplan(grid, iters, START, CONV, NULL)
         free_blocks(grid)
         return out

@@ -33,6 +33,14 @@ from pyspark.sql import functions as F
 
 from .dedup import free_blocks
 
+# Row-count gates of the small-model tiers, never tied to local core
+# counts. Model-sized state (CC's symmetrized edges, pagerank's edges +
+# nodes) of at most _MODEL_LOOP_ROWS rows runs its loop on one
+# partition; a pagerank graph of at most _INPLAN_GRAPH_ROWS runs the
+# packed one-row in-plan loop (see _pagerank_inplan).
+_MODEL_LOOP_ROWS = 262144
+_INPLAN_GRAPH_ROWS = 4096
+
 
 def connected_components(
     edges: DataFrame,
@@ -74,19 +82,15 @@ def connected_components(
 
     # r14 optimization (guide §2.1/§2.4, the pagerank phase-5 pattern):
     # near-dup edge sets are MODEL-sized next to the corpus, so when the
-    # symmetrized edges fit spark.graft.modelLoopRows every sweep runs
+    # symmetrized edges fit _MODEL_LOOP_ROWS every sweep runs
     # EXCHANGE-FREE — SinglePartition state satisfies each join/agg
     # distribution and merge hints keep the planner off per-join
     # BroadcastExchange query-stage jobs; a sweep collapses to one
     # single-task checkpoint job plus the convergence-sum action.
     # Label values are sets of (node, min) — partition-immune.
     # e.count() is free here (the edge list was just checkpoint-
-    # materialized); the threshold is row-count-based and conf-tunable,
-    # never tied to local core count.
-    loop_cap = int(
-        edges.sparkSession.conf.get("spark.graft.modelLoopRows", "262144")
-    )
-    small_model = 2 * e.count() <= loop_cap
+    # materialized).
+    small_model = 2 * e.count() <= _MODEL_LOOP_ROWS
     if small_model:
         sym = sym.coalesce(1).localCheckpoint(eager=True)
 
@@ -333,8 +337,8 @@ def _pagerank_inplan(
     is one single-task 1-row checkpoint job instead of the lazy join
     loop's stack of AQE query-stage jobs. Map ``element_at`` is a linear
     scan, so per-iteration cost is O(E x N) element ops — which is why
-    this path is gated at spark.graft.inplanGraphRows (default 4096,
-    ~1e7 ops per run), an order below the generic model-loop cap; the
+    this path is gated at ``_INPLAN_GRAPH_ROWS`` (4096, ~1e7 ops per
+    run), an order below the generic model-loop cap; the
     lazy join loop keeps the mid-size tier. Arithmetic is the join
     loop's, term for term: per-edge round(bround(rank*p, 9)*1e9) as
     decimal(38,0), exact order-immune sums, missing in-edge list folds
@@ -519,15 +523,14 @@ def pagerank(
     # graph at sf0.1). Only for DANGLING-FREE graphs: the dangling-mass
     # branch reads `ranks` twice per iteration, which doubles a lazy
     # plan per level — that branch keeps the checkpointed form. The
-    # threshold is row-count-based and conf-tunable
-    # (spark.graft.modelLoopRows), not tied to local core counts; values
-    # are identical either way (1e-9-quantized decimal sums, partition-
-    # order-immune by the module contract).
-    loop_cap = int(
-        edges.sparkSession.conf.get("spark.graft.modelLoopRows", "262144")
-    )
+    # threshold is row-count-based (_MODEL_LOOP_ROWS), not tied to local
+    # core counts; values are identical either way (1e-9-quantized
+    # decimal sums, partition-order-immune by the module contract).
+    # Every tier ends in an eager materialization that no longer reads
+    # the four persists, so each return releases them first.
+    persisted = (e, nodes, enorm, nw)
     small_model = (
-        not has_dangling and n_edges + n_nodes <= loop_cap
+        not has_dangling and n_edges + n_nodes <= _MODEL_LOOP_ROWS
     )
     if small_model:
         enorm = enorm.coalesce(1).localCheckpoint(eager=True)
@@ -535,15 +538,13 @@ def pagerank(
         # r15: the TINY tier runs join-free over one packed row (see
         # _pagerank_inplan); the lazy join loop below keeps the
         # mid-size tier, the partitioned checkpointed loop the rest
-        inplan_cap = int(
-            edges.sparkSession.conf.get(
-                "spark.graft.inplanGraphRows", "4096"
-            )
-        )
-        if n_edges + n_nodes <= inplan_cap:
-            return _pagerank_inplan(
+        if n_edges + n_nodes <= _INPLAN_GRAPH_ROWS:
+            ranks = _pagerank_inplan(
                 enorm, nodes_it, n_nodes, iters, damping
             )
+            for df in persisted:
+                free_blocks(df)
+            return ranks
     else:
         nodes_it = nodes
 
@@ -614,6 +615,8 @@ def pagerank(
     if small_model:
         # one materialization AFTER the loop, not per iteration
         ranks = ranks.localCheckpoint(eager=True)
+    for df in persisted:
+        free_blocks(df)
     return ranks
 
 

@@ -2494,9 +2494,13 @@ def pq_index_delete(
 def pq_index_compact(spark, index_path: str) -> tuple[int, int]:
     """Fold tombstones into a stored coded index (X166): rewrite
     ``{index_path}/assignments`` minus the tombstoned ids, then drop
-    the tombstone set — returns ``(kept, dropped)``. No-op ``(n, 0)``
-    when no tombstones exist. The rewritten assignments are flat part
-    files, so an index stream refuses the path afterwards.
+    the tombstone set — returns ``(kept, dropped)``. The rewritten
+    table holds the index columns only: a streamed index's
+    ``ingest_batch_id`` partition column is not written. When no
+    tombstones exist, or none of them names an indexed id, it returns
+    ``(n, 0)`` and leaves ``assignments/`` untouched (the unmatched
+    tombstone set is still dropped). The rewritten assignments are flat
+    part files, so an index stream refuses the path afterwards.
 
     The rewrite goes through a temp dir + rename swap (write
     ``assignments__compact``, remove the old dir, rename into place),
@@ -2505,26 +2509,34 @@ def pq_index_compact(spark, index_path: str) -> tuple[int, int]:
     the full compacted table survives at the temp path (recovery =
     finish the rename by hand; production object stores would use the
     pipeline's versioned-state commit-marker protocol instead of
-    rename). Cost is one full index scan + write — the amortized price
-    the per-delete O(deletes) appends defer, scheduled like any other
-    compaction."""
-    from ..streaming.pipeline import _hadoop_fs
+    rename). Cost is one aggregate over the index and its live rows
+    plus, when a tombstone matched, one full index scan + write — the
+    amortized price the per-delete O(deletes) appends defer, scheduled
+    like any other compaction."""
+    from ..streaming.pipeline import _hadoop_fs, _live_assignments
 
     fs, tpath = _hadoop_fs(spark, f"{index_path}/tombstones")
-    assignments = spark.read.parquet(f"{index_path}/assignments")
+    idx = _live_assignments(spark, index_path, False)
     if not fs.exists(tpath):
-        return int(assignments.count()), 0
-    tomb = spark.read.parquet(f"{index_path}/tombstones").distinct()
-    (id_col,) = tomb.columns
-    total = int(assignments.count())
-    compacted = assignments.join(tomb, on=id_col, how="left_anti")
-    tmp = f"{index_path}/assignments__compact"
-    compacted.write.mode("overwrite").parquet(tmp)
-    kept = int(spark.read.parquet(tmp).count())
-    fs2, apath = _hadoop_fs(spark, f"{index_path}/assignments")
-    fs2.delete(apath, True)
-    fs3, tmppath = _hadoop_fs(spark, tmp)
-    fs3.rename(tmppath, apath)
+        return int(idx.count()), 0
+    compacted = _live_assignments(spark, index_path, True)
+    # all rows and live rows in ONE aggregate job, not two counts
+    st = (
+        idx.select(F.lit(1).alias("__all"), F.lit(0).alias("__live"))
+        .unionAll(
+            compacted.select(F.lit(0).alias("__all"), F.lit(1).alias("__live"))
+        )
+        .agg(F.sum("__all").alias("total"), F.sum("__live").alias("kept"))
+        .collect()[0]
+    )
+    total, kept = int(st["total"] or 0), int(st["kept"] or 0)
+    if kept < total:
+        tmp = f"{index_path}/assignments__compact"
+        compacted.write.mode("overwrite").parquet(tmp)
+        _, apath = _hadoop_fs(spark, f"{index_path}/assignments")
+        _, tmppath = _hadoop_fs(spark, tmp)
+        fs.delete(apath, True)
+        fs.rename(tmppath, apath)
     fs.delete(tpath, True)
     return kept, total - kept
 

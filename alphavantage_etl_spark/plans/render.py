@@ -20,11 +20,13 @@ alongside as the honest reading. The engine boundary is explicit:
 - ``plans.report.report_frames`` aggregates the price and FX bars once and
   materializes each with ``localCheckpoint(eager=True)``: one row per date
   (dates × symbols once a symbol column exists), reclaimed by the
-  ContextCleaner once the frames are dropped. The seven frames it returns
+  ContextCleaner once the frames are dropped. The three frames it returns
   are lazy plans over those two bar tables;
-- ``render_report`` is the DRIVER EDGE: it limits each frame to
-  ``max_rows`` (the frames are date-DESC, so this is "most recent N" — a
-  TakeOrderedAndProject, never a full collect) and calls ``toPandas()``;
+- ``render_report`` is the DRIVER EDGE: it limits each of the three frames
+  to ``max_rows`` (the frames are date-DESC, so this is "most recent N" — a
+  TakeOrderedAndProject, never a full collect) and calls ``toPandas()``,
+  then slices the data tables and the comparison pair from those rows in
+  pandas (P2, data_viz.py:185-188) — three Spark edges per report;
 - ``publish_report`` mirrors ``report.save(path=.../index.html)``
   (to_github_pages.py:106). The git push itself needs a remote + token
   (``AV_ETL_GITHUB_TOKEN``/``AV_ETL_REMOTE_REPO`` in the reference) and is
@@ -63,162 +65,80 @@ _INK, _MUTED = "#52514e", "#898781"
 _W, _H, _ML, _MR, _MT, _MB = 720, 260, 56, 12, 12, 28
 
 
-def _spans(pdf: "pd.DataFrame", cols: list[str]):
-    """Ascending-time row order + x/y scaling callables for the plot area.
+def _plot(pdf: "pd.DataFrame", groups: list[list[str]], mr: int = _MR):
+    """Ascending-time row order, x scaling and one y-scale per column
+    group for the plot area.
 
     Frames arrive date-DESC (the reference's scan order); charts read
-    left-to-right in time. Returns ``(rows, x(i), y(v))`` or ``None`` when
-    there is nothing drawable (empty frame / no finite values).
+    left-to-right in time. Returns ``(rows, x(i), step, scales)``, or
+    ``None`` when some group has nothing drawable (empty frame / no
+    finite values / missing columns).
     """
     rows = pdf.iloc[::-1].reset_index(drop=True)
-    vals = [
-        float(v)
-        for c in cols
-        if c in rows.columns
-        for v in rows[c]
-        if v is not None and v == v  # drop None/NaN
+    scales = [
+        _scale(
+            [
+                float(v)
+                for c in cols
+                if c in rows.columns
+                for v in rows[c]
+                if v is not None and v == v  # drop None/NaN
+            ]
+        )
+        for cols in groups
     ]
-    if not len(rows) or not vals:
+    if None in scales:
+        return None
+    step = (_W - _ML - mr) / len(rows)
+
+    def x(i: int) -> float:
+        return _ML + (i + 0.5) * step
+
+    return rows, x, step, scales
+
+
+def _scale(vals: list[float]):
+    """``(lo, hi, y(v))``: the values' range padded 5 % on each side and
+    its pixel mapping, or ``None`` for no values."""
+    if not vals:
         return None
     lo, hi = min(vals), max(vals)
     if lo == hi:  # degenerate span: pad so the mark sits mid-plot
         lo, hi = lo - 1.0, hi + 1.0
     pad = (hi - lo) * 0.05
     lo, hi = lo - pad, hi + pad
-    step = (_W - _ML - _MR) / len(rows)
-
-    def x(i: int) -> float:
-        return _ML + (i + 0.5) * step
 
     def y(v: float) -> float:
         return _MT + (_H - _MT - _MB) * (hi - float(v)) / (hi - lo)
 
-    return rows, x, y, step, lo, hi
+    return lo, hi, y
 
 
-def _svg_frame(body: list[str], rows, x, y, lo: float, hi: float) -> str:
-    """Shared chart chrome: recessive gridlines + y tick labels on round-ish
-    values, first/last date labels, then the data marks on top."""
+def _svg_frame(
+    body: list[str], rows, scales, fills=(_MUTED,), mr: int = _MR, cls: str = ""
+) -> str:
+    """Shared chart chrome: recessive gridlines with one column of tick
+    labels per y-scale (the first on the left axis, a second on the right
+    one, each in its ``fills`` hue), the x axis, first/last date labels,
+    then the data marks on top. Every scale maps linearly onto the same
+    pixel span, so tick k of each scale shares gridline k."""
+    lo0, hi0, y0 = scales[0]
+    sides = ((_ML - 6, ' text-anchor="end"'), (_W - mr + 6, ""))
     parts = [
         f'<svg viewBox="0 0 {_W} {_H}" width="{_W}" height="{_H}" '
-        f'role="img" style="max-width:100%">'
+        f'role="img"{cls} style="max-width:100%">'
     ]
-    for k in range(5):  # 5 hairline gridlines, muted tick text
-        v = lo + (hi - lo) * k / 4
-        yy = y(v)
-        parts.append(
-            f'<line x1="{_ML}" y1="{yy:.1f}" x2="{_W - _MR}" y2="{yy:.1f}" '
-            f'stroke="{_GRID}" stroke-width="1"/>'
-            f'<text x="{_ML - 6}" y="{yy + 3.5:.1f}" text-anchor="end" '
-            f'font-size="10" fill="{_MUTED}">{v:.6g}</text>'
-        )
-    parts.append(
-        f'<line x1="{_ML}" y1="{_H - _MB}" x2="{_W - _MR}" y2="{_H - _MB}" '
-        f'stroke="{_AXIS_INK}" stroke-width="1"/>'
-    )
-    if "date" in rows.columns:
-        d0, d1 = str(rows["date"].iloc[0]), str(rows["date"].iloc[-1])
-        parts.append(
-            f'<text x="{_ML}" y="{_H - 8}" font-size="10" fill="{_MUTED}">'
-            f"{_html.escape(d0)}</text>"
-            f'<text x="{_W - _MR}" y="{_H - 8}" text-anchor="end" '
-            f'font-size="10" fill="{_MUTED}">{_html.escape(d1)}</text>'
-        )
-    parts.extend(body)
-    parts.append("</svg>")
-    return "".join(parts)
-
-
-def _svg_line(pdf: "pd.DataFrame", value_cols: list[str]) -> str:
-    """Multi-series line chart: 2px polylines, one fixed hue per column,
-    legend row above the plot (identity never rides on color alone — the
-    legend text is ink-colored with a colored swatch)."""
-    cols = [c for c in value_cols if c in pdf.columns][: len(_SERIES_COLORS)]
-    sp = _spans(pdf, cols)
-    if sp is None:
-        return ""
-    rows, x, y, step, lo, hi = sp
-    body, legend = [], []
-    for si, c in enumerate(cols):
-        color = _SERIES_COLORS[si]
-        pts = " ".join(
-            f"{x(i):.1f},{y(v):.1f}"
-            for i, v in enumerate(rows[c])
-            if v is not None and v == v
-        )
-        if not pts:
-            continue
-        body.append(
-            f'<polyline points="{pts}" fill="none" stroke="{color}" '
-            f'stroke-width="2"><title>{_html.escape(c)}</title></polyline>'
-        )
-        lx = _ML + 8 + 90 * len(legend)
-        legend.append(
-            f'<rect x="{lx}" y="{_MT}" width="9" height="9" rx="2" fill="{color}"/>'
-            f'<text x="{lx + 13}" y="{_MT + 8.5}" font-size="11" fill="{_INK}">'
-            f"{_html.escape(c)}</text>"
-        )
-    if len(cols) > 1:
-        body.extend(legend)
-    return _svg_frame(body, rows, x, y, lo, hi)
-
-
-def _svg_dual_axis(pdf: "pd.DataFrame", left_col: str, right_col: str) -> str:
-    """Twin-y comparison figure — the reference's ``ComparisonFigure``
-    (data_viz.py:9-38, ``make_subplots(specs=[[{'secondary_y': True}]])``)
-    as dependency-free SVG: each series keeps its OWN linear y-scale, left
-    axis for the first series, right axis for the second, tick labels
-    TINTED to their series' hue so scale ownership never rides on reading
-    position alone. Twin axes invite false slope comparison, which is why
-    the report also keeps the single-axis small multiples and the exact
-    two-column table next to this figure."""
-    if left_col not in pdf.columns or right_col not in pdf.columns:
-        return ""
-    rows = pdf.iloc[::-1].reset_index(drop=True)
-    if not len(rows):
-        return ""
-    mr = 56  # widened right margin: the secondary axis owns it
-
-    def scale(col):
-        vals = [float(v) for v in rows[col] if v is not None and v == v]
-        if not vals:
-            return None
-        lo, hi = min(vals), max(vals)
-        if lo == hi:
-            lo, hi = lo - 1.0, hi + 1.0
-        pad = (hi - lo) * 0.05
-        return lo - pad, hi + pad
-
-    sl, sr = scale(left_col), scale(right_col)
-    if sl is None or sr is None:
-        return ""
-    step = (_W - _ML - mr) / len(rows)
-
-    def x(i: int) -> float:
-        return _ML + (i + 0.5) * step
-
-    def y(v: float, lo: float, hi: float) -> float:
-        return _MT + (_H - _MT - _MB) * (hi - float(v)) / (hi - lo)
-
-    cl, cr = _SERIES_COLORS[0], _SERIES_COLORS[1]
-    parts = [
-        f'<svg viewBox="0 0 {_W} {_H}" width="{_W}" height="{_H}" '
-        f'role="img" class="dual-axis" style="max-width:100%">'
-    ]
-    # both scales map linearly onto the same pixel span, so tick k of the
-    # left scale and tick k of the right scale share a gridline
-    for k in range(5):
-        vl = sl[0] + (sl[1] - sl[0]) * k / 4
-        vr = sr[0] + (sr[1] - sr[0]) * k / 4
-        yy = y(vl, *sl)
+    for k in range(5):  # 5 hairline gridlines
+        yy = y0(lo0 + (hi0 - lo0) * k / 4)
         parts.append(
             f'<line x1="{_ML}" y1="{yy:.1f}" x2="{_W - mr}" y2="{yy:.1f}" '
             f'stroke="{_GRID}" stroke-width="1"/>'
-            f'<text x="{_ML - 6}" y="{yy + 3.5:.1f}" text-anchor="end" '
-            f'font-size="10" fill="{cl}">{vl:.6g}</text>'
-            f'<text x="{_W - mr + 6}" y="{yy + 3.5:.1f}" '
-            f'font-size="10" fill="{cr}">{vr:.6g}</text>'
         )
+        for (tx, anchor), fill, (lo, hi, _) in zip(sides, fills, scales):
+            parts.append(
+                f'<text x="{tx}" y="{yy + 3.5:.1f}"{anchor} '
+                f'font-size="10" fill="{fill}">{lo + (hi - lo) * k / 4:.6g}</text>'
+            )
     parts.append(
         f'<line x1="{_ML}" y1="{_H - _MB}" x2="{_W - mr}" y2="{_H - _MB}" '
         f'stroke="{_AXIS_INK}" stroke-width="1"/>'
@@ -231,31 +151,82 @@ def _svg_dual_axis(pdf: "pd.DataFrame", left_col: str, right_col: str) -> str:
             f'<text x="{_W - mr}" y="{_H - 8}" text-anchor="end" '
             f'font-size="10" fill="{_MUTED}">{_html.escape(d1)}</text>'
         )
-    legend = []
-    for si, (col, sc, color) in enumerate(
-        ((left_col, sl, cl), (right_col, sr, cr))
-    ):
+    parts.extend(body)
+    parts.append("</svg>")
+    return "".join(parts)
+
+
+def _polylines(rows, x, series, gap: int) -> tuple[list[str], list[str]]:
+    """One 2px polyline per ``(column, y, color, label)`` series with
+    drawable points, and a legend entry for each drawn one, ``gap`` px
+    apart (identity never rides on color alone — the legend text is
+    ink-colored with a colored swatch)."""
+    lines, legend = [], []
+    for col, y, color, label in series:
         pts = " ".join(
-            f"{x(i):.1f},{y(v, *sc):.1f}"
+            f"{x(i):.1f},{y(v):.1f}"
             for i, v in enumerate(rows[col])
             if v is not None and v == v
         )
         if not pts:
             continue
-        parts.append(
+        lines.append(
             f'<polyline points="{pts}" fill="none" stroke="{color}" '
             f'stroke-width="2"><title>{_html.escape(col)}</title></polyline>'
         )
-        lx = _ML + 8 + 110 * len(legend)
-        side = "left axis" if si == 0 else "right axis"
+        lx = _ML + 8 + gap * len(legend)
         legend.append(
             f'<rect x="{lx}" y="{_MT}" width="9" height="9" rx="2" fill="{color}"/>'
             f'<text x="{lx + 13}" y="{_MT + 8.5}" font-size="11" fill="{_INK}">'
-            f"{_html.escape(col)} ({side})</text>"
+            f"{label}</text>"
         )
-    parts.extend(legend)
-    parts.append("</svg>")
-    return "".join(parts)
+    return lines, legend
+
+
+def _svg_line(pdf: "pd.DataFrame", value_cols: list[str]) -> str:
+    """Multi-series line chart: one fixed hue per column, legend row above
+    the plot when there is more than one series."""
+    cols = [c for c in value_cols if c in pdf.columns][: len(_SERIES_COLORS)]
+    sp = _plot(pdf, [cols])
+    if sp is None:
+        return ""
+    rows, x, _, scales = sp
+    y = scales[0][2]
+    lines, legend = _polylines(
+        rows, x,
+        [(c, y, color, _html.escape(c)) for c, color in zip(cols, _SERIES_COLORS)],
+        90,
+    )
+    return _svg_frame(lines + legend if len(cols) > 1 else lines, rows, scales)
+
+
+def _svg_dual_axis(pdf: "pd.DataFrame", left_col: str, right_col: str) -> str:
+    """Twin-y comparison figure — the reference's ``ComparisonFigure``
+    (data_viz.py:9-38, ``make_subplots(specs=[[{'secondary_y': True}]])``)
+    as dependency-free SVG: each series keeps its OWN linear y-scale, left
+    axis for the first series, right axis for the second, tick labels
+    TINTED to their series' hue so scale ownership never rides on reading
+    position alone. Twin axes invite false slope comparison, which is why
+    the report also keeps the single-axis small multiples and the exact
+    two-column table next to this figure."""
+    mr = 56  # widened right margin: the secondary axis owns it
+    sp = _plot(pdf, [[left_col], [right_col]], mr)
+    if sp is None:
+        return ""
+    rows, x, _, scales = sp
+    lines, legend = _polylines(
+        rows, x,
+        [
+            (col, y, color, f"{_html.escape(col)} ({side} axis)")
+            for col, (_, _, y), color, side in zip(
+                (left_col, right_col), scales, _SERIES_COLORS, ("left", "right")
+            )
+        ],
+        110,
+    )
+    return _svg_frame(
+        lines + legend, rows, scales, _SERIES_COLORS[:2], mr, ' class="dual-axis"'
+    )
 
 
 def _svg_bars(pdf: "pd.DataFrame", kind: str) -> str:
@@ -266,10 +237,11 @@ def _svg_bars(pdf: "pd.DataFrame", kind: str) -> str:
     need = ["open", "high", "low", "close"]
     if any(c not in pdf.columns for c in need):
         return ""
-    sp = _spans(pdf, need)
+    sp = _plot(pdf, [need])
     if sp is None:
         return ""
-    rows, x, y, step, lo, hi = sp
+    rows, x, step, scales = sp
+    y = scales[0][2]
     half = max(1.0, min(5.0, step * 0.3))
     body = []
     for i in range(len(rows)):
@@ -302,7 +274,7 @@ def _svg_bars(pdf: "pd.DataFrame", kind: str) -> str:
                 f'<line x1="{xc:.1f}" y1="{y(c):.1f}" x2="{xc + half:.1f}" '
                 f'y2="{y(c):.1f}" stroke="{color}" stroke-width="1.5"/></g>'
             )
-    return _svg_frame(body, rows, x, y, lo, hi)
+    return _svg_frame(body, rows, scales)
 
 
 def _svg_chart(pdf: "pd.DataFrame", kind: str, value_col: str) -> str:
@@ -368,17 +340,23 @@ def render_report(
 
     Document structure mirrors the reference's ``dp.App`` block list
     (data_viz.py:165-190): title, price-chart select, FX-chart select,
-    comparison section, data-table select. ``max_rows`` bounds the driver
-    edge — each frame is already date-DESC, so ``limit`` takes the most
-    recent rows as a TakeOrderedAndProject, regardless of corpus size.
+    comparison section, data-table select. ``max_rows`` bounds the three
+    driver edges — each frame is already date-DESC, so ``limit`` takes the
+    most recent rows as a TakeOrderedAndProject, regardless of corpus
+    size. The data tables and the comparison pair are column slices of
+    those pulled rows, taken in pandas as the reference did.
     """
 
-    def edge(name: str) -> "pd.DataFrame":
-        return frames[name].limit(max_rows).toPandas()
-
-    px, fx, conv = edge("px"), edge("fx"), edge("converted")
-    px_t, fx_t, conv_t = edge("px_table"), edge("fx_table"), edge("converted_table")
-    comparison = edge("comparison")
+    px, fx, conv = (
+        frames[name].limit(max_rows).toPandas()
+        for name in ("px", "fx", "converted")
+    )
+    # P2: the reference's positional data-table slices, df.iloc[:, 0:5] /
+    # [:, 0:4] (data_viz.py:185-188), and the comparison pair it plots
+    px_t, fx_t, conv_t = px.iloc[:, :5], fx.iloc[:, :4], conv.iloc[:, :4]
+    comparison = conv[["date", "close_price_usd", "close_price_fx"]].rename(
+        columns={"close_price_usd": "close_usd", "close_price_fx": "close_fx"}
+    )
 
     sym, ccy = symbol.upper(), currency.upper()
     fig1_title = f"{sym} price in USD"

@@ -2,17 +2,20 @@
 (data_viz.py:81-192) minus chart rendering.
 
 The engine's responsibility ends at the frames (SURVEY.md section 3.3):
-three DESC-ordered scans (data_viz.py:87-98), six SMA windows over them
-(:100-109, k ∈ {20, 90} from constants.py:17), the dual-axis comparison
-pair (:143-161), and the first-N-column data tables (P2, :185-188). Chart +
-HTML assembly is consumption-layer: call ``.toPandas()`` on these frames
-and hand them to any plotting stack (the reference used plotly/datapane).
+three DESC-ordered scans (data_viz.py:87-98) with six SMA windows over
+them (:100-109, k ∈ {20, 90} from constants.py:17). The dual-axis
+comparison pair (:143-161) and the first-N-column data tables (P2,
+:185-188) are column slices of those scans, and like the reference this
+engine takes them at the consumption edge: ``plans.render.render_report``
+pulls the three frames with ``.toPandas()`` and slices them there, so the
+report costs three driver edges. Any other plotting stack can consume the
+frames the same way (the reference used plotly/datapane).
 
 Scale: ``report_frames`` collects nothing, but it is not lazy. It
 aggregates each bar series once, ``px_bars`` over ``orders`` and
 ``fx_bars`` over ``lineitem``, and materializes each with
 ``localCheckpoint(eager=True)``: one row per date (dates × symbols once a
-symbol column exists), 2.4–2.5 k rows at sf0.1. All seven frames are
+symbol column exists), 2.4–2.5 k rows at sf0.1. The three frames are
 lazy plans over those two materializations, so the report's driver edges
 never re-read the fact tables. The checkpoint blocks are reclaimed by the
 ContextCleaner once the returned frames are dropped (see
@@ -46,36 +49,21 @@ def _with_smas(df: DataFrame, value_col: str) -> DataFrame:
 
 
 def report_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All frames the report consumes, keyed by block name.
-
-    - ``px`` / ``fx`` / ``converted``: full history, date DESC (the
-      reference's scan order), with sma20/sma90 trend columns.
-    - ``*_table``: the first-N-column data tables (P2 positional slice —
-      5 for price, 4 for FX, 4 for the comparison table).
-    - ``comparison``: the dual-axis pair (converted close vs USD close) the
-      ComparisonFigure plots against twin y-axes (data_viz.py:9-38).
+    """The three frames the report consumes, keyed by block name:
+    ``px`` / ``fx`` / ``converted``, full history, date DESC (the
+    reference's scan order), with sma20/sma90 trend columns. The data
+    tables and the comparison pair are sliced from these at the
+    consumption edge (``plans.render.render_report``).
 
     Materializes the price and FX bars eagerly, once per call (see the
     module docstring); the returned frames read only those two.
     """
     px_b = px_bars(spark, sf_dir).localCheckpoint(eager=True)
     fx_b = fx_bars(spark, sf_dir).localCheckpoint(eager=True)
-    px = _with_smas(px_b, "close")
-    fx = _with_smas(fx_b, "close")
-    prd = _with_smas(convert_bars(px_b, fx_b), "close_price_fx")
-
-    frames = {
-        "px": px.orderBy(F.desc("date")),
-        "fx": fx.orderBy(F.desc("date")),
-        "converted": prd.orderBy(F.desc("date")),
-        # P2: df.iloc[:, 0:5] / [:, 0:4] (data_viz.py:185-188)
-        "px_table": px.select(px.columns[:5]).orderBy(F.desc("date")),
-        "fx_table": fx.select(fx.columns[:4]).orderBy(F.desc("date")),
-        "converted_table": prd.select(prd.columns[:4]).orderBy(F.desc("date")),
-        "comparison": prd.select(
-            "date",
-            F.col("close_price_usd").alias("close_usd"),
-            F.col("close_price_fx").alias("close_fx"),
+    return {
+        "px": _with_smas(px_b, "close").orderBy(F.desc("date")),
+        "fx": _with_smas(fx_b, "close").orderBy(F.desc("date")),
+        "converted": _with_smas(
+            convert_bars(px_b, fx_b), "close_price_fx"
         ).orderBy(F.desc("date")),
     }
-    return frames

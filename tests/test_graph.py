@@ -256,6 +256,53 @@ def test_pagerank_unweighted_defaults_to_count(spark):
     assert got[1] > got[3]  # 1 receives 2's whole rank; 3 only half of 1's
 
 
+@pytest.mark.parametrize("tier", ["inplan", "lazy", "partitioned", "dangling"])
+def test_pagerank_releases_its_persists(spark, monkeypatch, tier):
+    """pagerank persists its edge, node, normalized-edge and node-degree
+    frames for the run. Every tier ends in an eager materialization that
+    no longer reads them, so a call leaves the CacheManager empty, and
+    the ranks read after the release still equal the power iteration.
+    The tiny in-plan, lazy mid-size and partitioned loops run over a
+    dangling-free graph (the smaller tiers forced off through the module
+    gates); a dangling node always takes the partitioned loop."""
+    import numpy as np
+
+    from alphavantage_etl_spark.operators import graph
+
+    n = 12
+    edges = [(i, (i + 1) % n, float(1 + i % 3)) for i in range(n)] + [
+        (i, (i * 5 + 2) % n, 2.0) for i in range(n) if (i * 5 + 2) % n != i
+    ]
+    if tier == "dangling":
+        edges += [(3, n, 1.0), (7, n, 4.0)]  # node n has no out-edges
+    if tier == "lazy":
+        monkeypatch.setattr(graph, "_INPLAN_GRAPH_ROWS", 0)
+    if tier == "partitioned":
+        monkeypatch.setattr(graph, "_MODEL_LOOP_ROWS", 0)
+    df = spark.createDataFrame(edges, "src long, dst long, w double")
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    ranks = graph.pagerank(df, "src", "dst", "w", iters=5)
+    assert cache.isEmpty()
+    got = {r["node"]: r["rank"] for r in ranks.collect()}
+    assert cache.isEmpty()
+
+    nodes = sorted({u for e in edges for u in e[:2]})
+    P = np.zeros((len(nodes), len(nodes)))
+    for u, v, w in edges:
+        P[nodes.index(u), nodes.index(v)] += w
+    outw = P.sum(axis=1)
+    dangling = outw == 0
+    P[~dangling] /= outw[~dangling, None]
+    r = np.full(len(nodes), 1.0 / len(nodes))
+    for _ in range(5):
+        r = 0.15 / len(nodes) + 0.85 * (r @ P + r[dangling].sum() / len(nodes))
+    assert set(got) == set(nodes)
+    for i, v in enumerate(nodes):
+        assert abs(got[v] - r[i]) < 1e-6, (v, got[v], r[i])
+
+
 # ------------------------------------------------------- triangle count
 def test_triangle_count_known_graphs(spark):
     from alphavantage_etl_spark.operators.graph import triangle_count

@@ -10,7 +10,8 @@ Covered here:
   including ragged/NULL rows that must take the fallback branch
   (phase 4).
 - ``connected_components`` small-model exchange-free sweeps ≡ the
-  general path (phase 7), forced via ``spark.graft.modelLoopRows``.
+  general path (phase 7), forced by setting ``graph._MODEL_LOOP_ROWS``
+  to 0.
 - ``ngram_contamination``'s exact bench-size probe flips to broadcast
   when the file-level probe over-counts a filtered benchmark (phase 7).
 """
@@ -70,32 +71,24 @@ def test_random_projection_dim_fast_path_bit_identical(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_small_model_path_identical(spark):
-    from alphavantage_etl_spark.operators.graph import connected_components
+def test_connected_components_small_model_path_identical(spark, monkeypatch):
+    from alphavantage_etl_spark.operators import graph
 
     rng = random.Random(7)
     edges = [
         (rng.randrange(0, 60), rng.randrange(0, 60)) for _ in range(80)
     ]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    key = "spark.graft.modelLoopRows"
-    old = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "0")  # force the general (multi-partition) path
-        big = {
+
+    def labels():
+        return {
             r["node"]: r["cluster"]
-            for r in connected_components(df, "id_a", "id_b").collect()
+            for r in graph.connected_components(df, "id_a", "id_b").collect()
         }
-        spark.conf.set(key, "262144")  # the exchange-free single-task path
-        small = {
-            r["node"]: r["cluster"]
-            for r in connected_components(df, "id_a", "id_b").collect()
-        }
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+
+    small = labels()  # the exchange-free single-task path
+    monkeypatch.setattr(graph, "_MODEL_LOOP_ROWS", 0)
+    big = labels()  # the general (multi-partition) path
     assert big == small and len(big) > 0
 
 

@@ -144,7 +144,7 @@ def test_dual_axis_degenerate_inputs():
 
 
 def _lazy_frames(spark, sf_dir):
-    """The seven report frames as lazy plans straight over the fixtures:
+    """The three report frames as lazy plans straight over the fixtures:
     every frame re-aggregates its bars, nothing is materialized."""
     px = _with_smas(px_bars(spark, sf_dir), "close")
     fx = _with_smas(fx_bars(spark, sf_dir), "close")
@@ -153,14 +153,6 @@ def _lazy_frames(spark, sf_dir):
         "px": px.orderBy(F.desc("date")),
         "fx": fx.orderBy(F.desc("date")),
         "converted": prd.orderBy(F.desc("date")),
-        "px_table": px.select(px.columns[:5]).orderBy(F.desc("date")),
-        "fx_table": fx.select(fx.columns[:4]).orderBy(F.desc("date")),
-        "converted_table": prd.select(prd.columns[:4]).orderBy(F.desc("date")),
-        "comparison": prd.select(
-            "date",
-            F.col("close_price_usd").alias("close_usd"),
-            F.col("close_price_fx").alias("close_fx"),
-        ).orderBy(F.desc("date")),
     }
 
 
@@ -175,8 +167,9 @@ def test_materialized_report_equals_lazy_definition(spark):
 def test_report_job_counts(spark):
     """One report runs a fixed number of Spark jobs: report_frames runs
     the two bar materializations (plus the source probes), render_report
-    only its seven driver edges over them. Edges that re-aggregated the
-    fact tables would run 23 render jobs."""
+    only its three driver edges over them. Seven edges (the data tables
+    and the comparison pair pulled from Spark) ran 13 render jobs; edges
+    that re-aggregated the fact tables would run 23."""
     sc = spark.sparkContext
 
     def jobs(group, fn):
@@ -195,4 +188,43 @@ def test_report_job_counts(spark):
     _, n_render = jobs(
         "test_report_job_counts:render", lambda: render_report(frames)
     )
-    assert (n_frames, n_render) == (6, 13)
+    assert (n_frames, n_render) == (6, 7)
+
+
+def test_report_data_tables_are_spark_column_slices(spark):
+    """P2 (data_viz.py:185-188): the three data tables are the first 5 / 4
+    / 4 columns of the date-DESC scans and the comparison table is the
+    (date, close USD, close FX) pair. render_report slices them from the
+    pulled frames in pandas; each block must equal the table of the same
+    column subset taken in Spark."""
+    from alphavantage_etl_spark.plans.render import _table
+
+    frames = report_frames(spark, SF_SMALL)
+    html = render_report(frames, symbol="spy", currency="pln")
+    px, fx, conv = frames["px"], frames["fx"], frames["converted"]
+
+    def edge(df, *cols):
+        return df.select(*cols).orderBy(F.desc("date")).limit(250).toPandas()
+
+    px_t = edge(px, *px.columns[:5])
+    fx_t = edge(fx, *fx.columns[:4])
+    conv_t = edge(conv, *conv.columns[:4])
+    comparison = edge(
+        conv,
+        "date",
+        F.col("close_price_usd").alias("close_usd"),
+        F.col("close_price_fx").alias("close_fx"),
+    )
+    assert list(px_t.columns) == ["date", "open", "high", "low", "close"]
+    assert list(fx_t.columns) == ["date", "open", "high", "low"]
+    assert list(comparison.columns) == ["date", "close_usd", "close_fx"]
+    assert len(px_t) > 0 and len(comparison) > 0
+    for label, pdf in (
+        ("SPY price in USD", px_t),
+        ("USD/PLN exchange rate", fx_t),
+        ("SPY price comparison in both currencies", conv_t),
+    ):
+        block = f"<summary>{label}</summary>{_table(pdf, label)}</details>"
+        assert block in html, label
+    caption = "SPY price in PLN and USD — close_usd vs close_fx"
+    assert _table(comparison, caption) in html

@@ -410,16 +410,10 @@ def test_report_frames_shapes(spark):
     from .conftest import SF_SMALL
 
     frames = report_frames(spark, SF_SMALL)
-    assert set(frames) == {
-        "px", "fx", "converted", "px_table", "fx_table",
-        "converted_table", "comparison",
-    }
+    assert set(frames) == {"px", "fx", "converted"}
     assert frames["px"].columns == [
         "date", "open", "high", "low", "close", "volume", "sma20", "sma90"
     ]
-    assert frames["px_table"].columns == ["date", "open", "high", "low", "close"]
-    assert frames["fx_table"].columns == ["date", "open", "high", "low"]
-    assert frames["comparison"].columns == ["date", "close_usd", "close_fx"]
 
     # DESC scan order (data_viz.py:87-98) and SMA NULL-under-k at the tail
     px = frames["px"].limit(25).collect()
@@ -2328,6 +2322,86 @@ def test_pq_index_load_after_compact_serves_unchanged(spark, tmp_path):
     idx2, c62, b62 = load_pq_index(spark, path)
     assert idx2.count() == kept
     assert _serve_tiny(spark, idx2, c62, b62) == before
+
+
+def _assignment_files(path):
+    """``(relative path, length, mtime_ns)`` of every file under an
+    index's ``assignments/``."""
+    import os
+
+    root = f"{path}/assignments"
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), st.st_size, st.st_mtime_ns)
+        for d, _, files in os.walk(root)
+        for f in files
+        for st in [os.stat(os.path.join(d, f))]
+    )
+
+
+def test_pq_index_compact_of_streamed_index_writes_index_columns(
+    spark, tmp_path
+):
+    """Compacting a streamed index writes the index columns only: the
+    streamed layout's ingest_batch_id partition column is not carried
+    into the flat compacted files as a data column."""
+    import pyarrow.parquet as pq
+
+    from alphavantage_etl_spark.operators.similarity import (
+        pq_index_compact,
+        pq_index_delete,
+    )
+    from alphavantage_etl_spark.sources import load
+    from alphavantage_etl_spark.streaming.pipeline import (
+        load_pq_index,
+        pq_index_stream,
+    )
+
+    from .conftest import SF_SMALL
+
+    c6, b6, ids = _tiny_pq_index(spark, str(tmp_path / "saved"))
+    src = str(tmp_path / "in")
+    load(spark, SF_SMALL, "embeddings").select("vec_id", "embedding").where(
+        F.col("vec_id") % 25 != 7
+    ).coalesce(1).write.parquet(src)
+    path = str(tmp_path / "pq")
+    pq_index_stream(
+        spark.readStream.schema("vec_id long, embedding array<float>").parquet(
+            src
+        ),
+        c6, b6, path, str(tmp_path / "ck"),
+    )
+    assert any("ingest_batch_id=" in f for f, _, _ in _assignment_files(path))
+    pq_index_delete(path, spark.range(0, 100, 3).toDF("vec_id"))
+    kept, dropped = pq_index_compact(spark, path)
+    assert dropped > 0 and kept + dropped == len(ids)
+    files = [f for f, _, _ in _assignment_files(path) if f.endswith(".parquet")]
+    assert files and not any("ingest_batch_id=" in f for f in files)
+    for f in files:
+        names = pq.read_schema(f"{path}/assignments/{f}").names
+        assert names == ["vec_id", "__cell", "__codes"], names
+    assert load_pq_index(spark, path)[0].count() == kept
+
+
+def test_pq_index_compact_unmatched_tombstones_leave_assignments(
+    spark, tmp_path
+):
+    """Tombstones that name no indexed id compact to ``(n, 0)`` without
+    rewriting ``assignments/``: same files, lengths and mtimes; the
+    tombstone set is dropped."""
+    import os
+
+    from alphavantage_etl_spark.operators.similarity import (
+        pq_index_compact,
+        pq_index_delete,
+    )
+
+    path = str(tmp_path / "pq")
+    _, _, ids = _tiny_pq_index(spark, path)
+    before = _assignment_files(path)
+    pq_index_delete(path, spark.range(10_000_000, 10_000_005).toDF("vec_id"))
+    assert pq_index_compact(spark, path) == (len(ids), 0)
+    assert _assignment_files(path) == before
+    assert not os.path.exists(f"{path}/tombstones")
 
 
 def test_pq_index_load_of_removed_path_raises(spark, tmp_path):
