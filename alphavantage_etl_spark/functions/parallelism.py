@@ -29,11 +29,6 @@ toward "narrow" so a many-small-file scan that Spark would pack into
 few partitions still gets spread; it no-ops at scale exactly where
 the physical scan would be wide.
 
-Session conf ``spark.graft.spreadScan``: ``auto`` (default — the
-metadata heuristic), ``off`` (never repartition; use on clusters
-where even the metadata probe should be skipped), ``force`` (always
-repartition to default parallelism; diagnostic).
-
 Measured (sf0.1, local[32], warm): q_bootstrap_ci 10.2 -> 1.5-2.2 s,
 q_perm_test 10.5 -> 2.4 s.
 """
@@ -83,9 +78,9 @@ def _estimated_scan_width(df: DataFrame) -> int:
         narrow; the raw ``#files`` term alone would over-state its
         width and skip the repartition exactly where it is needed.
     At real scale both bounds are ≫ parallelism and the probe no-ops.
-    ``spark.graft.spreadScan=force`` remains the escape hatch for
-    layouts the metadata cannot see (e.g. one giant single-row-group
-    parquet file that splits on paper but not in practice).
+    A layout the metadata cannot see (e.g. one giant single-row-group
+    parquet file that splits on paper but not in practice) is called
+    wide and left alone.
     """
     try:
         n_files = len(df.inputFiles())
@@ -119,13 +114,7 @@ def spread_scan(df: DataFrame) -> DataFrame:
         # micro-batch partitioning is the stream's concern; the width
         # probe below reads batch-plan metadata that does not exist here
         return df
-    sess = df.sparkSession
-    mode = sess.conf.get("spark.graft.spreadScan", "auto")
-    if mode == "off":
-        return df
-    par = sess.sparkContext.defaultParallelism
-    if mode == "force":
-        return df.repartition(par)
+    par = df.sparkSession.sparkContext.defaultParallelism
     if _estimated_scan_width(df) < par:
         return df.repartition(par)
     return df

@@ -24,9 +24,10 @@ so a last-ulp `exp` difference between engines cannot flip a boundary).
 Every iteration's weight table is bit-identical on any partitioning.
 
 Scale design (100 TB):
-- The (doc, bucket, x) feature frame is computed ONCE and persisted —
-  two scans per gradient step (score join + gradient join) replay the
-  persisted features, never re-tokenize the corpus. Explicitly the
+- The (doc, bucket, x) feature frame is computed ONCE and persisted
+  for the training loop, and released when it ends — two scans per
+  gradient step (score join + gradient join) replay the persisted
+  features, never re-tokenize the corpus. Explicitly the
   training trade: corpus-sized cached state for iteration speed; drop
   to recompute-per-step if storage-bound.
 - Weights are <= buckets+1 rows (AQE broadcasts them into the score
@@ -184,6 +185,11 @@ def train_logreg_hashed(
             )
             .localCheckpoint(eager=True)
         )
+    # every step's weights are checkpointed, so the features can go: a
+    # persist left behind would also answer a later read of a rewritten
+    # input path with the old rows (the CacheManager matches file scans
+    # by path)
+    feats.unpersist()
     return weights
 
 

@@ -2236,15 +2236,6 @@ def _drain(stream_df: DataFrame, apply, checkpoint: str):
     return q
 
 
-# Loaded persisted indexes, one entry per (applicationId, reader,
-# index_path, apply_tombstones): (fingerprint, frame, model parts). A hit
-# needs the fingerprint of the files under index_path to be unchanged;
-# entries of other application ids are evicted on insert (their frames
-# died with the old context), the _session_shared rule.
-_INDEX_CACHE: dict[tuple, tuple] = {}
-_INDEX_CACHE_LOCK = threading.Lock()
-
-
 def _files_under(spark: SparkSession, path: str):
     """Yield the Hadoop ``FileStatus`` of every file under ``path`` — a
     driver-side walk, no Spark job. ``listStatus`` per directory, not
@@ -2263,44 +2254,66 @@ def _files_under(spark: SparkSession, path: str):
                 yield st
 
 
-def _index_fingerprint(spark: SparkSession, index_path: str) -> tuple | None:
+def _index_fingerprint(spark: SparkSession, path: str) -> tuple | None:
     """Sorted ``(path, length, modificationTime)`` of every file under
-    ``index_path`` (:func:`_files_under`), or None when the path does
-    not exist."""
-    fs, root = _hadoop_fs(spark, index_path)
+    ``path`` (:func:`_files_under`), or None when the path does not
+    exist."""
+    fs, root = _hadoop_fs(spark, path)
     if not fs.exists(root):
         return None
     return tuple(sorted(
         (st.getPath().toString(), st.getLen(), st.getModificationTime())
-        for st in _files_under(spark, index_path)
+        for st in _files_under(spark, path)
     ))
 
 
-def _fresh_index_load(
-    spark: SparkSession, index_path: str, apply_tombstones: bool, read
-) -> tuple:
-    """``read(spark, index_path, apply_tombstones)`` — a ``(frame,
-    *models)`` tuple — reused while the files under ``index_path`` keep
-    their fingerprint. The fingerprint is taken BEFORE the read, so
-    files that change during it only make the next call read again. The
-    cached frame is returned as is (DataFrames are immutable); the model
-    lists are deep-copied on every return, so a caller mutating them
+# _fresh_shared's entries: (applicationId, *key) -> [lock, fingerprint,
+# result]
+_SHARED: dict[tuple, list] = {}
+_SHARED_LOCK = threading.Lock()
+
+
+def _fresh_shared(spark: SparkSession, key: tuple, path: str, build):
+    """``build()`` reused while the files under ``path`` keep their
+    fingerprint (:func:`_index_fingerprint`) — the one freshness
+    contract of every shared build in the query registry (``path`` is
+    its ``sf_dir``) and of every persisted-index load (``path`` is the
+    index). The entry is keyed on ``(applicationId, *key)``; entries of
+    other application ids, locks included, are evicted on every call
+    (their frames died with the old context). The fingerprint is taken
+    BEFORE ``build()`` runs, so files that change during a build only
+    make the next call build again; a registry build that writes an
+    index writes it under ``_ivf_scratch_path``, outside ``sf_dir``, so
+    it never changes its own fingerprint. A missing ``path`` never
+    hits: ``build()`` runs and raises as an uncached read does. What the
+    fingerprint cannot see is an in-place rewrite that keeps a file's
+    name, length and modification time.
+
+    Concurrent callers of one key serialize on the entry's lock (one
+    build, the rest read it); distinct keys build in parallel, and a
+    build that calls another key's helper nests without cycles.
+
+    A DataFrame, as the value or as an element of a tuple value, is
+    returned as is (DataFrames are immutable); everything else is
+    deep-copied on every return, so a caller mutating model state
     cannot reach the entry."""
     app = spark.sparkContext.applicationId
-    key = (app, read, index_path, apply_tombstones)
-    fp = _index_fingerprint(spark, index_path)
-    with _INDEX_CACHE_LOCK:
-        hit = _INDEX_CACHE.get(key)
-    if fp is None or hit is None or hit[0] != fp:
-        with _INDEX_CACHE_LOCK:
-            for k in [k for k in _INDEX_CACHE if k[0] != app or k == key]:
-                del _INDEX_CACHE[k]
-        # a removed index_path raises here, as an uncached load does
-        frame, *models = read(spark, index_path, apply_tombstones)
-        hit = (fp, frame, models)
-        with _INDEX_CACHE_LOCK:
-            _INDEX_CACHE[key] = hit
-    return (hit[1], *copy.deepcopy(hit[2]))
+    with _SHARED_LOCK:
+        for k in [k for k in _SHARED if k[0] != app]:
+            del _SHARED[k]
+        entry = _SHARED.setdefault((app, *key), [threading.Lock(), None, None])
+    with entry[0]:
+        fp = _index_fingerprint(spark, path)
+        if fp is None or fp != entry[1]:
+            entry[1:] = [fp, build()]
+        value = entry[2]
+    if isinstance(value, tuple):
+        return tuple(_handout(v) for v in value)
+    return _handout(value)
+
+
+def _handout(value):
+    return value if isinstance(value, DataFrame) else copy.deepcopy(value)
 
 
 def _live_assignments(
@@ -2467,25 +2480,23 @@ def load_pq_index(
     raw table (what :func:`pq_index_compact` itself needs, and the
     audit view of what storage physically holds).
 
-    FRESHNESS CONTRACT: the load is reused within a Spark application
-    while the index's files are unchanged. Every call takes a
-    fingerprint of ``index_path`` — the sorted ``(path, length,
-    modificationTime)`` of every file under it, from a driver-side
-    Hadoop directory walk (no Spark job) — which covers
-    ``assignments/``, ``tombstones/``, ``cents6/`` and ``books6/``. An
-    unchanged fingerprint returns the cached frame with fresh copies of
-    ``cents6``/``books6`` and runs no Spark job; any append, delete,
-    compaction or overwrite changes the fingerprint and reloads (the
+    FRESHNESS CONTRACT: :func:`_fresh_shared`'s, over the files under
+    ``index_path`` — ``assignments/``, ``tombstones/``, ``cents6/`` and
+    ``books6/``. An unchanged fingerprint returns the cached frame with
+    fresh copies of ``cents6``/``books6`` and runs no Spark job; any
+    append, delete, compaction or overwrite changes it and reloads (the
     frame must be rebuilt: a reused DataFrame keeps its file listing).
-    A removed ``index_path`` raises as an uncached load does. What the
-    fingerprint cannot see is an in-place rewrite of a file that keeps
-    its name, length and modification time; every writer in this
-    package writes new part files. The listing costs about 1 ms per
-    file on a local filesystem (6-8 ms for the 8 files of a saved index
-    with tombstones, 4-core host), where an uncached load runs 5 Spark
-    jobs, 6 with tombstones (a schema read and a collect per model part,
-    a schema read each for the assignments and tombstones)."""
-    return _fresh_index_load(spark, index_path, apply_tombstones, _read_pq_index)
+    A removed ``index_path`` raises as an uncached load does. Every
+    writer in this package writes new part files, so none rewrites a
+    file in place unseen. The listing costs about 1 ms per file on a
+    local filesystem (6-8 ms for the 8 files of a saved index with
+    tombstones, 4-core host), where an uncached load runs 5 Spark jobs,
+    6 with tombstones (a schema read and a collect per model part, a
+    schema read each for the assignments and tombstones)."""
+    return _fresh_shared(
+        spark, (_read_pq_index, index_path, apply_tombstones), index_path,
+        lambda: _read_pq_index(spark, index_path, apply_tombstones),
+    )
 
 
 def _read_pq_index(
@@ -2573,14 +2584,15 @@ def load_bq_index(
     with one stats-broadcast anti-join; the utilities never look at
     the code payload, so the bit tier reuses them unchanged).
 
-    FRESHNESS CONTRACT: :func:`load_pq_index`'s, through the same
-    cache. The fingerprint covers ``assignments/``, ``tombstones/``,
-    ``cents6/`` and ``bqmodel/``; an unchanged one returns the cached
-    frame with fresh copies of ``cents6``/``sums6`` and runs no Spark
-    job. It cannot see an in-place rewrite that keeps a file's name,
-    length and modification time; the listing costs about 1 ms per
-    file on a local filesystem."""
-    return _fresh_index_load(spark, index_path, apply_tombstones, _read_bq_index)
+    FRESHNESS CONTRACT: :func:`_fresh_shared`'s, as for
+    :func:`load_pq_index`. The fingerprint covers ``assignments/``,
+    ``tombstones/``, ``cents6/`` and ``bqmodel/``; an unchanged one
+    returns the cached frame with fresh copies of ``cents6``/``sums6``
+    and runs no Spark job."""
+    return _fresh_shared(
+        spark, (_read_bq_index, index_path, apply_tombstones), index_path,
+        lambda: _read_bq_index(spark, index_path, apply_tombstones),
+    )
 
 
 def _read_bq_index(

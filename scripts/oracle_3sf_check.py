@@ -10,7 +10,10 @@ testdata scale factors and writes one JSON artifact per invocation.
 The session is a vanilla ``SparkSession`` (not ``session.get_spark``), so
 no conf from ``session.py`` can mask a query bug. It uses
 ``SPARK_GRAFT_CPUS`` cores and as many shuffle partitions, falling back
-to the core count ``nproc`` reports.
+to the core count ``nproc`` reports, and a driver heap of
+``SPARK_GRAFT_DRIVER_MEM`` (``session.py``'s default, 8g). The JSON is
+rewritten after every query, so a run that is killed keeps the results
+of every query it finished.
 
 Usage:
     python scripts/oracle_3sf_check.py OUT.json q_a q_b ...
@@ -44,7 +47,10 @@ def main() -> None:
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        )
         .appName("oracle-3sf-artifact")
         .getOrCreate()
     )
@@ -62,7 +68,8 @@ def main() -> None:
                 per_sf[key] = {"hash_exact": False, "err": str(e)[:500]}
         results[name] = per_sf
         print(name, per_sf)
-    json.dump(results, open(out_path, "w"), indent=1)
+        with open(out_path, "w") as f:
+            json.dump(results, f, indent=1)
     spark.stop()
     ok = all(
         v["hash_exact"] for per in results.values() for v in per.values()

@@ -4,11 +4,13 @@ plausible rows."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from alphavantage_etl_spark.queries import ALL_ORACLES, ALL_QUERIES, ORACLES, QUERIES
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, SF_SMALL
 from .oracle import assert_matches_oracle
 
 ORACLE_BACKED = sorted(ALL_ORACLES)
@@ -193,18 +195,21 @@ SF_TINY_SLICE = [
 
 @pytest.mark.parametrize("name", SF_TINY_SLICE)
 def test_oracle_match_tiny_sf(spark, name):
-    from .conftest import SF_SMALL
-
     sdf = ALL_QUERIES[name](spark, SF_SMALL)
     assert_matches_oracle(sdf, SF_SMALL, ALL_ORACLES[name], name)
 
 
-def test_session_shared_cache_evicts_stale_apps(spark):
-    """_session_shared must bound itself to the live application: entries
-    recorded under a dead applicationId are evicted on the next insert
-    (ADVICE r5: the scored-frame cache grew without bound across apps)."""
-    from alphavantage_etl_spark import queries as Q
+def test_fresh_shared_evicts_stale_apps(spark, tmp_path):
+    """_fresh_shared must bound itself to the live application: entries
+    recorded under a dead applicationId, build lock included, are
+    evicted on the next call (ADVICE r5: the scored-frame cache grew
+    without bound across apps)."""
+    import threading
 
+    from alphavantage_etl_spark.streaming import pipeline as P
+
+    (tmp_path / "part").write_text("1")
+    path = str(tmp_path)
     calls = []
 
     def build_a():
@@ -215,47 +220,159 @@ def test_session_shared_cache_evicts_stale_apps(spark):
         calls.append("b")
         return spark.range(2)
 
-    Q._SHARED_FRAME_CACHE.clear()
-    Q._SHARED_FRAME_CACHE[("dead-app-id", "x")] = spark.range(0)
-    f1 = Q._session_shared(spark, ("t", "a"), build_a)
-    assert ("dead-app-id", "x") not in Q._SHARED_FRAME_CACHE
-    # hit: same key returns the same frame without rebuilding
-    assert Q._session_shared(spark, ("t", "a"), build_a) is f1
-    Q._session_shared(spark, ("t", "b"), build_b)
+    P._SHARED.clear()
+    dead_lock = threading.Lock()
+    P._SHARED[("dead-app-id", "x")] = [dead_lock, (), spark.range(0)]
+    f1 = P._fresh_shared(spark, ("t", "a"), path, build_a)
+    assert ("dead-app-id", "x") not in P._SHARED
+    assert all(e[0] is not dead_lock for e in P._SHARED.values())
+    # hit: same key and files return the same frame without rebuilding
+    assert P._fresh_shared(spark, ("t", "a"), path, build_a) is f1
+    P._fresh_shared(spark, ("t", "b"), path, build_b)
     assert calls == ["a", "b"]
     # both live-app entries coexist (per-sf_dir frames stay valid)
-    live = [k for k in Q._SHARED_FRAME_CACHE]
+    live = list(P._SHARED)
     assert len(live) == 2 and all(
         k[0] == spark.sparkContext.applicationId for k in live
     )
-    Q._SHARED_FRAME_CACHE.clear()
+    P._SHARED.clear()
 
 
-def test_session_shared_refit_and_fresh_session_retrain(spark):
-    """The staleness contract (r11 verdict wrong #2): a cached entry is
-    served until (a) refit=True drops and rebuilds it in-session, or
-    (b) a new session (different applicationId) misses and rebuilds —
-    pinned here through _learned_cents_shared's escape hatch surface."""
-    import inspect
+def test_fresh_shared_rebuilds_when_a_file_changes(spark, tmp_path):
+    """The freshness contract: an entry is served while the files under
+    its path keep their fingerprint; a rewritten file rebuilds it in
+    the same session. Frames come back as is, everything else as a
+    fresh deep copy."""
+    from alphavantage_etl_spark.streaming import pipeline as P
 
-    from alphavantage_etl_spark import queries as Q
-
+    part = tmp_path / "part"
+    part.write_text("1")
+    path = str(tmp_path)
     calls = []
 
     def build():
         calls.append(1)
-        return spark.range(len(calls))
+        return spark.range(len(calls)), [[len(calls)]]
 
-    Q._SHARED_FRAME_CACHE.clear()
-    f1 = Q._session_shared(spark, ("t", "x"), build)
-    assert Q._session_shared(spark, ("t", "x"), build) is f1
-    f2 = Q._session_shared(spark, ("t", "x"), build, refit=True)
-    assert f2 is not f1 and len(calls) == 2
-    # a FRESH session retrains: the key embeds the applicationId, so a
-    # different app id cannot hit this entry, and the first insert under
-    # the new app evicts the old one (the stale-app sweep above)
+    f1, m1 = P._fresh_shared(spark, ("t", "x"), path, build)
+    f1b, m1b = P._fresh_shared(spark, ("t", "x"), path, build)
+    assert f1b is f1 and len(calls) == 1
+    assert m1b == m1 and m1b is not m1 and m1b[0] is not m1[0]
+    m1b[0].append(99)
+    assert P._fresh_shared(spark, ("t", "x"), path, build)[1] == [[1]]
+    part.write_text("22")
+    f2, m2 = P._fresh_shared(spark, ("t", "x"), path, build)
+    assert f2 is not f1 and m2 == [[2]] and len(calls) == 2
     app = spark.sparkContext.applicationId
-    assert all(k[0] == app for k in Q._SHARED_FRAME_CACHE)
-    Q._SHARED_FRAME_CACHE.clear()
-    # the X146 quantizer exposes the escape hatch
-    assert "refit" in inspect.signature(Q._learned_cents_shared).parameters
+    assert all(k[0] == app for k in P._SHARED)
+    P._SHARED.clear()
+
+
+def test_fresh_shared_builds_once_under_concurrent_callers(spark, tmp_path):
+    """Concurrent callers of one key build it once: the entry's lock
+    serializes them, so the one cold build runs and every other caller
+    reads its result (a fresh copy each)."""
+    import sys
+    import threading
+    import time
+
+    from alphavantage_etl_spark.streaming import pipeline as P
+
+    (tmp_path / "part").write_text("1")
+    path = str(tmp_path)
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.05)
+        return [len(calls)]
+
+    got = []
+
+    def worker():
+        got.append(P._fresh_shared(spark, ("t", "race"), path, build))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1 and got == [[1]] * 16
+    assert len({id(g) for g in got}) == 16
+    P._SHARED.clear()
+
+
+def _copy_fixtures(src: str, dst) -> None:
+    import shutil
+
+    dst.mkdir()
+    for f in sorted(os.listdir(src)):
+        shutil.copyfile(os.path.join(src, f), dst / f)
+
+
+def _drop_ids_mod3(path, id_col: str) -> None:
+    """Rewrite one fixture file without the ids that are 0 mod 3."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path)
+    keep = pa.array([v % 3 != 0 for v in t[id_col].to_pylist()])
+    tmp = f"{path}.tmp"
+    pq.write_table(t.filter(keep), tmp)
+    os.replace(tmp, path)
+
+
+def test_fresh_shared_registry_results_follow_rewritten_files(spark, tmp_path):
+    """Registry shared state is keyed on the content of sf_dir: after
+    embeddings.parquet and documents.parquet are rewritten as strict
+    subsets mid-session, q_knn_graph (shared k-NN graph) and q_auc
+    (shared scored frame) answer from the new files — each equals its
+    DuckDB oracle over them and differs from the first run. With the
+    files unchanged, the shared builder hands back the cached frame and
+    runs no Spark job."""
+    from alphavantage_etl_spark import queries as Q
+
+    sf = tmp_path / "sf"
+    _copy_fixtures(SF_SMALL, sf)
+    sf_dir = str(sf)
+    names = ("q_knn_graph", "q_auc")
+    first = {
+        n: sorted(map(tuple, ALL_QUERIES[n](spark, sf_dir).collect()))
+        for n in names
+    }
+    _drop_ids_mod3(sf / "embeddings.parquet", "vec_id")
+    _drop_ids_mod3(sf / "documents.parquet", "doc_id")
+    for n in names:
+        sdf = ALL_QUERIES[n](spark, sf_dir)
+        assert_matches_oracle(sdf, sf_dir, ALL_ORACLES[n], n)
+        assert sorted(map(tuple, sdf.collect())) != first[n], n
+
+    sc = spark.sparkContext
+    g1 = Q._knn_graph_shared(spark, sf_dir)
+    group = "test_fresh_shared_registry_results_follow_rewritten_files"
+    sc.setJobGroup(group, "warm")
+    try:
+        g2 = Q._knn_graph_shared(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert g2 is g1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def test_logreg_scored_frame_leaves_cache_manager_empty(spark, tmp_path):
+    """The shared scored frame behind q_auc is a localCheckpoint, not a
+    persist: a (re)built entry never leaves a frame in the
+    CacheManager."""
+    sf = tmp_path / "sf"
+    _copy_fixtures(SF_SMALL, sf)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    ALL_QUERIES["q_auc"](spark, str(sf)).collect()
+    assert cache.isEmpty()

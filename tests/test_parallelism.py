@@ -3,9 +3,8 @@
 The probe must never convert the DataFrame to an RDD or run a job at
 operator-build time — the old ``df.rdd.getNumPartitions()`` form
 materialized the physical plan for every wrapped operator. These tests
-pin (a) the no-RDD property directly by poisoning ``DataFrame.rdd``,
-(b) the repartition decision on narrow vs wide inputs, and (c) the
-``spark.graft.spreadScan`` conf gate.
+pin (a) the no-RDD property directly by poisoning ``DataFrame.rdd``
+and (b) the repartition decision on narrow vs wide inputs.
 """
 
 from __future__ import annotations
@@ -78,24 +77,6 @@ def test_wide_input_is_left_alone(spark):
         assert out is base
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-
-def test_conf_gate_off_and_force(spark):
-    base = _docs(spark).select("doc_id")
-    spark.conf.set("spark.graft.spreadScan", "off")
-    try:
-        assert spread_scan(base) is base
-    finally:
-        spark.conf.set("spark.graft.spreadScan", "auto")
-    spark.conf.set("spark.graft.spreadScan", "force")
-    try:
-        out = spread_scan(base)
-        assert out is not base
-        assert (
-            out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-        )
-    finally:
-        spark.conf.set("spark.graft.spreadScan", "auto")
 
 
 def test_estimate_counts_files(spark, tmp_path):

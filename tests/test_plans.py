@@ -61,7 +61,7 @@ def test_no_python_udfs_in_oracle_backed_plans(spark):
     # The UDF-free rule (SURVEY.md 7.3.6): every oracle-backed query must
     # stay JVM-side. BatchEvalPython/ArrowEvalPython in a plan means a
     # Python round trip crept in. Plan construction is driver-side and
-    # thread-safe (py4j opens a connection per thread; _session_shared
+    # thread-safe (py4j opens a connection per thread; _fresh_shared
     # takes per-key build locks), so the 216-plan walk fans out across a
     # pool instead of paying each query's analysis latency serially.
     from concurrent.futures import ThreadPoolExecutor

@@ -1475,7 +1475,7 @@ def test_ann_serve_plan_serving_only(spark):
     """X155: the serving-only query keeps the exact X147 serving plan
     (zero SortMergeJoin, three static broadcasts, one candidate-only
     hash exchange, WindowGroupLimit pre-limit) — and its second run in
-    a session does NOT rebuild the index (the _session_shared path is
+    a session does NOT rebuild the index (the _fresh_shared path is
     the prebuilt state the bench's min-of-reps measures)."""
     import re
 
