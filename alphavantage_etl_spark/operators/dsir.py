@@ -105,11 +105,11 @@ def dsir_log_weights(
     t_cnt = hashed_feature_counts(target, text_col, buckets, salt)
     r_cnt = hashed_feature_counts(raw, text_col, buckets, salt)
     # bucket-sized merge: full outer so a bucket present in either model
-    # gets its exact smoothed ratio. PERSIST the bucket-bounded table —
-    # totals, the ratio column, and the unseen fallback all read it, and
-    # without the persist each reference replays both corpus explodes
-    # (plan-verified: 6 Generates without, 3 with). Same class as the
-    # lm_perplexity self-trained-model persist: <= B rows of state.
+    # gets its exact smoothed ratio. Totals, the ratio column and the
+    # unseen fallback all read it; exchange reuse runs each corpus
+    # explode once (final plan: 3 Generates, one per corpus scan). No
+    # persist: the CacheManager would match a later read of a rewritten
+    # file to the cached table and serve the old weights.
     merged = (
         t_cnt.withColumnRenamed("cnt", "cnt_t")
         .join(r_cnt.withColumnRenamed("cnt", "cnt_r"), on="bucket", how="full")
@@ -118,7 +118,6 @@ def dsir_log_weights(
             F.coalesce("cnt_t", F.lit(0)).alias("cnt_t"),
             F.coalesce("cnt_r", F.lit(0)).alias("cnt_r"),
         )
-        .persist()
     )
     totals = merged.agg(
         F.sum("cnt_t").alias("__nt"), F.sum("cnt_r").alias("__nr")

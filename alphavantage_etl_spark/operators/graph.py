@@ -638,6 +638,11 @@ def triangle_count(
     triangle is counted EXACTLY once (at its unique minimum-(degree, id)
     apex). Three shuffles total (degree agg, wedge join, closing join) —
     no corpus-quadratic stage on any degree distribution.
+
+    Nothing is persisted: the result is lazy over ``und``, ``deg`` and
+    ``oriented``, and exchange reuse computes each of them once in the
+    final plan (each input scanned once), with fewer jobs than caching
+    them and nothing left in the CacheManager to go stale.
     """
     und = (
         edges.select(
@@ -646,14 +651,12 @@ def triangle_count(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
@@ -665,7 +668,7 @@ def triangle_count(
     oriented = ranked.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).persist()
+    )
     e1 = oriented.select(F.col("lo").alias("apex"), F.col("hi").alias("v"))
     e2 = oriented.select(F.col("lo").alias("apex"), F.col("hi").alias("w"))
     wedges = e1.join(e2, on="apex").where(F.col("v") < F.col("w"))

@@ -15,6 +15,18 @@ vouch for the streaming semantics (SURVEY.md section 7.3.5).
 Scale notes: state size is bounded by the watermark horizon; shuffle
 partitions shard the keyed state; at 100 TB/day the same topology runs with
 a real source (Kafka/files-on-object-storage) — nothing here is local-only.
+
+The exactly-once ``foreachBatch`` streams share their plumbing, written
+once: :func:`_drain` runs every one of them (checkpointed, availableNow);
+:func:`_append_batch` is the replay-idempotent per-batch file append;
+:func:`_admit` is the poison-batch gate of the curation quality check and
+the drift and OOV monitors (pass, quarantine, or raise); and
+:func:`_merge_state` sums a batch's cells into the cumulative state of
+the FDR, count-min and domain-cap monitors over the versioned-state
+protocol (:func:`_commit_state`), which the CDC table commits through
+too. The module also holds the persisted-index layout (model parts,
+index streams and loaders) and :func:`_fresh_shared`, the content-keyed
+cache of shared model state and index loads.
 """
 
 from __future__ import annotations
@@ -27,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import inline_rows_df
+from ..sources.catalog import read_path_if_exists
 from ..sources.parquet import SCHEMAS
 
 
@@ -379,6 +392,40 @@ def _interval_ms(interval: str) -> int:
     return int(qty) * mult
 
 
+def _drain(stream_df: DataFrame, apply, checkpoint: str):
+    """Run ``apply`` as the ``foreachBatch`` sink over every micro-batch
+    available now, then stop; returns the finished query. Every
+    checkpointed stream in this module runs through it."""
+    q = (
+        stream_df.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _admit(
+    batch_df: DataFrame,
+    batch_id: int,
+    ok: bool,
+    error: Exception,
+    quarantine_path: str | None,
+) -> bool:
+    """The poison-batch gate: True when the batch passed its check and
+    goes on. A failed batch is quarantined whole through
+    :func:`_append_batch` (so a replay rewrites its own directory) and
+    False is returned, or ``error`` is raised when no
+    ``quarantine_path`` is set — never a silent drop."""
+    if ok:
+        return True
+    if quarantine_path is None:
+        raise error
+    _append_batch(batch_df, quarantine_path, batch_id)
+    return False
+
+
 def idempotent_sink_stream(
     stream_df: DataFrame,
     sink_path: str,
@@ -400,28 +447,16 @@ def idempotent_sink_stream(
     from ..operators.incremental import new_rows
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch_df.sparkSession
-        try:
-            existing = spark.read.parquet(sink_path)
-        except AnalysisException:  # first batch: sink does not exist yet
-            existing = None
-        # Any OTHER read failure (corrupt footer, FS hiccup, permissions)
-        # must propagate and fail the batch so the checkpoint retries it —
-        # swallowing it would skip the anti-join and re-append the whole
-        # micro-batch, silently breaking the idempotency guarantee.
+        # None only before the first batch; any OTHER read failure
+        # (corrupt footer, FS hiccup, permissions) must propagate and fail
+        # the batch so the checkpoint retries it — swallowing it would
+        # skip the anti-join and re-append the whole micro-batch,
+        # silently breaking the idempotency guarantee.
+        existing = read_path_if_exists(batch_df.sparkSession, sink_path)
         fresh = batch_df if existing is None else new_rows(batch_df, existing, key)
         fresh.write.mode("append").parquet(sink_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, upsert, checkpoint)
 
 
 def read_documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
@@ -490,8 +525,12 @@ def curation_ingest_stream(
     silently by design; a batch that FAILS AN EXPECTATION (e.g. a
     completeness collapse — the upstream producer broke) is a poison
     batch and must not be partially ingested at all. On failure the RAW
-    batch (as delivered, pre-scrub) is appended to ``quarantine_path``
-    for replay after the producer fix, and the sink is untouched; with no
+    batch (as delivered, pre-scrub) is written whole to
+    ``{quarantine_path}/ingest_batch_id=N`` by :func:`_admit`, the gate
+    the drift and OOV monitors share — a read of ``quarantine_path``
+    shows the batch id as an ``ingest_batch_id`` column, and a replayed
+    batch rewrites its own directory instead of quarantining twice — for
+    replay after the producer fix, and the sink is untouched; with no
     ``quarantine_path`` the batch raises ``QualityCheckError`` instead,
     failing the stream so the checkpoint retries under operator control —
     either way, never a silent drop. Cost: one extra aggregate scan of
@@ -510,8 +549,6 @@ def curation_ingest_stream(
     out_cols = stream_df.columns + ["fp"]
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         if checks is not None:
             from ..plans.quality import (
@@ -527,10 +564,10 @@ def curation_ingest_stream(
                 quality_reports.append(
                     {"batch_id": batch_id, "ok": not failures, "report": report}
                 )
-            if failures:
-                if quarantine_path is None:
-                    raise QualityCheckError(failures, report)
-                batch_df.write.mode("append").parquet(quarantine_path)
+            if not _admit(
+                batch_df, batch_id, not failures,
+                QualityCheckError(failures, report), quarantine_path,
+            ):
                 return
         if scrub:
             # PII redaction is per-row and stateless -> runs unchanged per
@@ -549,15 +586,13 @@ def curation_ingest_stream(
         ).drop("q")
         fp = gated.withColumn("fp", fingerprint_sha256("text"))
         batch_unique = dedup_exact(fp, ["fp"], "doc_id")
-        try:
-            existing = spark.read.parquet(sink_path).select("fp")
-        except AnalysisException:  # first batch: sink does not exist yet
-            existing = None
-        # any OTHER read failure must fail the batch -> checkpoint retries
+        # None before the first batch; any other read failure fails the
+        # batch -> checkpoint retries
+        existing = read_path_if_exists(spark, sink_path)
         fresh = (
             batch_unique
             if existing is None
-            else batch_unique.join(existing, "fp", "left_anti")
+            else batch_unique.join(existing.select("fp"), "fp", "left_anti")
         )
         if benchmark is not None:
             bad = (
@@ -570,9 +605,8 @@ def curation_ingest_stream(
             )
             fresh = fresh.join(bad, "doc_id", "left_anti")
         if signature_dir is not None:
-            try:
-                corpus_sigs = spark.read.parquet(signature_dir)
-            except AnalysisException:  # first batch: no index yet
+            corpus_sigs = read_path_if_exists(spark, signature_dir)
+            if corpus_sigs is None:  # first batch: no index yet
                 corpus_sigs = spark.createDataFrame(
                     [], "__id long, __sig array<bigint>"
                 )
@@ -639,14 +673,7 @@ def curation_ingest_stream(
             # pin column order: parquet appends must agree batch-to-batch
             fresh.select(*out_cols).write.mode("append").parquet(sink_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, ingest, checkpoint)
 
 
 def run_stream_to_memory(stream_df: DataFrame, name: str, mode: str = "append"):
@@ -759,21 +786,12 @@ def drift_monitor_stream(
         }
         if drift_reports is not None:
             drift_reports.append(report)
-        if not ok:
-            if quarantine_path is None:
-                raise DriftError(psi, report)
-            _append_batch(batch_df, quarantine_path, batch_id)
-            return
-        _append_batch(batch_df, sink_path, batch_id)
+        if _admit(
+            batch_df, batch_id, ok, DriftError(psi, report), quarantine_path
+        ):
+            _append_batch(batch_df, sink_path, batch_id)
 
-    q_ = (
-        stream_df.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
-    return q_
+    return _drain(stream_df, monitor, checkpoint)
 
 
 def enrichment_stream(
@@ -805,14 +823,7 @@ def enrichment_stream(
         out = scd2_lookup(batch_df, dim, key_col, ts_col)
         _append_batch(out, sink_path, batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, enrich, checkpoint)
 
 
 class OOVError(RuntimeError):
@@ -905,21 +916,12 @@ def oov_monitor_stream(
         }
         if oov_reports is not None:
             oov_reports.append(report)
-        if not ok:
-            if quarantine_path is None:
-                raise OOVError(rate, report)
-            _append_batch(batch_df, quarantine_path, batch_id)
-            return
-        _append_batch(batch_df, sink_path, batch_id)
+        if _admit(
+            batch_df, batch_id, ok, OOVError(rate, report), quarantine_path
+        ):
+            _append_batch(batch_df, sink_path, batch_id)
 
-    q_ = (
-        stream_df.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
-    return q_
+    return _drain(stream_df, monitor, checkpoint)
 
 
 def ewma_chart_stream(
@@ -1211,7 +1213,7 @@ def fdr_monitor_stream(
     one collect of that same bounded grid.
 
     State commits use the versioned batch-id protocol
-    (:func:`_commit_state`): replayed batches report from the
+    (:func:`_merge_state`): replayed batches report from the
     already-committed state instead of double-merging, and a crash
     mid-write cannot corrupt committed counts. Read back with
     :func:`read_monitor_state`.
@@ -1222,37 +1224,17 @@ def fdr_monitor_stream(
     key = F.col(key_col)
 
     def monitor(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = _latest_complete_version(spark, state_path)
-        if last is not None and last >= batch_id:
-            # replayed batch: state already includes these rows
-            merged = spark.read.parquet(_state_version_dir(state_path, last))
-        else:
-            cells = (
+        merged = _merge_state(
+            batch_df.sparkSession, state_path, batch_id, ["k"],
+            lambda: (
                 batch_df.where(key.isNotNull() & flag.isNotNull())
                 .groupBy(key.alias("k"))
                 .agg(
                     F.count(F.lit(1)).alias("n"),
                     F.sum(flag.cast("long")).alias("pos"),
                 )
-            )
-            if last is not None:
-                # a CORRUPT committed version must fail the stream,
-                # never silently reset the counts
-                prev = spark.read.parquet(
-                    _state_version_dir(state_path, last)
-                )
-                merged = (
-                    prev.unionByName(cells)
-                    .groupBy("k")
-                    .agg(F.sum("n").alias("n"), F.sum("pos").alias("pos"))
-                )
-            else:
-                merged = cells
-            _commit_state(merged, state_path, batch_id)
-            merged = spark.read.parquet(
-                _state_version_dir(state_path, batch_id)
-            )
+            ),
+        )
         rej = bh_reject(
             two_prop_from_counts(merged, "k", "n", "pos"),
             "k",
@@ -1269,14 +1251,7 @@ def fdr_monitor_stream(
                 }
             )
 
-    qr = (
-        stream_df.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    qr.awaitTermination()
-    return qr
+    return _drain(stream_df, monitor, checkpoint)
 
 
 def _append_batch(df: DataFrame, base_path: str, batch_id: int) -> None:
@@ -1319,20 +1294,18 @@ def _state_version_dir(state_path: str, batch_id: int) -> str:
     return f"{state_path}/v{batch_id}"
 
 
-def _latest_complete_version(
-    spark: SparkSession, state_path: str
-) -> int | None:
-    """Largest batch id whose state version directory carries the
-    protocol's OWN commit marker (written by :func:`_commit_state`
-    after the parquet write returns — independent of whether the
-    cluster's output committer writes ``_SUCCESS`` files, which S3
-    committers often disable). A crash mid-write leaves no marker, so
-    partial versions are invisible to readers and replays."""
+def _committed_versions(spark: SparkSession, state_path: str) -> list[int]:
+    """Sorted batch ids of every version directory under ``state_path``
+    that carries the protocol's OWN commit marker (written by
+    :func:`_commit_state` after the parquet write returns — independent
+    of whether the cluster's output committer writes ``_SUCCESS`` files,
+    which S3 committers often disable). A crash mid-write leaves no
+    marker, so partial versions are invisible to readers and replays."""
     fs, hpath = _hadoop_fs(spark, state_path)
     if not fs.exists(hpath):
-        return None
+        return []
     jvm = spark._jvm
-    best = None
+    out = []
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
         if name.startswith("v") and name[1:].isdigit():
@@ -1340,10 +1313,17 @@ def _latest_complete_version(
                 st.getPath(), _COMMIT_MARKER
             )
             if fs.exists(marker):
-                b = int(name[1:])
-                if best is None or b > best:
-                    best = b
-    return best
+                out.append(int(name[1:]))
+    return sorted(out)
+
+
+def _latest_complete_version(
+    spark: SparkSession, state_path: str
+) -> int | None:
+    """Largest committed batch id (:func:`_committed_versions`), or
+    ``None`` before the first commit."""
+    versions = _committed_versions(spark, state_path)
+    return versions[-1] if versions else None
 
 
 def read_monitor_state(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -1408,6 +1388,41 @@ def _commit_state(
             fs.delete(st.getPath(), True)
 
 
+def _merge_state(
+    spark: SparkSession,
+    state_path: str,
+    batch_id: int,
+    keys: list[str],
+    cells,
+) -> DataFrame:
+    """One batch of a cumulative count monitor: ``cells()`` (the batch's
+    per-key counts, built only when needed) summed by ``keys`` into the
+    latest committed version, committed as ``v{batch_id}``
+    (:func:`_commit_state`), and returned re-read from the committed
+    files — the pre-commit plan reads the version the commit prunes.
+    Every non-key column is summed, so the state is exact integers
+    whatever the batch boundaries. A replayed batch (its version, or a
+    later one, already committed) builds nothing and gets the committed
+    state back, never a second merge. A corrupt previous version fails
+    the batch instead of silently resetting the counts."""
+    last = _latest_complete_version(spark, state_path)
+    if last is not None and last >= batch_id:
+        return spark.read.parquet(_state_version_dir(state_path, last))
+    merged = cells()
+    if last is not None:
+        merged = (
+            spark.read.parquet(_state_version_dir(state_path, last))
+            .unionByName(merged)
+            .groupBy(*keys)
+            .agg(*[F.sum(c).alias(c) for c in merged.columns if c not in keys])
+        )
+    _commit_state(merged, state_path, batch_id)
+    # the known schema spares the re-read its schema-inference job
+    return spark.read.schema(merged.schema).parquet(
+        _state_version_dir(state_path, batch_id)
+    )
+
+
 def cm_sketch_stream(
     stream_df: DataFrame,
     text_col: str,
@@ -1436,44 +1451,22 @@ def cm_sketch_stream(
     forever.
 
     State commits use the versioned batch-id protocol
-    (:func:`_commit_state`): replayed batches are skipped instead of
+    (:func:`_merge_state`): replayed batches are skipped instead of
     double-merged, and a crash mid-write cannot corrupt committed
     state. Read the grid back with :func:`read_monitor_state`.
     """
     from ..operators.sketches import count_min_sketch
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = _latest_complete_version(spark, state_path)
-        if last is not None and last >= batch_id:
-            # replayed batch: the state commit for this batch_id already
-            # landed (the crash was between state commit and checkpoint
-            # commit) — merging again would double-count every cell
-            return
-        cells = count_min_sketch(
-            batch_df, text_col, depth=depth, width=width, delimiter=delimiter
+        _merge_state(
+            batch_df.sparkSession, state_path, batch_id, ["row", "bucket"],
+            lambda: count_min_sketch(
+                batch_df, text_col, depth=depth, width=width,
+                delimiter=delimiter,
+            ),
         )
-        if last is not None:
-            # a CORRUPT committed version must fail the stream here,
-            # never silently reset the grid
-            prev = spark.read.parquet(_state_version_dir(state_path, last))
-            merged = (
-                prev.unionByName(cells)
-                .groupBy("row", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = cells
-        _commit_state(merged, state_path, batch_id)
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, merge, checkpoint)
 
 
 def domain_cap_monitor_stream(
@@ -1510,7 +1503,7 @@ def domain_cap_monitor_stream(
     bounded over-cap slice.
 
     State commits use the versioned batch-id protocol
-    (:func:`_commit_state`): a replayed batch (crash between the state
+    (:func:`_merge_state`): a replayed batch (crash between the state
     commit and the checkpoint commit) is detected by ``latest >=
     batch_id`` and reported from the already-committed state instead of
     double-merged, and a crash mid-write cannot corrupt committed state.
@@ -1519,39 +1512,13 @@ def domain_cap_monitor_stream(
     dom = F.col(domain_col)
 
     def monitor(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = _latest_complete_version(spark, state_path)
-        if last is not None and last >= batch_id:
-            # replayed batch: state already includes these rows — report
-            # from the committed version, never re-merge
-            merged = spark.read.parquet(_state_version_dir(state_path, last))
-        else:
-            cells = batch_df.groupBy(dom.alias("domain")).agg(
+        merged = _merge_state(
+            batch_df.sparkSession, state_path, batch_id, ["domain"],
+            lambda: batch_df.groupBy(dom.alias("domain")).agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum(F.col(tokens_col).cast("long")).alias("tokens"),
-            )
-            if last is not None:
-                # a CORRUPT committed version must fail the stream here,
-                # never silently reset the counts
-                prev = spark.read.parquet(
-                    _state_version_dir(state_path, last)
-                )
-                merged = (
-                    prev.unionByName(cells)
-                    .groupBy("domain")
-                    .agg(
-                        F.sum("n_docs").alias("n_docs"),
-                        F.sum("tokens").alias("tokens"),
-                    )
-                )
-            else:
-                merged = cells
-            _commit_state(merged, state_path, batch_id)
-            # the pre-commit plan reads the (now pruned) previous
-            # version — report from the committed files instead
-            merged = spark.read.parquet(
-                _state_version_dir(state_path, batch_id)
-            )
+            ),
+        )
         if reports is not None:
             over = (
                 merged.where(
@@ -1570,14 +1537,7 @@ def domain_cap_monitor_stream(
                 }
             )
 
-    q = (
-        stream_df.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, monitor, checkpoint)
 
 
 def _part_dir_name(p) -> str:
@@ -1602,25 +1562,6 @@ def _part_dir_name(p) -> str:
 
 _PRUNE_MARKER_PREFIX = "_GRAFT_PRUNED_BELOW_"
 _GC_STAGING_PREFIX = "gc"
-
-
-def _committed_versions(spark: SparkSession, state_path: str) -> list[int]:
-    """Sorted batch ids of every version directory under ``state_path``
-    that carries the protocol's own commit marker."""
-    fs, hpath = _hadoop_fs(spark, state_path)
-    if not fs.exists(hpath):
-        return []
-    jvm = spark._jvm
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            marker = jvm.org.apache.hadoop.fs.Path(
-                st.getPath(), _COMMIT_MARKER
-            )
-            if fs.exists(marker):
-                out.append(int(name[1:]))
-    return sorted(out)
 
 
 def _pruned_below(spark: SparkSession, pdir: str) -> int | None:
@@ -2092,14 +2033,7 @@ def cdc_apply_stream(
             ).unionByName(net_rows)
             _commit_state(new_state, pdir, batch_id, retain_all=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, apply, checkpoint)
 
 
 def ivf_index_stream(
@@ -2221,19 +2155,6 @@ def pq_index_stream(
         _append_batch(coded, f"{index_path}/assignments", batch_id)
 
     return _drain(stream_df, apply, checkpoint)
-
-
-def _drain(stream_df: DataFrame, apply, checkpoint: str):
-    """Run ``apply`` as the ``foreachBatch`` sink over every micro-batch
-    available now, then stop: the runner of the index streams."""
-    q = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def _files_under(spark: SparkSession, path: str):

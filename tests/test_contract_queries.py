@@ -366,6 +366,40 @@ def test_fresh_shared_registry_results_follow_rewritten_files(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
+def test_dsir_and_triangles_follow_rewritten_files_cache_free(spark, tmp_path):
+    """q_dsir_weights and q_triangles persist nothing: each leaves the
+    CacheManager empty, so after documents.parquet is rewritten as a
+    strict subset mid-session q_dsir_weights answers from the new file
+    (equal to its DuckDB oracle over it, different from the first run)
+    instead of a cached bucket table. q_triangles runs no more jobs than
+    the 26 it ran when it persisted three frames."""
+    sf = tmp_path / "sf"
+    _copy_fixtures(SF_SMALL, sf)
+    sf_dir = str(sf)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    dsir = ALL_QUERIES["q_dsir_weights"]
+    first = sorted(map(tuple, dsir(spark, sf_dir).collect()))
+    _drop_ids_mod3(sf / "documents.parquet", "doc_id")
+    sdf = dsir(spark, sf_dir)
+    assert_matches_oracle(sdf, sf_dir, ALL_ORACLES["q_dsir_weights"], "q_dsir_weights")
+    assert sorted(map(tuple, sdf.collect())) != first
+    assert cache.isEmpty()
+
+    sc = spark.sparkContext
+    group = "test_dsir_and_triangles_follow_rewritten_files_cache_free"
+    sc.setJobGroup(group, "q_triangles")
+    try:
+        sdf = ALL_QUERIES["q_triangles"](spark, sf_dir)
+        sdf.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert cache.isEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 26
+    assert_matches_oracle(sdf, sf_dir, ALL_ORACLES["q_triangles"], "q_triangles")
+
+
 def test_logreg_scored_frame_leaves_cache_manager_empty(spark, tmp_path):
     """The shared scored frame behind q_auc is a localCheckpoint, not a
     persist: a (re)built entry never leaves a frame in the

@@ -570,17 +570,40 @@ def test_curation_stream_quarantines_poison_batch(spark, tmp_path):
     drain()
     kept = sorted(r["doc_id"] for r in spark.read.parquet(sink).collect())
     assert kept == [1], f"poison batch must not partially land; got {kept}"
-    q_rows = sorted(r["doc_id"] for r in spark.read.parquet(quarantine).collect())
-    assert q_rows == [10, 11, 12], "raw batch preserved for replay"
+
+    def quarantined():
+        return sorted(
+            r["doc_id"] for r in spark.read.parquet(quarantine).collect()
+        )
+
+    assert quarantined() == [10, 11, 12], "raw batch preserved for replay"
     assert len(reports) == 2 and not reports[1]["ok"]
     assert not reports[1]["report"]["complete:text"]["ok"]
+
+    # replay injection (delete the poison batch's checkpoint commit +
+    # crc, as the drift test does): the replayed batch fails its check
+    # again and rewrites its own quarantine directory — never a second
+    # copy of the batch
+    import os
+
+    commits = sorted(
+        (e for e in os.listdir(f"{ckpt}/commits") if e.isdigit()), key=int
+    )
+    os.remove(f"{ckpt}/commits/{commits[-1]}")
+    crc = f"{ckpt}/commits/.{commits[-1]}.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+    drain()
+    assert len(reports) == 3 and not reports[2]["ok"]
+    assert quarantined() == [10, 11, 12], "replay quarantined the batch twice"
+    assert sorted(r["doc_id"] for r in spark.read.parquet(sink).collect()) == [1]
 
     # batch 3 (after restart): producer fixed -> ingest resumes
     land([(20, other, "en", "src0", len(other))], "b3")
     drain()
     kept = sorted(r["doc_id"] for r in spark.read.parquet(sink).collect())
     assert kept == [1, 20]
-    assert len(reports) == 3 and reports[2]["ok"]
+    assert len(reports) == 4 and reports[3]["ok"]
 
 
 def test_anomaly_stream_matches_batch_and_restarts(spark, tmp_path):
@@ -1032,6 +1055,56 @@ def test_cusum_chart_stream_matches_batch_and_restarts(spark, tmp_path):
         for r in batch.collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_merge_state_sums_commits_and_skips_replays(spark, tmp_path):
+    """The cumulative-state merge of the FDR, count-min and domain-cap
+    monitors, without a stream: a first batch commits its cells, a
+    second sums into the previous version by key (and prunes it), a
+    replayed batch id returns the committed state without building its
+    cells, and a corrupt previous version fails the batch and commits
+    nothing."""
+    import glob
+
+    from alphavantage_etl_spark.streaming.pipeline import (
+        _committed_versions,
+        _merge_state,
+    )
+
+    path = str(tmp_path / "state")
+    built = []
+
+    def cells(rows):
+        def build():
+            built.append(rows)
+            return spark.createDataFrame(rows, "k string, n long, pos long")
+
+        return build
+
+    def merge(batch_id, rows):
+        got = _merge_state(spark, path, batch_id, ["k"], cells(rows))
+        return sorted(map(tuple, got.collect()))
+
+    assert merge(0, [("a", 2, 1), ("b", 1, 0)]) == [("a", 2, 1), ("b", 1, 0)]
+    assert _committed_versions(spark, path) == [0]
+
+    summed = [("a", 5, 1), ("b", 1, 0), ("c", 4, 4)]
+    assert merge(1, [("a", 3, 0), ("c", 4, 4)]) == summed
+    assert _committed_versions(spark, path) == [1]
+    assert len(built) == 2
+
+    # replays of the committed batch and of an older one: no re-merge,
+    # no cells built
+    assert merge(1, [("a", 100, 100)]) == summed
+    assert merge(0, [("a", 100, 100)]) == summed
+    assert len(built) == 2
+
+    for part in glob.glob(f"{path}/v1/*.parquet"):
+        with open(part, "wb") as fh:
+            fh.write(b"not parquet")
+    with pytest.raises(Exception, match="parquet"):
+        merge(2, [("a", 1, 1)])
+    assert _committed_versions(spark, path) == [1]
 
 
 @pytest.mark.slow
