@@ -30,7 +30,10 @@ def new_rows(incoming: DataFrame, existing: DataFrame, key: str) -> DataFrame:
     """Rows of ``incoming`` whose key is absent from ``existing``
     (av_etl.py:79's ``tail(gap)``, made order-independent).
 
-    ``left_anti`` on the deduplicated key projection. The broadcast hint
+    ``left_anti`` on the key projection, not deduplicated: an anti-join
+    keeps an incoming row iff no build-side row matches it, so repeated
+    keys on that side cannot change the result, and a dedup would only
+    add a shuffle stage per append. The broadcast hint
     is SIZE-GATED on the existing side's input-file bytes (the
     contamination probe — conservative: unknown sizes fall through to
     no hint): the reference's sink is a small daily table where the
@@ -40,7 +43,7 @@ def new_rows(incoming: DataFrame, existing: DataFrame, key: str) -> DataFrame:
     small case."""
     from .contamination import _should_broadcast
 
-    keys = existing.select(key).dropDuplicates([key])
+    keys = existing.select(key)
     if _should_broadcast(existing, 64 << 20):
         keys = F.broadcast(keys)
     return incoming.join(keys, key, "left_anti")

@@ -4,8 +4,12 @@ Reproduces av_etl.py's three tasks (get_daily_price, get_daily_exchange_rate,
 calc_load_daily_price_other_ccy; orchestrated by airflow/av_etl_dag.py:57-72)
 as one idempotent, rerunnable pipeline over parquet sink tables:
 
-1. **extract**: build the src frames (daily price/FX bars — the API-fetch
-   analog over fixtures; see plans/views.py).
+1. **extract**: the snapshot's daily price/FX bars (the API-fetch analog
+   over fixtures), built once per snapshot by ``plans.views.snapshot_bars``
+   as two small ``localCheckpoint``-ed frames. The report over the same
+   snapshot (``plans.report.report_frames``) reuses them, as the
+   reference's ``visualize_data`` reads what ``av_etl.py`` extracted; a
+   rewritten snapshot file rebuilds them.
 2. **incremental load**: read the sink's high watermark (av_etl.py:12-19),
    keep only genuinely-new rows via key anti-join (the order-independent
    form of ``tail(gap)``, av_etl.py:79), append. The PK constraint
@@ -16,14 +20,20 @@ as one idempotent, rerunnable pipeline over parquet sink tables:
    same key anti-join then appends only the dates the ``prd_px_fx`` sink
    lacks.
 
+Every sink is read with the schema of the frame appended to it (only
+this module writes the sinks, so that is their stored schema), and no
+read infers a schema from parquet footers. An absent sink is still the
+first run; a corrupt one still raises, when the append computes it.
+
 Unlike the reference (tasks exchange state only through Postgres,
-av_etl_dag.py:21-46), the intermediate frames here are lazy DataFrames in
+av_etl_dag.py:21-46), the intermediate frames here are DataFrames in
 one session — the sink is a durability boundary, not an IPC channel.
 
 Scale: every append is partitioned parquet; the watermark probe is a
 1-row aggregate; the anti-join broadcasts the sink's key projection (one
-row per date). Swap the path for a Delta/Iceberg table URI and ``MERGE
-INTO`` replaces append for exactly-once semantics under concurrent writers.
+row per date, size-gated; see ``operators.incremental.new_rows``). Swap
+the path for a Delta/Iceberg table URI and ``MERGE INTO`` replaces append
+for exactly-once semantics under concurrent writers.
 """
 
 from __future__ import annotations
@@ -35,10 +45,11 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.incremental import new_rows
 from ..sources.catalog import read_path_if_exists
-from .views import convert_bars, fx_bars, px_bars
+from .views import convert_bars, snapshot_bars
 
 T = TypeVar("T")
 
@@ -51,10 +62,12 @@ def _sink_path(sink_dir: str, table: str) -> str:
     return os.path.join(sink_dir, table)
 
 
-def _read_sink(spark: SparkSession, sink_dir: str, table: str) -> DataFrame | None:
+def _read_sink(
+    spark: SparkSession, sink_dir: str, table: str, schema: StructType
+) -> DataFrame | None:
     # IO4 probe: None only for a genuinely-absent sink (first run); corrupt
     # or unreadable sinks raise instead of masquerading as fresh ones
-    return read_path_if_exists(spark, _sink_path(sink_dir, table))
+    return read_path_if_exists(spark, _sink_path(sink_dir, table), schema=schema)
 
 
 def _append_new(
@@ -73,7 +86,7 @@ def _append_new(
     """
     from pyspark.sql import Observation
 
-    existing = _read_sink(spark, sink_dir, table)
+    existing = _read_sink(spark, sink_dir, table, incoming.schema)
     fresh = incoming if existing is None else new_rows(incoming, existing, key)
     obs = Observation()
     fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -97,7 +110,7 @@ def run_etl(
     malformed extract must not publish. One extra aggregate scan per
     table; the reference appends blindly (av_etl.py:30-36).
     """
-    px_f, fx_f = px_bars(spark, sf_dir), fx_bars(spark, sf_dir)
+    px_f, fx_f = snapshot_bars(spark, sf_dir)
     if validate:
         from .quality import Checks, enforce, run_checks
 
@@ -116,7 +129,8 @@ def run_etl(
     # Derived refresh reads the SINK (not the source frames) — same contract
     # as the reference, where prd_ is computed from the loaded src_ tables.
     prd = convert_bars(
-        _read_sink(spark, sink_dir, SRC_PX), _read_sink(spark, sink_dir, SRC_FX)
+        _read_sink(spark, sink_dir, SRC_PX, px_f.schema),
+        _read_sink(spark, sink_dir, SRC_FX, fx_f.schema),
     )
     appended[PRD] = _append_new(spark, sink_dir, PRD, prd, "date")
     return appended

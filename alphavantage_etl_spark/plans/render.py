@@ -17,11 +17,12 @@ per-series tick tinting), followed by single-axis small multiples — twin
 y-scales invite false slope comparison, so the multiples and the table stay
 alongside as the honest reading. The engine boundary is explicit:
 
-- ``plans.report.report_frames`` aggregates the price and FX bars once and
-  materializes each with ``localCheckpoint(eager=True)``: one row per date
-  (dates × symbols once a symbol column exists), reclaimed by the
-  ContextCleaner once the frames are dropped. The three frames it returns
-  are lazy plans over those two bar tables;
+- ``plans.report.report_frames`` takes the snapshot's price and FX bars
+  from ``plans.views.snapshot_bars``, which materializes each once per
+  snapshot with ``localCheckpoint(eager=True)`` (one row per date, dates
+  × symbols once a symbol column exists) and shares them with
+  ``plans.etl.run_etl``. The three frames it returns are lazy plans over
+  those two bar tables;
 - ``render_report`` is the DRIVER EDGE: it limits each of the three frames
   to ``max_rows`` (the frames are date-DESC, so this is "most recent N" — a
   TakeOrderedAndProject, never a full collect) and calls ``toPandas()``,

@@ -11,17 +11,18 @@ pulls the three frames with ``.toPandas()`` and slices them there, so the
 report costs three driver edges. Any other plotting stack can consume the
 frames the same way (the reference used plotly/datapane).
 
-Scale: ``report_frames`` collects nothing, but it is not lazy. It
-aggregates each bar series once, ``px_bars`` over ``orders`` and
-``fx_bars`` over ``lineitem``, and materializes each with
-``localCheckpoint(eager=True)``: one row per date (dates × symbols once a
-symbol column exists), 2.4–2.5 k rows at sf0.1. The three frames are
-lazy plans over those two materializations, so the report's driver edges
-never re-read the fact tables. The checkpoint blocks are reclaimed by the
-ContextCleaner once the returned frames are dropped (see
-``operators.dedup.free_blocks``); ``persist()`` is not used because
-CacheManager entries would outlive the report. The SMA windows are
-global-order by design (one series); with a symbol column they become
+Scale: ``report_frames`` collects nothing. Its two bar series come from
+``plans.views.snapshot_bars``, the cycle's one extract: ``px_bars`` over
+``orders`` and ``fx_bars`` over ``lineitem``, each materialized with
+``localCheckpoint(eager=True)``, one row per date (dates × symbols once a
+symbol column exists), 2.4–2.5 k rows at sf0.1. After ``plans.etl.run_etl``
+over the same unchanged snapshot the bars are reused and the call runs no
+Spark job; on a miss (another snapshot, or a rewritten file) it builds
+them itself. The three frames are lazy plans over those two
+materializations, so the report's driver edges never re-read the fact
+tables. ``persist()`` is not used because CacheManager entries would
+serve a rewritten snapshot's old rows. The SMA windows are global-order
+by design (one series); with a symbol column they become
 ``partitionBy(symbol)`` and parallelize.
 """
 
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.windows import sma
-from .views import convert_bars, fx_bars, px_bars
+from .views import convert_bars, snapshot_bars
 
 SMA_WINDOWS = (20, 90)  # constants.py:17
 
@@ -55,11 +56,11 @@ def report_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     tables and the comparison pair are sliced from these at the
     consumption edge (``plans.render.render_report``).
 
-    Materializes the price and FX bars eagerly, once per call (see the
-    module docstring); the returned frames read only those two.
+    The price and FX bars are the snapshot's shared materializations
+    (``snapshot_bars``; see the module docstring); the returned frames
+    read only those two.
     """
-    px_b = px_bars(spark, sf_dir).localCheckpoint(eager=True)
-    fx_b = fx_bars(spark, sf_dir).localCheckpoint(eager=True)
+    px_b, fx_b = snapshot_bars(spark, sf_dir)
     return {
         "px": _with_smas(px_b, "close").orderBy(F.desc("date")),
         "fx": _with_smas(fx_b, "close").orderBy(F.desc("date")),

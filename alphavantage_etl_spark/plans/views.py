@@ -14,6 +14,10 @@ the synthetic star schema:
   ``convert_bars`` for every pair of bar frames (fixture bars, the report's
   materialized bars, the ETL sink tables).
 
+``snapshot_bars`` is the weekly cycle's one extract: both bar series of a
+snapshot, built once and shared by ``plans.etl.run_etl`` and
+``plans.report.report_frames`` while the snapshot's files are unchanged.
+
 ``src_px_usd``/``src_usd_fx`` expose the same frames under the verbatim
 Alpha Vantage column names ("1. open" ... "5. volume", av_etl.py:76,121) to
 prove quoted-identifier handling end-to-end (SURVEY.md section 1.3).
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import money_round
 from ..operators.bars import ohlcv_bars
 from ..sources import load
+from ..streaming.pipeline import _fresh_shared
 
 AV_NAMES = {
     "open": "1. open",
@@ -56,6 +61,32 @@ def fx_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="l_discount",
         tiebreak_cols=["l_orderkey", "l_linenumber"],
     ).drop("volume")
+
+
+def snapshot_bars(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(px_bars, fx_bars)`` of one snapshot, each materialized with
+    ``localCheckpoint(eager=True)``: one row per date, 2.4-2.5 k rows at
+    sf0.1, so every consumer reads two small block sets, never the fact
+    tables.
+
+    Built through ``streaming.pipeline._fresh_shared`` with ``sf_dir`` as
+    the path: the ETL's extract and the report over the same snapshot
+    share one build, and a rewritten ``orders``/``lineitem`` file changes
+    the fingerprint, so the next call rebuilds. The key is fixed, not
+    per ``sf_dir``: a call on another snapshot replaces the entry, and
+    only the latest snapshot's blocks stay pinned (the ContextCleaner
+    reclaims the replaced ones). ``persist()`` is not used: Spark's
+    CacheManager would match a re-read of a rewritten path to it.
+    """
+    return _fresh_shared(
+        spark,
+        ("snapshot_bars",),
+        sf_dir,
+        lambda: (
+            px_bars(spark, sf_dir).localCheckpoint(eager=True),
+            fx_bars(spark, sf_dir).localCheckpoint(eager=True),
+        ),
+    )
 
 
 def convert_bars(px: DataFrame, fx: DataFrame) -> DataFrame:

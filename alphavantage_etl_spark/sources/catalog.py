@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
+from pyspark.sql.types import StructType
 
 from .jdbc import jdbc_reader
 
@@ -32,7 +33,10 @@ def table_exists(spark: SparkSession, name: str) -> bool:
 
 
 def read_path_if_exists(
-    spark: SparkSession, path: str, format: str = "parquet"
+    spark: SparkSession,
+    path: str,
+    format: str = "parquet",
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Path-table probe-and-read: the frame if the path resolves, ``None``
     if it does not exist yet (first run). Any OTHER read failure raises.
@@ -41,9 +45,14 @@ def read_path_if_exists(
     unresolvable" class; IO-level errors (corrupt footer, permission
     denied) surface as different exception types and propagate, so callers
     can never mistake a broken sink for an absent one.
+
+    A caller that knows the stored ``schema`` (a sink it writes itself)
+    passes it: the read then infers nothing, which for parquet saves the
+    footer-reading Spark job, and a corrupt file raises when the frame is
+    first computed instead of here.
     """
     try:
-        return spark.read.format(format).load(path)
+        return spark.read.load(path, format=format, schema=schema)
     except AnalysisException:
         return None
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import tempfile
 from decimal import Decimal
 
 import duckdb
@@ -22,13 +23,19 @@ TABLES = [
 
 
 def duck_run(sf_dir: str, sql: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
-    cur = con.execute(sql)
-    cols = [d[0] for d in cur.description]
-    rows = cur.fetchall()
-    con.close()
+    # DuckDB spills to ``.tmp/`` under the working directory by default;
+    # spill into a per-call directory under the system temp dir instead,
+    # removed when the call returns or raises.
+    with tempfile.TemporaryDirectory(prefix="duck_oracle_") as spill:
+        con = duckdb.connect(config={"temp_directory": spill})
+        try:
+            for t in TABLES:
+                con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
+            cur = con.execute(sql)
+            cols = [d[0] for d in cur.description]
+            rows = cur.fetchall()
+        finally:
+            con.close()
     return cols, rows
 
 

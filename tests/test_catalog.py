@@ -52,6 +52,24 @@ def test_path_probe_propagates_corruption(spark, tmp_path):
     assert exc_info.value is not None
 
 
+def test_path_probe_with_a_given_schema(spark, tmp_path):
+    # A sink read with its known schema infers nothing, and keeps both
+    # contracts: absent is None, corrupt raises (when computed).
+    schema = spark.range(1).schema
+    assert read_path_if_exists(spark, str(tmp_path / "never"), schema=schema) is None
+
+    present = str(tmp_path / "written")
+    spark.range(5).write.parquet(present)
+    df = read_path_if_exists(spark, present, schema=schema)
+    assert df.columns == ["id"] and df.count() == 5
+
+    broken = tmp_path / "broken"
+    broken.mkdir()
+    (broken / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    with pytest.raises(Exception):
+        read_path_if_exists(spark, str(broken), schema=schema).count()
+
+
 def test_information_schema_probe_is_portable_sql():
     q = information_schema_probe("src_px_usd")
     assert q == (

@@ -142,6 +142,19 @@ def test_no_hugeint_oracle_columns():
     )
 
 
+def test_oracle_spills_outside_the_working_directory():
+    """duck_run points DuckDB's spill at a per-call directory under the
+    system temp dir and removes it when the call ends, so a heavy compare
+    leaves no ``.tmp/`` under the working directory."""
+    import tempfile
+
+    from .oracle import duck_run
+
+    _, [(spill,)] = duck_run(SF_SMALL, "SELECT current_setting('temp_directory')")
+    assert os.path.dirname(spill) == tempfile.gettempdir()
+    assert not os.path.exists(spill)
+
+
 @pytest.mark.parametrize("name", ORACLE_BACKED)
 def test_oracle_match(spark, name):
     sdf = ALL_QUERIES[name](spark, SF_ORACLE)

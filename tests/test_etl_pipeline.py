@@ -23,12 +23,12 @@ GOLDEN_PRD = """
 WITH px AS (
   SELECT CAST(o_orderdate AS DATE) AS date,
          arg_max(o_totalprice, o_orderkey) AS close_price_usd
-  FROM '{sf}/orders.parquet' GROUP BY 1
+  FROM '{orders}' GROUP BY 1
 ),
 fx AS (
   SELECT CAST(l_shipdate AS DATE) AS date,
          arg_max(l_discount, l_orderkey * 10 + l_linenumber) AS close_rate
-  FROM '{sf}/lineitem.parquet' GROUP BY 1
+  FROM '{lineitem}' GROUP BY 1
 )
 SELECT px.date, close_price_usd, close_rate,
        round_even(close_price_usd * close_rate, 2) AS close_price_fx
@@ -41,17 +41,18 @@ def sink(tmp_path_factory):
     return str(tmp_path_factory.mktemp("etl_sink"))
 
 
-def test_first_run_loads_everything(spark, sink):
-    appended = run_etl(spark, SF_SMALL, sink)
-    assert appended[SRC_PX] > 0 and appended[SRC_FX] > 0 and appended[PRD] > 0
-
+def _assert_prd_is_golden(spark, sink: str, orders: str, lineitem: str) -> None:
+    """The ``prd_px_fx`` sink equals the DuckDB join of the full price
+    and FX histories read from the ``orders``/``lineitem`` parquet paths."""
     got = {
         r["date"]: (r["close_price_usd"], r["close_rate"], r["close_price_fx"])
         for r in spark.read.parquet(f"{sink}/{PRD}").collect()
     }
     want = {
         r[0]: (r[1], r[2], r[3])
-        for r in duckdb.sql(GOLDEN_PRD.format(sf=SF_SMALL)).fetchall()
+        for r in duckdb.sql(
+            GOLDEN_PRD.format(orders=orders, lineitem=lineitem)
+        ).fetchall()
     }
     assert set(got) == set(want)
     for d in want:
@@ -59,6 +60,14 @@ def test_first_run_loads_everything(spark, sink):
         # money_round is numpy-parity (scaled rint); DuckDB round_even agrees
         # on cents ties — pinned more precisely in test_semantics.py
         assert got[d][2] == pytest.approx(want[d][2], abs=0.011)
+
+
+def test_first_run_loads_everything(spark, sink):
+    appended = run_etl(spark, SF_SMALL, sink)
+    assert appended[SRC_PX] > 0 and appended[SRC_FX] > 0 and appended[PRD] > 0
+    _assert_prd_is_golden(
+        spark, sink, f"{SF_SMALL}/orders.parquet", f"{SF_SMALL}/lineitem.parquet"
+    )
 
 
 def test_rerun_is_idempotent(spark, sink):
@@ -96,6 +105,79 @@ def test_incremental_appends_only_new_dates(spark, sink, tmp_path):
     assert (
         spark.read.parquet(f"{sink3}/{SRC_PX}").count() == full.count()
     ), "sink must converge to full history with no duplicates"
+
+
+def _staggered_snapshots(root, cutoffs: dict[str, list[str]]) -> list[str]:
+    """Growing snapshots of the fixture's orders and lineitem. Each table
+    is split by its own date column at its cutoffs into date-ordered part
+    files, written once (the last part holds the rest); snapshot ``k`` is
+    a directory of hard links to parts ``0..k`` of both tables."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    date_col = {"orders": "o_orderdate", "lineitem": "l_shipdate"}
+    parts = root / "parts"
+    parts.mkdir()
+    for name, cuts in cutoffs.items():
+        t = pq.read_table(f"{SF_SMALL}/{name}.parquet")
+        day = t[date_col[name]].to_numpy().astype("datetime64[D]")
+        k = np.searchsorted(np.array(cuts, dtype="datetime64[D]"), day, side="left")
+        for i in range(len(cuts) + 1):
+            pq.write_table(t.filter(pa.array(k == i)), parts / f"{name}-{i}.parquet")
+    snaps = []
+    for i in range(len(next(iter(cutoffs.values()))) + 1):
+        snap = root / f"snap-{i}"
+        for name in cutoffs:
+            (snap / f"{name}.parquet").mkdir(parents=True)
+            for j in range(i + 1):
+                os.link(
+                    parts / f"{name}-{j}.parquet",
+                    snap / f"{name}.parquet" / f"part-{j}.parquet",
+                )
+        snaps.append(str(snap))
+    return snaps
+
+
+def test_derived_refresh_exact_when_price_and_fx_dates_are_staggered(
+    spark, tmp_path
+):
+    """Price and FX dates of the same days arrive in different cycles:
+    FX lags price by ~60 days in the first cycle and leads it by ~60 in
+    the second. prd_px_fx must gain each date in the cycle where its
+    second series arrives, so after every cycle it equals the DuckDB join
+    of the snapshot's two full histories; a join of only the newly
+    appended rows would miss the late pairs."""
+    snaps = _staggered_snapshots(
+        tmp_path,
+        {
+            "orders": ["1997-01-01", "1999-01-01"],
+            "lineitem": ["1996-11-01", "1999-03-01"],
+        },
+    )
+    sink = str(tmp_path / "sink")
+
+    def dates(table):
+        return {r[0] for r in spark.read.parquet(f"{sink}/{table}").collect()}
+
+    late = []
+    px_before, prd_before = set(), set()
+    for snap in snaps:
+        run_etl(spark, snap, sink)
+        _assert_prd_is_golden(
+            spark,
+            sink,
+            f"{snap}/orders.parquet/*.parquet",
+            f"{snap}/lineitem.parquet/*.parquet",
+        )
+        late.append(len((dates(PRD) - prd_before) & px_before))
+        px_before, prd_before = dates(SRC_PX), dates(PRD)
+    # the second cycle pairs prices loaded a cycle earlier with FX dates
+    # that arrive only now
+    assert late[0] == 0 and late[1] > 0
+    assert run_etl(spark, snaps[-1], sink) == {SRC_PX: 0, SRC_FX: 0, PRD: 0}
 
 
 # --- ST3: retry policy (av_etl.py:138's @retry(Exception, tries=5, delay=1))

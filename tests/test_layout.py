@@ -336,3 +336,19 @@ def test_new_rows_broadcast_gate(spark):
         assert "BroadcastHashJoin" not in plan2, plan2  # no forced hint
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_new_rows_build_side_needs_no_dedup(spark):
+    """A key repeated on the existing side cannot change a left_anti
+    result: new_rows over a sink holding every key twice returns exactly
+    the incoming rows whose key is absent, and its plan aggregates
+    nothing (no dedup stage on the build side)."""
+    from alphavantage_etl_spark.operators.incremental import new_rows
+
+    incoming = load(spark, SF_SMALL, "orders").select("o_orderkey")
+    once = incoming.where(F.col("o_orderkey") % 3 != 0)
+    fresh = new_rows(incoming, once.unionByName(once), "o_orderkey")
+    assert "Aggregate" not in _plan(fresh)
+    got = sorted(r[0] for r in fresh.collect())
+    want = sorted(r[0] for r in incoming.collect() if r[0] % 3 == 0)
+    assert got == want and len(got) > 0

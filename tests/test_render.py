@@ -164,31 +164,92 @@ def test_materialized_report_equals_lazy_definition(spark):
     assert render_report(report_frames(spark, SF_SMALL)) == lazy
 
 
-def test_report_job_counts(spark):
-    """One report runs a fixed number of Spark jobs: report_frames runs
-    the two bar materializations (plus the source probes), render_report
-    only its three driver edges over them. Seven edges (the data tables
-    and the comparison pair pulled from Spark) ran 13 render jobs; edges
-    that re-aggregated the fact tables would run 23."""
+def _snapshot(sf_dir, dst):
+    """A snapshot directory holding copies of the bar inputs of ``sf_dir``."""
+    import shutil
+
+    dst.mkdir()
+    for name in ("orders.parquet", "lineitem.parquet"):
+        shutil.copyfile(os.path.join(sf_dir, name), dst / name)
+    return str(dst)
+
+
+def _jobs(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
     sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
+def test_report_job_counts(spark, tmp_path):
+    """A weekly cycle runs a fixed number of Spark jobs. The snapshot's
+    bars are built once (``snapshot_bars``): report_frames after run_etl
+    on the same snapshot runs none, and on a miss it runs the two bar
+    materializations itself (plus the source probes). render_report runs
+    only its three driver edges over them. A warm run_etl (a snapshot
+    not yet seen, over an existing sink) runs at most 13 jobs: the bar
+    build, three anti-join appends and no sink schema inference."""
+    from alphavantage_etl_spark.plans.etl import run_etl
+
+    other = _snapshot(SF_SMALL, tmp_path / "other")
+    sink = str(tmp_path / "sink")
     render_report(report_frames(spark, SF_SMALL))  # warm-up, no group
-    frames, n_frames = jobs(
-        "test_report_job_counts:frames", lambda: report_frames(spark, SF_SMALL)
+    report_frames(spark, other)  # another snapshot replaces the shared bars
+    frames, n_miss = _jobs(
+        spark, "test_report_job_counts:miss", lambda: report_frames(spark, SF_SMALL)
     )
-    _, n_render = jobs(
-        "test_report_job_counts:render", lambda: render_report(frames)
+    _, n_render = _jobs(
+        spark, "test_report_job_counts:render", lambda: render_report(frames)
     )
-    assert (n_frames, n_render) == (6, 7)
+    assert (n_miss, n_render) == (6, 7)
+
+    run_etl(spark, other, sink)
+    appended, n_etl = _jobs(
+        spark, "test_report_job_counts:etl", lambda: run_etl(spark, SF_SMALL, sink)
+    )
+    assert sum(appended.values()) == 0 and n_etl <= 13
+    _, n_hit = _jobs(
+        spark, "test_report_job_counts:hit", lambda: report_frames(spark, SF_SMALL)
+    )
+    assert n_hit == 0
+
+
+def test_shared_bars_follow_a_rewritten_snapshot(spark, tmp_path):
+    """The bars run_etl builds are keyed on the snapshot's content: after
+    orders.parquet is rewritten under the same path mid-session,
+    report_frames after run_etl renders exactly the document of the lazy
+    definition over the new file, not the one over the old."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from alphavantage_etl_spark.plans.etl import run_etl
+
+    def digest(frames):  # a failing compare of two documents stays cheap
+        return hashlib.sha256(render_report(frames).encode()).hexdigest()
+
+    snap = _snapshot(SF_SMALL, tmp_path / "snap")
+    sink = str(tmp_path / "sink")
+    run_etl(spark, snap, sink)
+    before = digest(report_frames(spark, snap))
+    assert before == digest(_lazy_frames(spark, snap))
+
+    orders = os.path.join(snap, "orders.parquet")
+    t = pq.read_table(orders)
+    keep = pa.array([k % 3 != 0 for k in t["o_orderkey"].to_pylist()])
+    pq.write_table(t.filter(keep), f"{orders}.tmp")
+    os.replace(f"{orders}.tmp", orders)
+
+    run_etl(spark, snap, sink)
+    after = digest(report_frames(spark, snap))
+    assert after == digest(_lazy_frames(spark, snap))
+    assert after != before
 
 
 def test_report_data_tables_are_spark_column_slices(spark):
