@@ -203,7 +203,9 @@ def mutual_information(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     (map-side combine collapses to <= |X|*|Y| rows per task); marginals
     and N derive from the GRID, not the corpus (two tiny aggs + AQE
     broadcast joins). Everything downstream of the grid is
-    cardinality-bounded regardless of corpus size.
+    cardinality-bounded regardless of corpus size. The grid's four
+    readers share its one aggregation exchange (exchange reuse), so
+    nothing is cached.
     """
     q = 12
     quant = F.lit(10.0**q)
@@ -219,7 +221,6 @@ def mutual_information(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         df.select(x, y)
         .groupBy("__x", "__y")
         .agg(F.count(F.lit(1)).alias("__nxy"))
-        .persist()  # grid-bounded state; read by 4 downstream aggs
     )
     gx = grid.groupBy("__x").agg(F.sum("__nxy").alias("__nx"))
     gy = grid.groupBy("__y").agg(F.sum("__nxy").alias("__ny"))

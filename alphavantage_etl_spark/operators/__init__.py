@@ -10,7 +10,6 @@ from .dedup import (
     minhash_signatures,
     minhash_verified_near_dups,
     ngram_jaccard_pairs,
-    release,
 )
 from .similarity import (
     cosine_topk,
@@ -56,7 +55,6 @@ __all__ = [
     "minhash_signatures",
     "minhash_verified_near_dups",
     "ngram_jaccard_pairs",
-    "release",
     "cosine_topk",
     "embedding_near_dups",
     "label_centroids",

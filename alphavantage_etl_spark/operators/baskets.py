@@ -39,7 +39,6 @@ def pair_lift(
     min_support: int = 3,
     k: int = 20,
     max_basket: int | None = 1000,
-    handles: list | None = None,
 ) -> DataFrame:
     """(item_a, item_b, n_pair, lift) — top-``k`` item pairs by lift
     (ties: item ids), among pairs co-occurring in >= ``min_support``
@@ -56,10 +55,9 @@ def pair_lift(
     # exchange (a subset-key partitioning satisfies clustering on the
     # full grouping set), so only `supp` (item-keyed) and the pair
     # aggregation shuffle at all — and those carry map-side-combined
-    # partials, not rows. persist() caches the deduped (b,i) pairs
-    # once; partition count comes from spark.sql.shuffle.partitions /
-    # AQE, no local constants. Values unchanged: identical aggregates,
-    # identical join semantics.
+    # partials, not rows. Partition count comes from
+    # spark.sql.shuffle.partitions / AQE, no local constants. Values
+    # unchanged: identical aggregates, identical join semantics.
     # r15 refinement (guide §2.4/§5): the r14 form persisted the
     # UNFILTERED (b,i) frame and applied max_basket as a separate sizes
     # aggregate + semi-join — a subtree that hung BELOW the cache, so
@@ -67,11 +65,13 @@ def pair_lift(
     # the join against the cache (measured: 26 AQE stage jobs, ~20 of
     # them 32-task cache re-scans). The basket size is a window count
     # over the SAME HashPartitioning(__b) the repartition already
-    # established (no new exchange, one within-partition sort), and the
-    # persist moves ABOVE the filter so consumers share the final frame:
-    # one cache build, four direct cache reads. Values unchanged — the
-    # window count over the deduped (b,i) rows IS the sizes aggregate,
-    # and the filter drops the identical baskets.
+    # established (no new exchange, one within-partition sort). Values
+    # unchanged — the window count over the deduped (b,i) rows IS the
+    # sizes aggregate, and the filter drops the identical baskets.
+    # Nothing is cached: the four consumers read the one repartition
+    # exchange (exchange reuse), which measured 10 jobs against 16 for
+    # the persisted form (sf0.01, 4 cores) and serves a rewritten
+    # lineitem file afresh.
     items = (
         df.select(
             F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
@@ -87,9 +87,6 @@ def pair_lift(
             .where(F.col("__sz") <= max_basket)
             .drop("__sz")
         )
-    items = items.persist()
-    if handles is not None:
-        handles.append(items)
     n_b = items.select("__b").distinct().agg(
         F.count(F.lit(1)).alias("__n")
     )

@@ -135,11 +135,9 @@ def _learn(docs: DataFrame, text_col: str, k: int):
             break
         x, y, c = best[0]["x"], best[0]["y"], best[0]["c"]
         merges.append((r, x, y, x + y, c))
-        prev = state
         state = state.select(
             "word", "freq", _merge_fold(x, y).alias("toks")
         ).localCheckpoint(eager=True)
-        prev.unpersist()
     return merges, state
 
 
@@ -150,7 +148,7 @@ def bpe_learn(docs: DataFrame, text_col: str, k: int = 8) -> DataFrame:
     pairs. The table IS the tokenizer model — apply it with
     :func:`bpe_segment_vocab` + a broadcast join.
     """
-    merges, state = _learn(docs, text_col, k)
+    merges, _ = _learn(docs, text_col, k)
     spark = docs.sparkSession
     # JVM inline table when the learned tokens allow it (r14): a
     # pickled-RDD result frame pays a Python worker per action. Tokens
@@ -168,7 +166,6 @@ def bpe_learn(docs: DataFrame, text_col: str, k: int = 8) -> DataFrame:
             "merge_rank long, lhs string, rhs string, merged string, "
             "pair_count long",
         )
-    state.unpersist()
     return out
 
 

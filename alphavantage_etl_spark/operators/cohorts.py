@@ -428,8 +428,6 @@ def markov_attribution(
     transition grid — model state, not data. Driver holds nothing but
     control flow.
     """
-    from .dedup import free_blocks
-
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     START, CONV, NULL = "(start)", "(conv)", "(null)"
@@ -570,9 +568,7 @@ def markov_attribution(
     # oracle-re-proved hash-exact at 3 SFs. The grid count is one cheap
     # action over the checkpoint blocks just materialized.
     if grid.count() <= _INPLAN_GRID_ROWS:
-        out = _markov_power_inplan(grid, iters, START, CONV, NULL)
-        free_blocks(grid)
-        return out
+        return _markov_power_inplan(grid, iters, START, CONV, NULL)
     # Large-model fallback: the r14 DataFrame join loop, checkpointed
     # every _MARKOV_CKPT_EVERY iterations (A/B'd in r14: per-iteration
     # checkpoints 8.2 s / 162 jobs, fully-lazy 16-deep join plan 11.7 s
@@ -625,7 +621,7 @@ def markov_attribution(
     base = start_p.where(F.col("rm") == "-").select(
         F.col("sp").alias("base_p")
     )
-    out = (
+    return (
         start_p.where(F.col("rm") != "-")
         .crossJoin(F.broadcast(base))
         .select(
@@ -640,8 +636,6 @@ def markov_attribution(
             ).alias("removal_effect"),
         )
     )
-    free_blocks(grid)
-    return out
 
 
 def active_users(

@@ -103,7 +103,6 @@ def ngram_contamination(
     threshold: float = 0.5,
     broadcast_bench: bool | None = None,
     broadcast_max_bytes: int = 64 << 20,
-    handles: list | None = None,
 ) -> DataFrame:
     """(corpus id, benchmark id, overlap) for every contaminated pair.
 
@@ -151,17 +150,18 @@ def ngram_contamination(
     # warm / 5.2 s cold at sf0.1, the query's dominant job). The bench
     # gram ARRAYS (pre-explode, one row per bench doc — the compact
     # form) are now built once in parallel (_grams spread_scans), kept
-    # cached, and the exact gram count read from the cache decides the
-    # join strategy; the join side explodes from the same cache, so the
-    # bench text column is scanned exactly once per run. Join strategy
-    # only — results unchanged. The cached frame is released via
-    # ``handles`` (operators.dedup.release convention) or at
-    # clearCache; it is bench-suite-sized (pre-explode), vanishing vs
-    # the corpus at 100 TB.
-    bench_g = _grams(benchmark, text_col, id_col, "bench_id", k).persist()
-    if handles is not None:
-        handles.append(bench_g)
+    # checkpointed, and the exact gram count read from the checkpoint
+    # decides the join strategy; the join side explodes from the same
+    # blocks, so the bench text column is scanned exactly once per run.
+    # Join strategy only — results unchanged. A checkpoint, not a
+    # persist: the CacheManager would match a later read of a rewritten
+    # benchmark file to a cached frame and serve its old grams, while
+    # checkpoint blocks are freed once the frame is garbage-collected.
+    # The frame is bench-suite-sized (pre-explode), vanishing vs the
+    # corpus at 100 TB.
+    bench_g = _grams(benchmark, text_col, id_col, "bench_id", k)
     if broadcast_bench is None:
+        bench_g = bench_g.localCheckpoint(eager=True)
         n_grams = bench_g.agg(F.sum(F.size("__g"))).collect()[0][0]
         broadcast_bench = (
             n_grams is not None

@@ -12,45 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def free_blocks(df: DataFrame) -> None:
-    """Release a frame's cached blocks via public API only.
-
-    For ``persist()``'d frames ``Dataset.unpersist()`` frees the blocks
-    immediately through the CacheManager. For ``localCheckpoint()``'d
-    frames the blocks belong to the internal RDD behind the LogicalRDD
-    plan node, which no public surface reaches — those blocks are
-    reclaimed by the ContextCleaner once the last reference to the frame
-    is dropped (GC-delayed, and accepted: an earlier revision reached the
-    RDD through ``_jdf.queryExecution()`` for eager release, but that is
-    a Spark-private surface and the maintenance hazard outweighs the
-    benefit). The delay is bounded in practice: checkpoint blocks are
-    MEMORY_AND_DESERIALIZED with disk overflow, the frames checkpointed by
-    the iterative operators (CC labels, edge lists, logreg weights) are
-    pair-incident-node-sized — vanishing vs the corpus — and the driver's
-    periodic GC backstops a quiet JVM (``session.get_spark`` lowers
-    ``spark.cleaner.periodicGC.interval`` to 5min for exactly this;
-    sessions built elsewhere should do the same for iterative
-    workloads). Callers must drop their own references after calling this so the
-    cleaner can act (the iterative loops rebind per sweep, which does).
-    """
-    df.unpersist()
-
-
-def release(handles: list[DataFrame]) -> None:
-    """Release every cached intermediate collected via a ``handles`` list
-    (persist()'d or localCheckpoint()'d — see :func:`free_blocks`).
-
-    The near-dup operators persist small intermediates (signatures,
-    candidate pairs) that must stay cached until the CALLER's final action
-    — the operators return lazy plans, so they cannot unpersist themselves.
-    Pass ``handles=[]`` to collect the cached frames, run the final action,
-    then ``release(handles)``; long-lived sessions that skip this keep the
-    caches until ``spark.catalog.clearCache()`` (the pre-round-2 behavior).
-    """
-    for h in handles:
-        free_blocks(h)
-
-
 def dedup_exact(df: DataFrame, on: list[str], id_col: str) -> DataFrame:
     """Keep one deterministic representative (min id) per key group.
 
@@ -138,7 +99,6 @@ def minhash_verified_near_dups(
     candidate_threshold: float = 0.2,
     jaccard_threshold: float = 0.4,
     max_bucket_size: int | None = 10_000,
-    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The 100 TB near-dup path: MinHash-LSH candidate generation followed
     by EXACT Jaccard verification of candidates only.
@@ -150,19 +110,20 @@ def minhash_verified_near_dups(
     its two (hashed) shingle sets. Recall is tuned with (bands, rows/band,
     candidate_threshold) without changing the plan shape;
     ``max_bucket_size`` bounds the worst-case candidate quadratic (see
-    ``minhash_near_dups``). If ``handles`` is a list, cached intermediates
-    are appended for the caller to ``release()`` after its final action.
+    ``minhash_near_dups``). The candidate list feeds both the semi-join
+    and the pair join, and no exchange sits above it for the two to
+    share, so it is checkpointed once (left lazy, the final plan re-ran
+    the band self-join per consumer: 18 jobs against 15 and ~35 % more
+    CPU at sf0.01). A checkpoint, never a persist: the CacheManager
+    would match a later read of a rewritten corpus to cached pairs.
 
     Output: (id_a, id_b, jaccard) with jaccard >= jaccard_threshold.
     """
     cand = minhash_near_dups(
         df, text_col, id_col, shingle_k, num_hashes, bands,
         jaccard_threshold=candidate_threshold,
-        max_bucket_size=max_bucket_size, handles=handles,
-    ).select("id_a", "id_b").persist()
-    cand.count()  # eager: the pair list feeds two joins below — reuse, not recompute
-    if handles is not None:
-        handles.append(cand)
+        max_bucket_size=max_bucket_size,
+    ).select("id_a", "id_b").localCheckpoint(eager=True)
 
     # Exact shingle sets only for documents that appear in a candidate pair
     # (semi-join): at scale candidates are a vanishing fraction of the
@@ -232,9 +193,7 @@ def minhash_near_dups(
     num_hashes: int = 32,
     bands: int = 8,
     jaccard_threshold: float = 0.5,
-    materialize_signatures: bool = True,
     max_bucket_size: int | None = 10_000,
-    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
 
@@ -252,13 +211,12 @@ def minhash_near_dups(
     |D|^2 comparison never materializes. For a 100 TB corpus raise bands
     for recall or shingle_k for precision; the plan shape is unchanged.
 
-    ``materialize_signatures`` persists the signature table before the
-    band self-join — Spark cannot CSE the two sides of a self-join, so the
-    lazy form shingles+hashes the corpus TWICE. Signatures are ~1000x
-    smaller than the documents (num_hashes longs per doc); at 100 TB the
-    production form writes them to a table once and joins from there.
-    If ``handles`` is a list, the persisted signature frame is appended for
-    the caller to ``release()`` after its final action.
+    The signature table feeds both sides of the band self-join and the
+    hot-bucket count; all three read one signature exchange (exchange
+    reuse), so the corpus is shingled once per action without a cache.
+    Signatures are ~1000x smaller than the documents (num_hashes longs
+    per doc); at 100 TB the production form writes them to a table once
+    and joins from there.
 
     ``max_bucket_size`` drops band buckets holding more than that many
     documents BEFORE the self-join: a bucket of B members contributes
@@ -275,12 +233,6 @@ def minhash_near_dups(
     assert rows_per_band * bands == num_hashes
 
     sig = minhash_signatures(df, text_col, id_col, shingle_k, num_hashes)
-    if materialize_signatures:
-        sig = sig.persist()
-        sig.count()  # eager: populate before the self-join forks the plan
-        if handles is not None:
-            handles.append(sig)
-
     banded = _band_buckets(sig, bands, rows_per_band)
     banded = _drop_hot_buckets(banded, max_bucket_size)
     return _pairs_from_banded(banded, num_hashes, jaccard_threshold)
@@ -426,7 +378,6 @@ def minhash_near_dups_incremental(
     bands: int = 8,
     jaccard_threshold: float = 0.5,
     max_bucket_size: int | None = 10_000,
-    handles: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-dup pairs TOUCHING the new batch only: new x corpus and
     new x new candidates, never corpus x corpus (those were resolved when
@@ -444,12 +395,12 @@ def minhash_near_dups_incremental(
     """
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
+    # Checkpointed, not cached: the pairs and the caller's index append
+    # are two actions over new_sigs, and a checkpoint is never matched
+    # by the CacheManager against a later read of a rewritten input.
     new_sigs = minhash_signatures(
         new_docs, text_col, id_col, shingle_k, num_hashes
-    ).persist()
-    new_sigs.count()
-    if handles is not None:
-        handles.append(new_sigs)
+    ).localCheckpoint(eager=True)
 
     all_sigs = corpus_sigs.select(
         "__id", "__sig", F.lit(False).alias("__new")

@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import free_blocks
 
 # Row-count gates of the small-model tiers, never tied to local core
 # counts. Model-sized state (CC's symmetrized edges, pagerank's edges +
@@ -47,7 +46,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    handles: list[DataFrame] | None = None,
     star_fallback: bool = True,
 ) -> DataFrame:
     """(node, cluster) for every node incident to an edge; cluster is the
@@ -55,9 +53,9 @@ def connected_components(
 
     Labels only ever decrease, so convergence is detected by comparing the
     label-sum between sweeps (decimal(38) — no overflow for any 64-bit id
-    population). Each sweep persists the new label frame and unpersists the
-    previous one; pass ``handles=[]`` to also collect the FINAL frame for
-    ``operators.dedup.release`` after the caller's last action.
+    population). Each sweep checkpoints the new label frame; the returned
+    frame is the last sweep's checkpoint, so nothing enters the
+    CacheManager and the blocks are freed once the caller drops it.
 
     If ``max_iter`` sweeps do not converge (graph diameter beyond the
     near-dup regime — e.g. a chain of successive page revisions), the
@@ -131,11 +129,9 @@ def connected_components(
         new_sum = new_labels.agg(
             F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
-        # new_labels is materialized; the prior sweep's checkpoint blocks
-        # are dead. free_blocks unpersists CacheManager state and the
-        # rebind below drops the last reference, letting the
-        # ContextCleaner reclaim the checkpoint blocks (see free_blocks).
-        free_blocks(labels)
+        # new_labels is materialized; the rebind drops the last reference
+        # to the prior sweep's checkpoint, so the ContextCleaner reclaims
+        # its blocks
         labels = new_labels
         if new_sum == prev_sum:  # monotone decreasing -> fixpoint reached
             converged = True
@@ -143,26 +139,17 @@ def connected_components(
         prev_sum = new_sum
 
     if not converged:
-        free_blocks(labels)
         if star_fallback:
-            # e (the checkpointed directed edge list) is still alive here —
-            # the star run re-reads it, then checkpoints its own canonical
-            # copy eagerly, after which e's blocks are dead.
-            out = connected_components_star(e, "a", "b", handles=handles)
-            free_blocks(e)
-            return out
-        free_blocks(e)
+            # the star run re-reads e (the checkpointed directed edge
+            # list), then checkpoints its own canonical copy
+            return connected_components_star(e, "a", "b")
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} sweeps — "
             "graph diameter exceeds the near-dup regime"
         )
-    free_blocks(e)  # edge-list checkpoint blocks are no longer needed
-    # The result frame is already materialized in the cache (the convergence
-    # check was an action over it); returning it cached means downstream
-    # actions never replay the sweep lineage. Collect it via ``handles`` for
-    # operators.dedup.release, or .unpersist() it after the final action.
-    if handles is not None:
-        handles.append(labels)
+    # The result frame is already materialized (the convergence check was
+    # an action over its checkpoint), so downstream actions never replay
+    # the sweep lineage.
     return labels
 
 
@@ -215,7 +202,6 @@ def connected_components_star(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(node, cluster) via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -291,7 +277,6 @@ def connected_components_star(
             .dropDuplicates()
             .localCheckpoint(eager=True)
         )
-        free_blocks(e)
         e = small
         nxt = probe(e)
         if nxt == cur:
@@ -312,14 +297,8 @@ def connected_components_star(
         )
         .dropDuplicates()
     )
-    if handles is not None:
-        handles.append(e)
-    else:
-        # labels still reads e's checkpoint blocks; only release when the
-        # caller is not tracking handles AND we re-materialize first
-        labels = labels.localCheckpoint(eager=True)
-        free_blocks(e)
-    return labels
+    # materialized, so downstream actions never replay the last round
+    return labels.localCheckpoint(eager=True)
 
 
 def _pagerank_inplan(
@@ -527,7 +506,7 @@ def pagerank(
     # core counts; values are identical either way (1e-9-quantized
     # decimal sums, partition-order-immune by the module contract).
     # Every tier ends in an eager materialization that no longer reads
-    # the four persists, so each return releases them first.
+    # the four persists, so each return unpersists them first.
     persisted = (e, nodes, enorm, nw)
     small_model = (
         not has_dangling and n_edges + n_nodes <= _MODEL_LOOP_ROWS
@@ -543,7 +522,7 @@ def pagerank(
                 enorm, nodes_it, n_nodes, iters, damping
             )
             for df in persisted:
-                free_blocks(df)
+                df.unpersist()
             return ranks
     else:
         nodes_it = nodes
@@ -616,7 +595,7 @@ def pagerank(
         # one materialization AFTER the loop, not per iteration
         ranks = ranks.localCheckpoint(eager=True)
     for df in persisted:
-        free_blocks(df)
+        df.unpersist()
     return ranks
 
 
@@ -731,7 +710,7 @@ def label_propagation(
     node ids + one (node, label) partial-aggregated count + one max_by
     argmax — the Pregel shape PageRank uses; per-round frames are
     ``localCheckpoint``'d to kill the iterative lineage, prior rounds'
-    blocks released via :func:`free_blocks` (ContextCleaner reclaim).
+    blocks reclaimed by the ContextCleaner once rebound.
     Labels never propagate FROM unlabeled nodes, so a round's work is
     bounded by the labeled frontier.
     """
@@ -773,9 +752,7 @@ def label_propagation(
             )
             .localCheckpoint(eager=True)
         )
-        free_blocks(labels)
         labels = new_labels
-    free_blocks(e)
     return labels.select(
         F.col("node").alias(id_col), F.col("lab").alias(label_col)
     )

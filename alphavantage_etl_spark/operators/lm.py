@@ -93,17 +93,14 @@ def lm_perplexity_scores(
     shape. Grams absent from the model score with count 0 (the reserved
     smoothing mass).
 
-    Caching note: the self-trained model persists for the session (the
-    vocabulary-bounded table, same class as the near-dup signature
-    persists); callers scoring MANY corpora in one session should train
-    once via `train_char_lm` and pass `model` explicitly, or
-    `spark.catalog.clearCache()` between sweeps.
+    Nothing is cached: the self-trained model feeds the totals and the
+    score join of one plan, and both read its one aggregation exchange
+    (exchange reuse), so the corpus is exploded twice in total (train +
+    score), the TF-IDF discipline. Callers scoring MANY corpora against
+    one reference should train once via `train_char_lm` and pass `model`.
     """
     if model is None:
-        # self-training replays the model lineage for the totals AND the
-        # score join; persisting the VOCAB-sized table keeps the corpus
-        # at two explodes total (train + score), the TF-IDF discipline
-        model = train_char_lm(docs, text_col, n=n, id_col=id_col).persist()
+        model = train_char_lm(docs, text_col, n=n, id_col=id_col)
     totals = model.agg(
         F.sum("cnt").alias("__n"), (F.count(F.lit(1)) + 1).alias("__v")
     )

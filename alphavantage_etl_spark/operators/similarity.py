@@ -3440,13 +3440,10 @@ def kcenter_coreset(
         if not best:
             break  # fewer distinct points than k
         chosen.append((r, int(best[0]["__id"]), float(best[0]["__mind2"])))
-        prev = state
         state = state.select(
             "__id", "__v",
             F.least("__mind2", dist2(list(best[0]["__v"]))).alias("__mind2"),
         ).localCheckpoint(eager=True)
-        prev.unpersist()
-    state.unpersist()
     return inline_rows_df(
         df.sparkSession,
         chosen,

@@ -46,7 +46,6 @@ def curate(
     scrub: bool = False,
     boilerplate_min_doc_frac: float | None = None,
     boilerplate_delim: str = "\n",
-    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The curated corpus: quality-gated, exactly and near deduplicated.
 
@@ -73,10 +72,9 @@ def curate(
       family collapses to a single representative regardless of chain
       shape.
 
-    Pass ``handles=[]`` to collect the near-dup stage's cached
-    intermediates and ``operators.dedup.release(handles)`` them after the
-    final action — long-lived sessions that re-curate repeatedly stay flat
-    on storage.
+    No stage leaves a frame in the CacheManager (the cluster policy's
+    labels are a checkpoint), so a session that re-curates repeatedly
+    stays flat on storage and reads rewritten inputs afresh.
     """
     if resolution not in ("pairwise", "cluster"):
         raise ValueError(f"unknown resolution policy: {resolution!r}")
@@ -111,7 +109,6 @@ def curate(
         exact_unique, text_col, id_col,
         shingle_k=9, bands=16,
         candidate_threshold=0.2, jaccard_threshold=jaccard_threshold,
-        handles=handles,
     )
     if resolution == "cluster":
         from ..operators.graph import (
@@ -129,7 +126,7 @@ def curate(
             "propagation": connected_components,
             "star": connected_components_star,
         }[cc_algorithm]
-        cc = cc_fn(pairs, "id_a", "id_b", handles=handles)
+        cc = cc_fn(pairs, "id_a", "id_b")
         return cluster_representatives(exact_unique, cc, id_col, "q")
 
     quality = exact_unique.select(F.col(id_col).alias("__qid"), F.col("q").alias("__q"))
@@ -174,25 +171,19 @@ def compact_corpus(
             "compact_corpus: out_path must differ from sink_path "
             "(in-place rewrite would corrupt the scan feeding it)"
         )
-    docs = spark.read.parquet(sink_path)
-    handles: list[DataFrame] = []
-    try:
-        from ..operators.dedup import release
-        from ..operators.graph import cluster_representatives, connected_components
+    from ..operators.graph import cluster_representatives, connected_components
 
-        pairs = minhash_verified_near_dups(
-            docs, text_col, id_col,
-            shingle_k=9, bands=16,
-            candidate_threshold=0.2, jaccard_threshold=jaccard_threshold,
-            handles=handles,
-        )
-        cc = connected_components(pairs, "id_a", "id_b", handles=handles)
-        kept = cluster_representatives(
-            with_quality_score(docs, text_col), cc, id_col, "q"
-        ).drop("q")
-        kept.select(*docs.columns).write.mode("overwrite").parquet(out_path)
-    finally:
-        release(handles)
+    docs = spark.read.parquet(sink_path)
+    pairs = minhash_verified_near_dups(
+        docs, text_col, id_col,
+        shingle_k=9, bands=16,
+        candidate_threshold=0.2, jaccard_threshold=jaccard_threshold,
+    )
+    cc = connected_components(pairs, "id_a", "id_b")
+    kept = cluster_representatives(
+        with_quality_score(docs, text_col), cc, id_col, "q"
+    ).drop("q")
+    kept.select(*docs.columns).write.mode("overwrite").parquet(out_path)
     return spark.read.parquet(out_path).count()
 
 
@@ -224,7 +215,6 @@ def curate_to_shards(
     chunk_window: int = 64,
     chunk_stride: int = 48,
     shard_tokens: int = 100_000,
-    handles: list[DataFrame] | None = None,
 ) -> dict:
     """The FULL corpus-to-trainer pipeline as one composition (VERDICT r5
     #7): curate (quality gate + exact + near dedup) -> decontaminate
@@ -235,8 +225,8 @@ def curate_to_shards(
     totals a training job trusts without re-scanning).
 
     Everything through the shard assignment is ONE lazy plan — the only
-    actions are the operators' own bounded probes (minhash candidate
-    persists), the partitioned write, and the shard-count-sized manifest
+    actions are the operators' own bounded probes (the contamination
+    broadcast probe), the partitioned write, and the shard-count-sized manifest
     aggregate. Chunk ids are ``<doc_id>:<chunk_idx>`` strings (content-
     addressed, append-stable); chunk token counts feed pack_bins as the
     shard size, so a shard's ``tokens`` manifest field is the training-
@@ -254,7 +244,6 @@ def curate_to_shards(
         min_chars=min_chars,
         jaccard_threshold=jaccard_threshold,
         resolution=resolution,
-        handles=handles,
     )
     hits = ngram_contamination(
         curated,

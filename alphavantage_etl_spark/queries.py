@@ -1974,9 +1974,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     pairs = embedding_near_dups(emb, threshold=0.35, dim=64)
-    # the loop materialized the labels into cache; the returned plan reads
-    # from that cache (same persist-until-session pattern as the minhash
-    # signature caches — see verify notes)
+    # the loop materialized the labels as a checkpoint; the returned plan
+    # reads its blocks, and nothing is left in the CacheManager
     cc = connected_components(pairs, "id_a", "id_b")
     return cc.select(
         F.col("node").alias("vec_id"), F.col("cluster").alias("cluster_id")

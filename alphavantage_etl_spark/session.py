@@ -49,9 +49,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # localCheckpoint blocks from iterative operators (connected
         # components, pagerank, label propagation, markov attribution,
-        # k-center) are reclaimed by the ContextCleaner only after driver
-        # GC notices the dropped references (operators/dedup.py:
-        # free_blocks). A quiet driver heap can postpone that
+        # k-center) and from the operators' other checkpoints are
+        # reclaimed by the ContextCleaner only after driver GC notices
+        # the dropped references; no public API frees them eagerly
+        # (Dataset.unpersist only drops CacheManager entries, and a
+        # checkpoint has none). A quiet driver heap can postpone that
         # indefinitely; lowering the periodic-GC backstop from the 30min
         # default bounds dead-block accumulation between rounds to ~5min
         # of iterations at negligible GC cost (r5 ADVICE).

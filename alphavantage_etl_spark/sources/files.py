@@ -88,15 +88,17 @@ def quarantine_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a PERMISSIVE read into (clean rows without the corrupt column,
     corrupt rows). The corrupt frame keeps the raw line for repair.
 
-    The parsed frame is cached first: Spark forbids queries that prune down
+    The parse is checkpointed first: Spark forbids queries that prune down
     to ONLY ``_corrupt_record`` over a raw text source (the parser cannot
     know a row is corrupt without parsing the others), and the quarantine
-    count is exactly such a query. For production-scale ingest, land the
-    PERMISSIVE read to parquet once and split from there instead of
-    caching the raw parse."""
+    count is exactly such a query; over the checkpoint it is legal. A
+    checkpoint, not a cache: the CacheManager would match a later read of
+    the rewritten raw file to the cached parse and split its old rows.
+    For production-scale ingest, land the PERMISSIVE read to parquet once
+    and split from there instead of checkpointing the raw parse."""
     if CORRUPT_COL not in df.columns:
         return df, df.limit(0)
-    df = df.cache()
+    df = df.localCheckpoint(eager=True)
     clean = df.where(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
     bad = df.where(df[CORRUPT_COL].isNotNull())
     return clean, bad

@@ -494,7 +494,7 @@ def curation_ingest_stream(
     re-written documents (same text, new doc_id) never land twice — a
     stronger guarantee than id-keyed dedup. ``benchmark`` is re-grammed per
     micro-batch at benchmark-suite size (thousands of docs — broadcast);
-    cache the frame if batches are frequent.
+    ``localCheckpoint`` the frame if batches are frequent.
 
     ``signature_dir`` enables cross-batch NEAR-dup suppression via the
     persistent MinHash signature index
@@ -540,11 +540,7 @@ def curation_ingest_stream(
     """
     from ..functions.text import fingerprint_sha256, with_quality_score
     from ..operators.contamination import ngram_contamination
-    from ..operators.dedup import (
-        dedup_exact,
-        minhash_near_dups_incremental,
-        release,
-    )
+    from ..operators.dedup import dedup_exact, minhash_near_dups_incremental
 
     out_cols = stream_df.columns + ["fp"]
 
@@ -610,10 +606,9 @@ def curation_ingest_stream(
                 corpus_sigs = spark.createDataFrame(
                     [], "__id long, __sig array<bigint>"
                 )
-            handles: list[DataFrame] = []
             pairs, new_sigs = minhash_near_dups_incremental(
                 fresh, corpus_sigs, "text", "doc_id",
-                jaccard_threshold=jaccard_threshold, handles=handles,
+                jaccard_threshold=jaccard_threshold,
             )
             # first-wins: every pair touches >= 1 batch doc (the operator
             # excludes corpus x corpus); drop the batch side of a
@@ -650,16 +645,14 @@ def curation_ingest_stream(
             fresh = fresh.join(drop, "doc_id", "left_anti").localCheckpoint(
                 eager=True
             )
-            handles.append(fresh)
             # index only the survivors: dropped docs must not shadow
-            # future near-dups of the doc that BEAT them. Materialize BEFORE
-            # the sink append — new_sigs' persist() suffers the same
-            # refresh-by-path eviction as fresh (its lineage reads
-            # sink_path via the fingerprint anti-join).
+            # future near-dups of the doc that BEAT them. new_sigs is the
+            # operator's checkpoint, so the sink append cannot re-expose
+            # its lineage (which reads sink_path via the fingerprint
+            # anti-join): the semi-join stays lazy over two checkpoints.
             surv_sigs = new_sigs.join(
                 fresh.select(F.col("doc_id").alias("__id")), "__id", "semi"
-            ).localCheckpoint(eager=True)
-            handles.append(surv_sigs)
+            )
             # pin column order: parquet appends must agree batch-to-batch.
             # Sink first, sigs second: re-delivery after a crash between
             # the two writes is emptied by the fingerprint anti-join, so
@@ -668,7 +661,6 @@ def curation_ingest_stream(
             # the authoritative near-dup pass).
             fresh.select(*out_cols).write.mode("append").parquet(sink_path)
             surv_sigs.write.mode("append").parquet(signature_dir)
-            release(handles)
         else:
             # pin column order: parquet appends must agree batch-to-batch
             fresh.select(*out_cols).write.mode("append").parquet(sink_path)

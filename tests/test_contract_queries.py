@@ -413,6 +413,41 @@ def test_dsir_and_triangles_follow_rewritten_files_cache_free(spark, tmp_path):
     assert_matches_oracle(sdf, sf_dir, ALL_ORACLES["q_triangles"], "q_triangles")
 
 
+@pytest.mark.parametrize(
+    "name,table,id_col",
+    [
+        ("q_dedup_near", "documents", "doc_id"),
+        ("q_basket_lift", "lineitem", "l_orderkey"),
+        ("q_contamination", "documents", "doc_id"),
+        ("q_lm_perplexity", "documents", "doc_id"),
+        ("q_mutual_info", "documents", "doc_id"),
+    ],
+)
+def test_queries_follow_rewritten_input_cache_free(spark, tmp_path, name, table, id_col):
+    """A query run after its input file is rewritten mid-session answers
+    from the new file: equal to its DuckDB oracle over it, or, for the
+    rows-only q_dedup_near, to a re-run after clearCache. No run leaves
+    a frame in the CacheManager, which would match the rewritten path
+    to rows read before the rewrite."""
+    sf = tmp_path / "sf"
+    _copy_fixtures(SF_SMALL, sf)
+    sf_dir = str(sf)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    query = ALL_QUERIES[name]
+    query(spark, sf_dir).collect()
+    assert cache.isEmpty()
+    _drop_ids_mod3(sf / f"{table}.parquet", id_col)
+    sdf = query(spark, sf_dir)
+    if name in ALL_ORACLES:
+        assert_matches_oracle(sdf, sf_dir, ALL_ORACLES[name], name)
+    else:
+        got = sorted(map(tuple, sdf.collect()))
+        spark.catalog.clearCache()
+        assert got == sorted(map(tuple, query(spark, sf_dir).collect()))
+    assert cache.isEmpty()
+
+
 def test_logreg_scored_frame_leaves_cache_manager_empty(spark, tmp_path):
     """The shared scored frame behind q_auc is a localCheckpoint, not a
     persist: a (re)built entry never leaves a frame in the

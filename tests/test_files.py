@@ -70,6 +70,36 @@ def test_corrupt_rows_are_quarantined_not_lost(spark, tmp_path):
     assert "NOT JSON" in bad.collect()[0][CORRUPT_COL]
 
 
+def test_quarantine_follows_a_rewritten_raw_file(spark, tmp_path):
+    """Splitting a raw file that was rewritten mid-session returns the
+    new file's rows, and the split leaves nothing in the CacheManager
+    (which would match the rewritten path to the old parse). A query of
+    the corrupt column alone is legal over the split."""
+    d = tmp_path / "raw"
+    d.mkdir()
+    f = d / "part-000.json"
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def corrupt_lines():
+        clean, bad = quarantine_corrupt(read_jsonl(spark, str(d), DOC_SCHEMA))
+        lines = sorted(r[0] for r in bad.select(CORRUPT_COL).collect())
+        return sorted(r["doc_id"] for r in clean.collect()), lines
+
+    f.write_text(
+        '{"doc_id": 1, "lang": "en", "source": "a", "n_chars": 10}\n'
+        "FIRST BAD\n"
+    )
+    assert corrupt_lines() == ([1], ["FIRST BAD"])
+    f.write_text(
+        '{"doc_id": 2, "lang": "de", "source": "b", "n_chars": 20}\n'
+        "SECOND BAD\n"
+        "THIRD BAD\n"
+    )
+    assert corrupt_lines() == ([2], ["SECOND BAD", "THIRD BAD"])
+    assert cache.isEmpty()
+
+
 def test_failfast_raises_on_corrupt(spark, tmp_path):
     d = tmp_path / "bad"
     d.mkdir()

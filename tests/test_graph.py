@@ -22,7 +22,6 @@ def _edges(spark, pairs):
 
 def _labels(cc):
     rows = {r["node"]: r["cluster"] for r in cc.collect()}
-    cc.unpersist()
     return rows
 
 
@@ -56,7 +55,6 @@ def test_cc_edge_direction_irrelevant(spark):
 def test_cc_empty_edges(spark):
     cc = connected_components(_edges(spark, []))
     assert cc.count() == 0
-    cc.unpersist()
 
 
 def test_cc_max_iter_raises_only_without_fallback(spark):
@@ -68,14 +66,6 @@ def test_cc_max_iter_raises_only_without_fallback(spark):
     assert {r["cluster"] for r in labels} == {0}
 
 
-def test_cc_handles_collects_cache(spark):
-    handles = []
-    cc = connected_components(_edges(spark, [(1, 2)]), handles=handles)
-    assert handles == [cc]
-    for h in handles:
-        h.unpersist()
-
-
 def test_representatives_quality_argmax(spark):
     docs = spark.createDataFrame(
         [(1, 0.2), (2, 0.9), (3, 0.9), (7, 0.1)], "doc_id long, q double"
@@ -85,7 +75,6 @@ def test_representatives_quality_argmax(spark):
     # cluster {1,2,3}: max q = 0.9 shared by 2 and 3 -> smaller id 2 wins;
     # isolated doc 7 survives untouched
     assert sorted(r["doc_id"] for r in kept.collect()) == [2, 7]
-    cc.unpersist()
 
 
 def test_representatives_min_id_without_quality(spark):
@@ -93,21 +82,17 @@ def test_representatives_min_id_without_quality(spark):
     cc = connected_components(_edges(spark, [(5, 4)]))
     kept = cluster_representatives(docs, cc, "doc_id")
     assert sorted(r["doc_id"] for r in kept.collect()) == [4, 9]
-    cc.unpersist()
 
 
 def test_cc_checkpoint_blocks_reclaimable(spark):
-    """free_blocks uses public API only (no _jdf reach-in since r5), so
-    localCheckpoint blocks are ContextCleaner-reclaimed rather than freed
-    eagerly. The invariant that MUST hold is that the operator leaks no
-    strong references: once the caller drops the result (release(handles)
-    + del), a driver GC cycle reclaims every block the CC run created.
-    A leaked reference (e.g. an operator-held cache of a sweep frame)
-    would keep blocks alive forever — that is what this guards."""
+    """No public API frees localCheckpoint blocks eagerly, so they are
+    ContextCleaner-reclaimed. The invariant that MUST hold is that the
+    operator leaks no strong references: once the caller drops the
+    result (del), a driver GC cycle reclaims every block the CC run
+    created. A leaked reference (e.g. an operator-held cache of a sweep
+    frame) would keep blocks alive forever — that is what this guards."""
     import gc
     import time
-
-    from alphavantage_etl_spark.operators.dedup import release
 
     def block_ids():
         return {
@@ -116,14 +101,10 @@ def test_cc_checkpoint_blocks_reclaimable(spark):
         }
 
     before = block_ids()
-    handles = []
-    cc = connected_components(
-        _edges(spark, [(1, 2), (2, 3), (10, 11)]), handles=handles
-    )
+    cc = connected_components(_edges(spark, [(1, 2), (2, 3), (10, 11)]))
     cc.count()
     assert block_ids() - before, "CC should hold checkpoint blocks while alive"
-    release(handles)
-    del cc, handles
+    del cc
     # Drop the py4j proxies, then force a JVM GC so the ContextCleaner's
     # weak-reference queue fires; poll because the cleanup is async.
     gc.collect()

@@ -352,3 +352,55 @@ def test_new_rows_build_side_needs_no_dedup(spark):
     got = sorted(r[0] for r in fresh.collect())
     want = sorted(r[0] for r in incoming.collect() if r[0] % 3 == 0)
     assert got == want and len(got) > 0
+
+
+
+# The only persists an operator may create: ones it unpersists itself
+# before returning. Keyed by (module, enclosing function): call count.
+_RELEASED_PERSISTS = {
+    ("operators/graph.py", "pagerank"): 4,
+    ("operators/classify.py", "train_logreg_hashed"): 1,
+}
+
+
+def test_no_persist_outside_operator_released_sites():
+    """Spark's CacheManager matches a re-read of a rewritten file to a
+    frame persisted before the rewrite, so a persist that outlives its
+    operator serves old rows. Every ``.persist()``/``.cache()`` call in
+    the package must sit in a function that releases it; intermediates
+    otherwise live in one lazy plan or in a ``localCheckpoint``."""
+    import ast
+    import os
+    from collections import Counter
+
+    import alphavantage_etl_spark
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.fn, self.found = rel, "<module>", Counter()
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr in (
+                "persist", "cache"
+            ):
+                self.found[(self.rel, self.fn)] += 1
+            self.generic_visit(node)
+
+    root = os.path.dirname(alphavantage_etl_spark.__file__)
+    found: Counter = Counter()
+    for dirpath, _, files in os.walk(root):
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(dirpath, fname)
+                v = Calls(os.path.relpath(path, root))
+                with open(path) as f:
+                    v.visit(ast.parse(f.read()))
+                found += v.found
+    assert found == Counter(_RELEASED_PERSISTS), (
+        f"persist/cache outside the operator-released sites: {dict(found)}"
+    )

@@ -378,29 +378,24 @@ def test_minhash_fixture_pairs_unchanged_by_default_cap(spark):
     assert with_cap == no_cap, "default cap must not fire on the fixture corpus"
 
 
-# --- X2: cache-handle discipline — intermediates release, results survive ---
+# --- X2: near-dup intermediates never outlive the caller's final action ---
 @pytest.mark.slow
-def test_minhash_handles_release(spark):
-    from alphavantage_etl_spark.operators.dedup import (
-        minhash_verified_near_dups,
-        release,
-    )
+def test_minhash_leaves_cache_manager_empty(spark):
+    from alphavantage_etl_spark.operators.dedup import minhash_verified_near_dups
     from alphavantage_etl_spark.sources import load
 
     from .conftest import SF_SMALL
 
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
     docs = load(spark, SF_SMALL, "documents")
-    handles: list = []
     out = minhash_verified_near_dups(
         docs, "text", "doc_id", shingle_k=9, bands=16,
-        candidate_threshold=0.2, jaccard_threshold=0.4, handles=handles,
+        candidate_threshold=0.2, jaccard_threshold=0.4,
     )
     n = out.count()  # the caller's final action
-    assert len(handles) == 2, "signature + candidate frames must be handed back"
-    assert all(h.storageLevel.useMemory for h in handles)
-    release(handles)
-    assert not any(h.storageLevel.useMemory for h in handles)
-    assert out.count() == n, "result must stay correct after release (recompute)"
+    assert cache.isEmpty(), "no intermediate may stay in the CacheManager"
+    assert out.count() == n, "a recount must give the same result"
 
 
 # --- entry point C: report frames carry the right shapes (data_viz parity) ---
@@ -541,7 +536,6 @@ def test_incremental_minhash_equals_full_rebuild(spark):
         minhash_near_dups,
         minhash_near_dups_incremental,
         minhash_signatures,
-        release,
     )
     from alphavantage_etl_spark.sources import load
 
@@ -558,13 +552,11 @@ def test_incremental_minhash_equals_full_rebuild(spark):
     full_all = pairset(minhash_near_dups(docs, "text", "doc_id", **kw))
     full_corpus = pairset(minhash_near_dups(corpus, "text", "doc_id", **kw))
 
-    handles = []
     corpus_sigs = minhash_signatures(corpus, "text", "doc_id", shingle_k=9)
     inc_pairs, new_sigs = minhash_near_dups_incremental(
-        batch, corpus_sigs, "text", "doc_id", **kw, handles=handles
+        batch, corpus_sigs, "text", "doc_id", **kw
     )
     inc = pairset(inc_pairs)
-    release(handles)
 
     # incremental finds exactly the pairs the full rebuild adds
     assert full_corpus | inc == full_all
